@@ -169,27 +169,27 @@ object MlPipeline {
     * Features with unbounded domains should be bucketed first
     * (ml09's quantile bins are the natural feeder).
     */
-  /** One melted (feature, value, payload…) view of `df`'s feature
-    * columns via `stack` — the r20 optimization round's histogram
-    * fusion (guide §1.2/§2.4): every split-search below used to union
-    * F independent per-feature groupBy subtrees, which is F full
-    * passes over the input and F shuffles per search; melted, ONE pass
-    * and ONE exchange keyed by (feature, value) produce the identical
-    * histogram rows (stack preserves values and nulls verbatim, and
-    * all downstream sums are exact longs, so every candidate row —
-    * and therefore every argmax — is bit-identical). Requires all
-    * feature columns to share one type (every caller passes doubles);
-    * stack would otherwise silently coerce, so fail named instead.
+  /** One melted (__feat, __v, keep…) view of `df`'s feature columns:
+    * ONE pass and ONE exchange keyed by (feature, value) yield every
+    * feature's histogram rows, where a union of F per-feature groupBy
+    * subtrees costs F passes and F shuffles. The melt preserves values
+    * and nulls verbatim and all downstream sums are exact longs, so
+    * every candidate row — and therefore every argmax — is
+    * bit-identical to the per-feature form. Built from typed columns,
+    * an `inline(array(struct(name, value)…))` generator (explode plus
+    * struct expansion), so no column name is parsed as SQL text.
+    * Requires all feature columns to share one type (every caller
+    * passes doubles): the array would otherwise widen them silently,
+    * so fail named instead.
     */
   private def meltFeatures(df: DataFrame, features: Seq[String],
       keep: Seq[String]): DataFrame = {
     val types = features.map(f => df.schema(f).dataType).distinct
     require(types.size == 1,
       s"meltFeatures needs one shared feature type, got $types")
-    df.selectExpr(
-      (s"stack(${features.size}, " +
-        features.map(f => s"'$f', `$f`").mkString(", ") + ") AS (__feat, __v)") +:
-        keep.map(c => s"`$c`"): _*)
+    def ref(c: String) = col("`" + c.replace("`", "``") + "`")
+    df.select(inline(array(features.map(f =>
+        struct(lit(f).as("__feat"), ref(f).as("__v"))): _*)) +: keep.map(ref): _*)
   }
 
   def stumpSplits(df: DataFrame, labelCol: String,

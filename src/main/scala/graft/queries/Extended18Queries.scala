@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -13,6 +13,27 @@ import graft.Tables
 object Extended18Queries {
 
   // ---------------------------------------------------------------- q103
+
+  /** q103's signed log-scale bucket of v, ordered exactly as Spark
+    * sorts v ascending, with a hard bound for any double:
+    * NULL → Long.MinValue, −∞ → −1 010 000,
+    * negatives → −1 000 000 − ⌊8·ln(−v)⌋ ∈ [−1 005 678, −994 044],
+    * ±0 → −500 000, positives → ⌊8·ln v⌋ ∈ [−5 956, 5 678],
+    * +∞ → 10 000, NaN → Long.MaxValue. The infinities take their own
+    * buckets: ⌊8·ln ∞⌋ saturates to Long.MaxValue, which would merge +∞
+    * into the NaN bucket and overflow the negative branch (an ANSI
+    * error) for −∞. Pinned by BoundedWindowSpec.
+    */
+  private[graft] def logBucket(v: Column): Column = {
+    val vd = v.cast("double")
+    when(v.isNull, lit(Long.MinValue))
+      .when(isnan(vd), lit(Long.MaxValue))
+      .when(vd === Double.PositiveInfinity, lit(10000L))
+      .when(vd === Double.NegativeInfinity, lit(-1010000L))
+      .when(vd > 0, floor(log(vd) * 8.0).cast("long"))
+      .when(vd < 0, lit(-1000000L) - floor(log(-vd) * 8.0).cast("long"))
+      .otherwise(lit(-500000L))
+  }
 
   /** RFM segmentation: per customer, recency = days since last order
     * (against the corpus max date — deterministic, no wall clock),
@@ -75,20 +96,11 @@ object Extended18Queries {
         // cum: the within-bucket window partitions by hb, and the only
         // global window left runs over the bucket-TOTALS frame. All
         // sums are longs — exact — so every cum and every q5 is
-        // unchanged. Bucket layout follows Spark's ascending NULL/NaN
-        // order exactly: NULL → Long.MinValue (first), negatives,
-        // zero, positives, NaN → Long.MaxValue (last) — pinned in
-        // BoundedWindowSpec's bucket-order test.
-        val vd = col("v").cast("double")
+        // unchanged (bucket layout: logBucket).
         // materialized: feeds the offsets agg AND the within-bucket
         // window — unstaged, each re-runs the histogram shuffle
         val bucketed = hist.crossJoin(broadcast(tot))
-          .withColumn("hb",
-            when(col("v").isNull, lit(Long.MinValue))
-              .when(isnan(vd), lit(Long.MaxValue))
-              .when(vd > 0, floor(log(vd) * 8.0).cast("long"))
-              .when(vd < 0, lit(-1000000L) - floor(log(-vd) * 8.0).cast("long"))
-              .otherwise(lit(-500000L)))
+          .withColumn("hb", logBucket(col("v")))
           .localCheckpoint()
         val offs = bucketed.groupBy(col("hb")).agg(sum(col("nv")).as("bt"))
           .withColumn("off", coalesce(sum(col("bt")).over(

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.queries.Extended18Queries
 
 /** Pins the cardinality bound behind every unpartitioned
   * `Window.orderBy` the library still runs (r20, VERDICT r19 #5: the
@@ -74,13 +75,14 @@ class BoundedWindowSpec extends SparkSpec {
   test("q103 two-level monetary cum equals the single global window, adversarial values") {
     // the exact shape score() runs for the unbounded metric, replayed
     // against the single-window formulation over values that cross
-    // every bucket branch: NULL, NaN, negatives, zero, subnormal-ish,
-    // ties, and wide magnitude spread
+    // every bucket branch: NULL, NaN, ±Infinity, negatives, zero,
+    // subnormal-ish, ties, and wide magnitude spread
     val vals: Seq[Option[Double]] = Seq(
       None, None, Some(Double.NaN), Some(-12345.67), Some(-12345.67),
       Some(-0.01), Some(0.0), Some(0.0), Some(1e-9), Some(0.01),
       Some(1.0), Some(1.0), Some(2.5), Some(999.99), Some(1000.0),
-      Some(123456789.12), Some(Double.NaN))
+      Some(123456789.12), Some(Double.NaN), Some(Double.PositiveInfinity),
+      Some(Double.NegativeInfinity), Some(Double.NegativeInfinity))
     val df = vals.toDF("v")
     val hist = df.groupBy($"v").agg(count(lit(1)).as("nv"))
 
@@ -88,13 +90,7 @@ class BoundedWindowSpec extends SparkSpec {
     val single = hist.withColumn("cum", sum($"nv").over(wc))
       .select($"v", $"cum")
 
-    val vd = $"v".cast("double")
-    val bucketed = hist.withColumn("hb",
-      when($"v".isNull, lit(Long.MinValue))
-        .when(isnan(vd), lit(Long.MaxValue))
-        .when(vd > 0, floor(log(vd) * 8.0).cast("long"))
-        .when(vd < 0, lit(-1000000L) - floor(log(-vd) * 8.0).cast("long"))
-        .otherwise(lit(-500000L)))
+    val bucketed = hist.withColumn("hb", Extended18Queries.logBucket($"v"))
     val offs = bucketed.groupBy($"hb").agg(sum($"nv").as("bt"))
       .withColumn("off", coalesce(sum($"bt").over(
         Window.orderBy($"hb").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
@@ -114,17 +110,19 @@ class BoundedWindowSpec extends SparkSpec {
 
   test("q103 log-bucket is monotone in v and keeps NULL first / NaN last") {
     // bucket order must agree with Spark's ascending value order so
-    // (hb, v) is a valid refinement of orderBy(v)
-    val vals = Seq(-1e12, -5.0, -1e-6, 0.0, 1e-6, 0.5, 1.0, 3.14, 1e4, 1e12)
-    def hb(v: Double): Long =
-      if (v.isNaN) Long.MaxValue
-      else if (v > 0) math.floor(math.log(v) * 8.0).toLong
-      else if (v < 0) -1000000L - math.floor(math.log(-v) * 8.0).toLong
-      else -500000L
-    val buckets = vals.map(hb)
-    assert(buckets == buckets.sorted, s"bucket order broke: $vals → $buckets")
-    assert(Long.MinValue < buckets.head) // NULL bucket strictly first
-    assert(hb(Double.NaN) > buckets.last) // NaN bucket strictly last
+    // (hb, v) is a valid refinement of orderBy(v); ±Infinity and the
+    // extreme finite magnitudes get bounded buckets of their own
+    val vals = Seq(Double.NegativeInfinity, -Double.MaxValue, -1e12, -5.0, -1e-6,
+      -Double.MinPositiveValue, 0.0, Double.MinPositiveValue, 1e-6, 0.5, 1.0, 3.14,
+      1e4, 1e12, Double.MaxValue, Double.PositiveInfinity)
+    // one local frame keeps the input order: NULL, the values, NaN
+    val all = (None +: vals.map(Some(_)) :+ Some(Double.NaN)).toDF("v")
+      .select(Extended18Queries.logBucket($"v")).as[Long].collect().toSeq
+    val buckets = all.slice(1, all.size - 1)
+    assert(buckets == buckets.sorted && buckets.distinct.size == buckets.size,
+      s"bucket order broke: $vals → $buckets")
+    assert(all.head < buckets.head) // NULL bucket strictly first
+    assert(all.last > buckets.last) // NaN bucket strictly last
     assert(buckets.forall(b => b > -1100000L && b < 1100000L)) // hard bound
   }
 }

@@ -150,6 +150,20 @@ class MlSpec extends SparkSpec {
     assert(r("y")._2 === math.round(best * 1e6) / 1e6) // query rounds acc to 6dp
   }
 
+  test("stumpSplits takes feature names verbatim: backtick, space and quote") {
+    // the melt is built from typed columns, so a name is never parsed
+    // as SQL; the odd name must score exactly like a plain one
+    val rows = Seq(
+      (0.0, 1.0, 9.0), (0.0, 2.0, 8.0), (0.0, 3.0, 9.0),
+      (1.0, 4.0, 8.0), (1.0, 5.0, 9.0), (1.0, 6.0, 8.0))
+    val odd = "x `weird' col"
+    def best(names: Seq[String]) = MlPipeline
+      .stumpSplits(rows.toDF("label" +: names: _*), "label", names)
+      .collect().map(row => (row.getString(0), row.getDouble(1), row.getDouble(2))).toSet
+    assert(best(Seq(odd, "y")) ===
+      best(Seq("x", "y")).map { case (f, t, a) => (if (f == "x") odd else f, t, a) })
+  }
+
   test("boostedStumps nails a planted split in round 1 and is run-deterministic") {
     import org.apache.spark.sql.functions.col
     // label == (x > 3): round 1 must pick (x, 3.0); with F0 = 0.5 the

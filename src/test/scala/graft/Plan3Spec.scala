@@ -96,14 +96,16 @@ class Plan3Spec extends SparkSpec {
       s"a partial aggregate must sit between Expand and the first Exchange; nodes above Expand: $above")
   }
 
-  test("dd01 exact dedup: one fingerprint shuffle feeds both the groups and the join-back") {
-    // the canonical plan: fingerprint projection, groupBy(fp) min/count,
-    // equi-join back on fp — no cartesian, no nested-loop, and the
-    // aggregate partial-combines before its exchange
+  test("dd01 exact dedup: one fingerprint shuffle feeds one window") {
+    // the canonical plan (Dedup.exactGroups): fingerprint projection,
+    // one exchange on fp, one window computing the group's min id and
+    // size per row — no join-back, no cartesian, no nested-loop
     val plan = formatted(Catalog.queries("dd01_exact_dedup")(spark, Sf0001))
     assert(!plan.contains("CartesianProduct"))
     assert(!plan.contains("BroadcastNestedLoopJoin"))
-    assert("HashAggregate".r.findAllIn(plan).size >= 2,
-      "expected partial+final aggregate pair on the fingerprint groupBy")
+    assert("""hashpartitioning\(fp#""".r.findAllIn(plan).size == 1,
+      s"expected exactly one fingerprint exchange:\n$plan")
+    assert("""(?m)^\(\d+\) Window$""".r.findAllIn(plan).size == 1,
+      s"expected exactly one Window node:\n$plan")
   }
 }
