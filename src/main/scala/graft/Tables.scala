@@ -1,15 +1,62 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
-/** Loaders for the testdata star schema (TESTDATA.md). One parquet file
-  * per table under the given scale-factor directory. Parquet scans are
+/** Loaders for the testdata star schema (TESTDATA.md). Each table is
+  * `<dir>/<name>.parquet`: one parquet file (the testdata layout) or a
+  * Spark-written directory of part files. Parquet scans are
   * vectorized + column-pruned by Spark; callers select early so the
   * pruning reaches the scan.
+  *
+  * The schema is read on the driver from one parquet footer and handed
+  * to the reader. Without a schema, `spark.read.parquet` infers it with
+  * a `parallelize(...).collect()` Spark job, even for a single file with
+  * `mergeSchema` off — one job per table load, on every catalog query's
+  * path. The footer picked and its conversion are the ones Spark's
+  * inference uses (summary file first, then the first data file;
+  * `ParquetFileFormat.readSchemaFromFooter` under the session's
+  * `binaryAsString`/`int96AsTimestamp`/`nanosAsLong`/`inferTimestampNTZ`
+  * confs), so the loaded schema is the inferred one. Reads that need
+  * partition discovery or merge appended batches keep Spark's inference:
+  * `Sources.readPartitionedParquet` and DocStream's corpus store.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
+
+  /** The Spark schema of the parquet table at `path`, from one footer. */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) throw new AnalysisException("PATH_NOT_FOUND",
+      Map("path" -> fs.makeQualified(p).toString))
+    val root = fs.getFileStatus(p)
+    val file: Option[FileStatus] =
+      if (root.isFile) Some(root)
+      else {
+        val files = fs.listStatus(p).filter(_.isFile).sortBy(_.getPath.getName)
+        def named(n: String) = files.find(_.getPath.getName == n)
+        named("_common_metadata").orElse(named("_metadata")).orElse(files.find { f =>
+          val n = f.getPath.getName
+          !n.startsWith("_") && !n.startsWith(".")
+        })
+      }
+    val footer = file.getOrElse(throw new AnalysisException("UNABLE_TO_INFER_SCHEMA",
+      Map("format" -> s"Parquet at ${fs.makeQualified(p)}")))
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(footer.getPath,
+        ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(footer, conf), SKIP_ROW_GROUPS)),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")

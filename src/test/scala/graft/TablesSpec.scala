@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
@@ -10,6 +13,10 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   * (nanos-as-long, timestamp_ntz, session-zoned timestamp) must load
   * to the SAME instants; unsupported arrivals must fail fast naming
   * the problem, not surface later as an analysis error in a query.
+  *
+  * Also pins Tables.load's driver-side footer schema: the same schema
+  * Spark's inference gives, for single files and Spark-written
+  * directories, without starting a Spark job.
   */
 class TablesSpec extends SparkSpec {
   import spark.implicits._
@@ -176,5 +183,60 @@ class TablesSpec extends SparkSpec {
       .write.parquet(s"$dir/events.parquet")
     val e = intercept[IllegalStateException](Tables.events(spark, dir))
     assert(e.getMessage.contains("events.ts"))
+  }
+  private val shardTables = Seq(Sf0001, Sf001, Sf01).flatMap { dir =>
+    Option(new java.io.File(dir).list()).toSeq.flatten.sorted
+      .filter(_.endsWith(".parquet")).map(f => (dir, f.stripSuffix(".parquet")))
+  }
+
+  /** A Spark-written table directory: part files plus `_SUCCESS` and
+    * the `.crc` side files of the local file system. */
+  private def sparkWrittenTable(): (String, String) = {
+    val dir = writeDir("spark_written")
+    Seq((1L, "a", Array[Byte](1, 2), BigDecimal("1.25"), Seq(1, 2), Map("k" -> 1.5)),
+        (2L, null, null, null, Seq.empty[Int], Map.empty[String, Double]))
+      .toDF("id", "s", "b", "d", "arr", "m")
+      .withColumn("ts", timestamp_micros(lit(micros)))
+      .withColumn("st", struct(col("id").as("x"), col("s").as("y")))
+      .repartition(2)
+      .write.parquet(s"$dir/t.parquet")
+    val names = new java.io.File(s"$dir/t.parquet").list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")) &&
+      names.count(n => n.startsWith("part-") && n.endsWith(".parquet")) >= 2,
+      s"expected part files, _SUCCESS and .crc files, got $names")
+    (dir, "t")
+  }
+
+  test("load: the footer schema equals Spark's inferred schema on every shard table and a Spark-written directory") {
+    assert(shardTables.nonEmpty, "no testdata shard found")
+    (shardTables :+ sparkWrittenTable()).foreach { case (dir, t) =>
+      assert(Tables.load(spark, dir, t).schema === spark.read.parquet(s"$dir/$t.parquet").schema,
+        s"$dir/$t.parquet")
+    }
+  }
+
+  test("load starts no Spark job") {
+    var jobs = 0
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+    }
+    val tables = shardTables :+ sparkWrittenTable()
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      tables.foreach { case (dir, t) => Tables.load(spark, dir, t) }
+      ListenerDrain(spark.sparkContext)
+      assert(counter.synchronized(jobs) === 0, s"jobs started by ${tables.size} loads")
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("load: a missing path and an empty directory fail with an AnalysisException naming the path") {
+    val dir = writeDir("missing")
+    val missing = intercept[AnalysisException](Tables.load(spark, dir, "nope"))
+    assert(missing.getMessage.contains(s"$dir/nope.parquet"), missing.getMessage)
+    new java.io.File(s"$dir/empty.parquet").mkdirs()
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$dir/empty.parquet/_SUCCESS"))
+    val empty = intercept[AnalysisException](Tables.load(spark, dir, "empty"))
+    assert(empty.getMessage.contains(s"$dir/empty.parquet"), empty.getMessage)
   }
 }
