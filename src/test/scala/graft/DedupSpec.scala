@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.dedup.Dedup
 
 class DedupSpec extends SparkSpec {
@@ -84,12 +85,46 @@ class DedupSpec extends SparkSpec {
     // {10,11,12,13} that needs >1 propagation round to converge
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L),
       (10L, 11L), (11L, 12L), (12L, 13L)).toDF("doc_a", "doc_b")
-    val got = Dedup.duplicateClusters(pairs, "doc_a", "doc_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val out = Dedup.duplicateClusters(pairs, "doc_a", "doc_b")
+    assert(out.schema.map(f => (f.name, f.dataType, f.nullable)) === Seq(
+      ("doc_id", LongType, false), ("cluster_id", LongType, false), ("cluster_size", LongType, false)))
+    val got = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === Set(
       (1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L),
       (7L, 7L, 2L), (9L, 7L, 2L),
       (10L, 10L, 4L), (11L, 10L, 4L), (12L, 10L, 4L), (13L, 10L, 4L)))
+  }
+
+  test("duplicateClusters: NULL ids label from their neighbours but never propagate") {
+    // SQL join equality: a NULL id takes min(its non-NULL neighbours) as
+    // its label, but no label crosses a NULL endpoint in either
+    // direction, and every NULL endpoint is the same single node
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(3L)), (None, Some(3L)),
+      (None, Some(9L)), (Some(9L), None), (Some(7L), None), (None, None),
+      (Some(10L), Some(11L))).toDF("doc_a", "doc_b")
+    val out = Dedup.duplicateClusters(pairs, "doc_a", "doc_b")
+    assert(out.schema.map(f => (f.name, f.dataType, f.nullable)) === Seq(
+      ("doc_id", LongType, true), ("cluster_id", LongType, true), ("cluster_size", LongType, false)))
+    val got = out.collect().map(r => (Option(r.get(0)), Option(r.get(1)), r.getLong(2))).toSet
+    assert(got === Set[(Option[Any], Option[Any], Long)](
+      (Some(1L), Some(1L), 3L), (Some(2L), Some(1L), 3L), (Some(3L), Some(1L), 3L),
+      (None, Some(3L), 1L), (Some(9L), Some(9L), 1L), (Some(7L), Some(7L), 1L),
+      (Some(10L), Some(10L), 2L), (Some(11L), Some(10L), 2L)))
+    // a component of NULLs alone has a NULL label
+    val nulls = Seq[(Option[Long], Option[Long])]((None, None)).toDF("doc_a", "doc_b")
+    assert(Dedup.duplicateClusters(nulls, "doc_a", "doc_b").collect().toSeq
+      .map(r => (Option(r.get(0)), Option(r.get(1)), r.getLong(2))) === Seq((None, None, 1L)))
+  }
+
+  test("duplicateClusters: string ids take the UTF-8 byte-order minimum") {
+    // U+FFFF sorts before U+1F600 in UTF-8 bytes (EF.. < F0..) but after
+    // it in UTF-16 code units (FFFF > D83D): Spark's min is the former
+    val (bmp, astral) = ("\uFFFF", "\uD83D\uDE00")
+    val pairs = Seq((astral, bmp), (astral, "\uD83D\uDE01")).toDF("doc_a", "doc_b")
+    val got = Dedup.duplicateClusters(pairs, "doc_a", "doc_b").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    assert(got === Set((bmp, bmp, 3L), (astral, bmp, 3L), ("\uD83D\uDE01", bmp, 3L)))
   }
 
   test("connectedComponentsStars: O(log n) rounds, agrees with propagation") {
