@@ -1,8 +1,12 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.text.TextStats
 
 /** Deduplication operators for a training-data pipeline: exact
@@ -20,6 +24,9 @@ import graft.text.TextStats
   *     cross join, so cost is Σ bucket² over shingle buckets;
   *   - MinHash/LSH reduces that to Σ bucket² over `bands` short
   *     signature buckets — the standard web-scale near-dup plan;
+  *   - cluster assignment ([[duplicateClusters]]) checkpoints nothing:
+  *     its propagation rounds are one co-partitioned RDD lineage cut
+  *     by shuffle files, one job per round;
   *   - all hashing is md5-derived Column arithmetic (codegen'd, no
   *     UDFs) so signatures are deterministic and engine-independent.
   */
@@ -501,78 +508,94 @@ object Dedup {
     * doc that appears in at least one pair; docs with no edges are
     * trivially their own cluster and are left to the caller.
     *
-    * Scale posture: each round is one shuffle (neighbor-min agg) over
-    * the edge list, and labels are localCheckpoint'ed so lineage stays
-    * flat. Convergence is O(component diameter) rounds — near-dup
-    * clusters are shallow (stars around a canonical doc), so 2-3
-    * rounds in practice; `maxIter` bounds adversarial chains, and the
-    * loop exits early on the first round with zero label changes. A
-    * component deeper than maxIter falls through to
-    * [[connectedComponentsStars]], the O(log n) path.
+    * Scale posture: the rounds run as one co-partitioned RDD lineage,
+    * the shape of [[graft.ops.Graph.pageRank]]. Each node's neighbour
+    * list is shuffled once into a `HashPartitioner` of
+    * `spark.sql.shuffle.partitions` and cached; each round shuffles
+    * only the map-side-combined neighbour minima into the same
+    * partitioner and joins them narrowly onto the cached label state.
+    * Rounds are cut by shuffle files, not `localCheckpoint`, and one
+    * count of label decreases — one job — decides each round.
+    * Convergence is O(component diameter) rounds — near-dup clusters
+    * are shallow (stars around a canonical doc), so 1-2 rounds in
+    * practice; `maxIter` bounds adversarial chains. A component deeper
+    * than maxIter falls through to [[connectedComponentsStars]], the
+    * O(log n) path.
+    *
+    * NULL ids follow SQL join equality: every NULL endpoint is one
+    * node labelled min(its non-NULL neighbours), and no label crosses
+    * it. Ids must be integral, string, date or timestamp; string
+    * minima are Spark's (UTF-8 byte order).
     */
   def duplicateClusters(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25): DataFrame = {
+    val spark = pairs.sparkSession
     // Symmetrize with one explode, not union(e0, e0.swapped) — the
     // union form evaluates the (expensive) upstream pairs plan twice.
     val edges = pairs.select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct().localCheckpoint()
-    // Fold propagation round 1 into initialization: label₀(v) =
-    // min(v, min neighbor) — star-shaped near-dup clusters converge
-    // immediately, so the loop usually only runs its confirmation pass.
-    // labels₀ is deliberately NOT checkpointed (r20 job trim): it is a
-    // single groupBy over the already-checkpointed edge list, and for
-    // the converge-immediately case the loop below never materializes
-    // anything — the whole call is then the edges checkpoint plus ONE
-    // confirmation aggregate, where the r19 form paid two more eager
-    // jobs (labels₀ checkpoint + the final round's checkpoint/isEmpty
-    // pair) for the same answer. Progress rounds still checkpoint, so
-    // lineage depth stays O(1) per round on deep graphs.
-    var labels = edges.groupBy(col("src"))
-      .agg(least(col("src"), min(col("dst"))).as("label"))
-      .select(col("src").as("v"), col("label"))
+      .distinct()
+    val node = edges.schema("src")
+    require(graft.ops.Graph.jvmKeyed(node.dataType),
+      s"Dedup.duplicateClusters: ids must be integral, string, date or timestamp, got ${node.dataType.sql}")
+    val isString = node.dataType == StringType
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // v → neighbours, cached: every round reads it. Strings are keyed as
+    // UTF8String so that minima compare in Spark's byte order.
+    val nbrs: RDD[(Any, Array[Any])] = edges.rdd.map { r =>
+      if (isString) (UTF8String.fromString(r.getString(0)), UTF8String.fromString(r.getString(1)))
+      else (r.get(0), r.get(1))
+    }.groupByKey(part).mapValues(_.toArray).cache()
+    // state: v → (neighbours, label, decreased this round), partitioned
+    // like nbrs. label₀(v) = min(v, min neighbour): star-shaped near-dup
+    // clusters are converged before the first round, which confirms it.
+    var state: RDD[(Any, (Array[Any], Any, Boolean))] = nbrs.mapPartitions(
+      _.map { case (v, ns) => (v, (ns, ns.foldLeft(v)(minId), false)) },
+      preservesPartitioning = true)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val nbrMin = edges.join(labels, edges("src") === labels("v"))
-        .groupBy(col("dst")).agg(min(col("label")).as("nbr_label"))
-      val joined = labels.join(nbrMin, labels("v") === nbrMin("dst"), "left")
-      // ONE action decides the round (r20): count the label decreases
-      // while the round's relabeling is still lazy. Zero decreases
-      // means least(label, coalesce(nbr, label)) == label on every row
-      // — the relabeled frame IS `labels` — so the confirmation round
-      // materializes nothing (the r19 form checkpointed the identical
-      // frame and then ran isEmpty over it: two jobs every call paid
-      // on its final round). A progress round pays the relabel join
-      // twice (once counting, once checkpointing) — both reads of
-      // checkpointed inputs, the trade that buys the final round back.
-      val changedRow = joined.agg(
-        sum(when(col("nbr_label") < col("label"), 1L).otherwise(0L))).first()
-      converged = changedRow.isNullAt(0) || changedRow.getLong(0) == 0L
-      if (!converged) {
-        labels = joined.select(col("v"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-          .localCheckpoint()
-      }
+      // a NULL endpoint neither sends nor receives a label
+      val nbrMin = state.flatMap { case (v, (ns, l, _)) =>
+        if (v == null) Iterator.empty else ns.iterator.filter(_ != null).map(d => (d, l))
+      }.reduceByKey(part, minId(_, _))
+      val next = state.leftOuterJoin(nbrMin).mapValues { case ((ns, l, _), m) =>
+        (ns, m.fold(l)(minId(l, _)), m.exists(lessId(_, l)))
+      }.cache()
+      converged = next.filter(_._2._3).count() == 0L
+      state.unpersist(blocking = false)
+      state = next
       iter += 1
     }
     // Min-propagation moves a label one hop per round, so a component
     // with diameter > maxIter won't converge. Instead of handing back
-    // wrong cluster_ids (or failing, as before r6), fall through to
-    // the O(log n) star algorithm — same output contract, immune to
-    // diameter.
-    if (!converged) return connectedComponentsStars(pairs, aCol, bCol)
-    // cluster_size as a window count, not groupBy+join-back (r20): the
-    // join form consumed `labels` from two subtrees (and shuffled it
-    // twice — agg + probe); one partitionBy(label) exchange computes
-    // the same value per row. The oracle side already uses exactly
-    // this window formulation.
-    labels.withColumn("cluster_size",
-        count(lit(1)).over(Window.partitionBy(col("label"))))
+    // wrong cluster_ids, fall through to the O(log n) star algorithm —
+    // same output contract, immune to diameter.
+    nbrs.unpersist(blocking = false)
+    if (!converged) {
+      state.unpersist(blocking = false)
+      return connectedComponentsStars(pairs, aCol, bCol)
+    }
+    val rows = state.map { case (v, (_, l, _)) =>
+      if (isString) Row(Option(v).map(_.toString).orNull, Option(l).map(_.toString).orNull)
+      else Row(v, l)
+    }
+    // cluster_size as a window count, not groupBy+join-back (r20): one
+    // partitionBy(label) exchange; the oracle side uses exactly this
+    // window formulation.
+    spark.createDataFrame(rows, StructType(Seq(node.copy(name = "v"), node.copy(name = "label"))))
+      .withColumn("cluster_size", count(lit(1)).over(Window.partitionBy(col("label"))))
       .select(col("v").as("doc_id"), col("label").as("cluster_id"), col("cluster_size"))
   }
+
+  /** SQL `least` on two ids of one type: NULL only if both are. */
+  private def minId(a: Any, b: Any): Any =
+    if (a == null) b else if (b == null || !lessId(b, a)) a else b
+
+  private def lessId(a: Any, b: Any): Boolean =
+    a != null && b != null && a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
 
   /** [[duplicateClusters]] over the exact-Jaccard pair graph with the
     * byte-identical collapse applied first and the membership expanded

@@ -92,7 +92,9 @@ object Graph {
       StructType(Seq(nodeField, StructField("rank", DoubleType))))
   }
 
-  private def jvmKeyed(t: DataType): Boolean = t match {
+  /** Types whose JVM equality (and, for the non-string ones, ordering)
+    * agrees with Spark's on the external row values. */
+  private[graft] def jvmKeyed(t: DataType): Boolean = t match {
     case ByteType | ShortType | IntegerType | LongType | StringType
         | DateType | TimestampType | TimestampNTZType => true
     case _ => false

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.dedup.Dedup
@@ -125,6 +127,54 @@ class DedupSpec extends SparkSpec {
     val got = Dedup.duplicateClusters(pairs, "doc_a", "doc_b").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(got === Set((bmp, bmp, 3L), (astral, bmp, 3L), ("\uD83D\uDE01", bmp, 3L)))
+  }
+
+  test("duplicateClusters: a measured constant plus one Spark job per propagation round") {
+    // a path 0-1-…-m is labelled one hop deep at label₀, so min-label
+    // propagation needs m − 1 rounds of decreases and one confirming
+    // round: m rounds, each decided by one count
+    var jobs = 0
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+    }
+    def jobsFor(m: Int): Int = {
+      val path = (0L until m.toLong).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+      ListenerDrain(spark.sparkContext)
+      counter.synchronized { jobs = 0 }
+      val got = Dedup.duplicateClusters(path, "doc_a", "doc_b").collect()
+      assert(got.length === m + 1 && got.forall(r => r.getLong(1) == 0L && r.getLong(2) == m + 1L))
+      ListenerDrain(spark.sparkContext)
+      counter.synchronized { jobs }
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      val counts = Seq(1, 3, 6).map(jobsFor)
+      // 3 = the distinct-edges stage run by `.rdd`, then the output
+      // window's exchange and result stages
+      assert(counts === Seq(1, 3, 6).map(_ + 3), s"jobs for 1/3/6 rounds: $counts")
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("duplicateClusters: date, timestamp and widened mixed-width ids; other id types are rejected") {
+    val d = Seq((java.sql.Date.valueOf("2024-01-02"), java.sql.Date.valueOf("2024-01-01")))
+      .toDF("doc_a", "doc_b")
+    assert(Dedup.duplicateClusters(d, "doc_a", "doc_b").collect()
+      .map(r => (r.getDate(0).toString, r.getDate(1).toString)).toSet ===
+      Set(("2024-01-01", "2024-01-01"), ("2024-01-02", "2024-01-01")))
+    val t = Seq((java.sql.Timestamp.valueOf("2024-01-01 00:00:00.000002"),
+        java.sql.Timestamp.valueOf("2024-01-01 00:00:00.000001"))).toDF("doc_a", "doc_b")
+    assert(Dedup.duplicateClusters(t, "doc_a", "doc_b").collect().map(_.getTimestamp(1)).toSet ===
+      Set(java.sql.Timestamp.valueOf("2024-01-01 00:00:00.000001")))
+    val mixed = Seq((3, 2L), (2, 1L)).toDF("doc_a", "doc_b")
+    val out = Dedup.duplicateClusters(mixed, "doc_a", "doc_b")
+    assert(out.schema("doc_id").dataType === LongType)
+    assert(out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
+      Set((1L, 1L), (2L, 1L), (3L, 1L)))
+    Seq("double" -> lit(1.5), "binary" -> lit(Array[Byte](1))).foreach { case (name, v) =>
+      val e = intercept[IllegalArgumentException](Dedup.duplicateClusters(
+        spark.range(1).select(v.as("doc_a"), v.as("doc_b")), "doc_a", "doc_b"))
+      assert(e.getMessage.toLowerCase.contains(name), e.getMessage)
+    }
   }
 
   test("connectedComponentsStars: O(log n) rounds, agrees with propagation") {
