@@ -174,16 +174,22 @@ object Extended6Queries {
     */
   private def q38cHllErrorGate(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir)
-    li.groupBy(col("l_returnflag"))
+    // Two aggregates joined on the flag. In one agg, the DISTINCT
+    // rewrite would carry the percentile buffers through every
+    // (flag, key) group of both countDistincts (~37× slower at sf0.1).
+    val exact = li.groupBy(col("l_returnflag"))
       .agg(
         countDistinct(col("l_partkey")).as("exact_parts"),
-        countDistinct(col("l_orderkey")).as("exact_orders"),
+        countDistinct(col("l_orderkey")).as("exact_orders"))
+    val sketch = li.groupBy(col("l_returnflag").as("flag"))
+      .agg(
         approx_count_distinct(col("l_partkey"), 0.01).as("hll_parts"),
         approx_count_distinct(col("l_orderkey"), 0.01).as("hll_orders"),
         percentile_approx(col("l_extendedprice"), lit(0.5), lit(10000)).as("ap50"),
         percentile_approx(col("l_extendedprice"), lit(0.9), lit(10000)).as("ap90"),
         expr("percentile(l_extendedprice, 0.5)").as("ep50"),
         expr("percentile(l_extendedprice, 0.9)").as("ep90"))
+    exact.join(sketch, col("l_returnflag") <=> col("flag"))
       .select(col("l_returnflag"), col("exact_parts"), col("exact_orders"),
         (abs(col("hll_parts") - col("exact_parts")) <=
           col("exact_parts") * 0.05).as("hll_parts_ok"),
