@@ -575,7 +575,7 @@ object Bench {
     // noise on dd01 both trace to this.
     (Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings")
-      .map(t => () => spark.read.parquet(s"$sfDir/$t.parquet")) :+
+      .map(t => () => Tables.load(spark, sfDir, t)) :+
       (() => Tables.events(spark, sfDir))).foreach { mk =>
       try mk().selectExpr("bit_xor(xxhash64(struct(*)))").collect()
       catch { case e: Throwable =>

@@ -39,7 +39,7 @@ object BenchRepro {
     }
     (Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings")
-      .map(t => () => spark.read.parquet(s"$sfDir/$t.parquet")) :+
+      .map(t => () => Tables.load(spark, sfDir, t)) :+
       (() => Tables.events(spark, sfDir))).foreach { mk =>
       time("prescan-table") {
         try mk().selectExpr("bit_xor(xxhash64(struct(*)))").collect()

@@ -44,7 +44,7 @@ object GramShapeAB {
       // any shape under test ever runs (observed at T=48M)
       Seq((1L, GiantDocBlast.giantText(t))).toDF("doc_id", "text")
         .write.mode("overwrite").parquet(s"$base/doc.parquet")
-      val doc = spark.read.parquet(s"$base/doc.parquet")
+      val doc = graft.Tables.load(spark, base, "doc")
         .select(col("doc_id"), graft.text.TextStats.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= n)
       def time(label: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {

@@ -20,7 +20,7 @@ object ProfileDd14 {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/documents.parquet")
+    try graft.Tables.documents(spark, sfDir)
       .selectExpr("bit_xor(xxhash64(struct(*)))").collect()
     catch { case _: Throwable => () }
     def time(name: String)(f: => Long): Unit = {

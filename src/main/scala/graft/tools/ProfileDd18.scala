@@ -18,7 +18,7 @@ object ProfileDd18 {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    Seq("documents").foreach(t => spark.read.parquet(s"$dir/$t.parquet").count())
+    Tables.documents(spark, dir).count()
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f

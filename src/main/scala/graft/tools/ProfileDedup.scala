@@ -37,7 +37,7 @@ object ProfileDedup {
       .selectExpr("count(distinct f)", "sum(size(t))").collect()
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      try graft.Tables.load(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
     time("warm broadcast join")(

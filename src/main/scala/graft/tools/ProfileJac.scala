@@ -25,7 +25,7 @@ object ProfileJac {
 
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Seq("documents").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet")
+      try Tables.load(spark, sfDir, t)
         .selectExpr("bit_xor(xxhash64(struct(*)))").collect()
       catch { case _: Throwable => () }
     }

@@ -26,7 +26,7 @@ object ProfileQ {
       .groupBy("k").count().collect()
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      try graft.Tables.load(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
 

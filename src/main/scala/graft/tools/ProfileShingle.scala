@@ -26,7 +26,7 @@ object ProfileShingle {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/documents.parquet")
+    try Tables.documents(spark, sfDir)
       .selectExpr("bit_xor(xxhash64(struct(*)))").collect()
     catch { case _: Throwable => () }
     def noop(df: DataFrame): Long = { df.write.format("noop").mode("overwrite").save(); -1L }
