@@ -184,6 +184,7 @@ class TablesSpec extends SparkSpec {
     val e = intercept[IllegalStateException](Tables.events(spark, dir))
     assert(e.getMessage.contains("events.ts"))
   }
+
   private val shardTables = Seq(Sf0001, Sf001, Sf01).flatMap { dir =>
     Option(new java.io.File(dir).list()).toSeq.flatten.sorted
       .filter(_.endsWith(".parquet")).map(f => (dir, f.stripSuffix(".parquet")))
