@@ -75,11 +75,10 @@ object Extended10Queries {
     // per-doc TERM FREQUENCIES, not raw occurrences (r20): the class
     // fan-out below multiplies every row by |classes|, so collapsing
     // repeated tokens first shrinks the scored join by the corpus's
-    // within-doc repetition factor. Σ ll over occurrences = tf·ll —
-    // same FP magnitudes summed in one fewer step; the per-doc float-
-    // order drift this moves around is the ~1e-13 class the 1e-6
-    // decision snap already absorbs (Spark's own partial-agg order is
-    // nondeterministic, so the snap has always carried this).
+    // within-doc repetition factor. Σ ll over occurrences = tf·ll, but
+    // not bit-for-bit, so the oracle (nbPredsSqlPrefix's ttoks) sums
+    // the same tf·ll terms: a 6-dp score boundary must not flip an
+    // argmax between the two engines.
     val testToks = test.select(col("doc_id"), col("source"),
         explode(col("toks")).as("tok"))
       .groupBy(col("doc_id"), col("source"), col("tok"))
@@ -137,13 +136,16 @@ object Extended10Queries {
       |    ln(1.0 / (t.nc + v.v)) AS ll_unseen
       |  FROM ct t JOIN priors p USING (source)
       |    CROSS JOIN nt n CROSS JOIN vocab v),
-      |ttoks AS (SELECT doc_id, source, unnest(toks) AS tok FROM test),
+      |ttoks AS (
+      |  SELECT doc_id, source, tok, count(*) AS tf
+      |  FROM (SELECT doc_id, source, unnest(toks) AS tok FROM test)
+      |  GROUP BY doc_id, source, tok),
       |scored AS (
       |  SELECT s.doc_id, s.source, s.cls,
       |    round(min(ci.lprior) + sum(s.contrib), 6) AS score
       |  FROM (
       |    SELECT tk.doc_id, tk.source, ci.cls,
-      |      coalesce(m.ll, ci.ll_unseen) AS contrib
+      |      tk.tf * coalesce(m.ll, ci.ll_unseen) AS contrib
       |    FROM ttoks tk CROSS JOIN cinfo ci
       |      LEFT JOIN model m ON m.cls = ci.cls AND m.tok = tk.tok) s
       |  JOIN cinfo ci USING (cls)
