@@ -8,14 +8,16 @@ import org.apache.spark.sql.SparkSession
   * targets the right component.
   *
   * Usage: runMain graft.tools.ProfileQ q30_sql_entry ml03_gbt_eval
+  * Runs on `SPARK_GRAFT_CPUS` cores, validated as Bench does.
   */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val rounds = sys.env.getOrElse("SPARK_GRAFT_ROUNDS", "3").toInt
+    val nCpus = graft.Bench.sparkCpus()
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$nCpus]")
+      .config("spark.sql.shuffle.partitions", nCpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

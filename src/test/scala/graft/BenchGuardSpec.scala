@@ -29,73 +29,12 @@ class BenchGuardSpec extends AnyFunSuite {
       declared = Set("imdb_pipeline_synth", "ml03_gbt_eval")))
   }
 
-  test("host-cal kernel: deterministic hash pin and frozen iteration count") {
-    // The final splitmix64 state depends only on the iteration count,
-    // so pinning it at a cheap count makes any silent edit to the loop
-    // body loud — and a changed body or count would break the
-    // round-over-round comparability of BENCH's host_cal field.
-    // (Value independently derived with 64-bit wrapping arithmetic.)
-    assert(Bench.hostCal(1000L)._2 === -4070892016833039931L)
-    assert(Bench.CalIters === 200000000L,
-      "CalIters is frozen: changing it re-bases every future host_cal reading")
-  }
-
-  test("host-cal kernel: timed pass reports positive wall time") {
-    val (sec, _) = Bench.hostCal(1000000L)
-    assert(sec > 0.0 && sec < 60.0)
-  }
-
-  test("parallel host-cal kernel: deterministic hash pin, thread count scaling (VERDICT r14 #2)") {
-    // Each thread runs the IDENTICAL frozen loop, so the accumulated
-    // hash is exactly threads × the single kernel's pinned state —
-    // order-independent wrapping adds. A silent edit to the loop body,
-    // the per-thread count, or the accumulation breaks this loudly.
-    assert(Bench.hostCalPar(1, 1000L)._2 === -4070892016833039931L)
-    assert(Bench.hostCalPar(2, 1000L)._2 === -8141784033666079862L)
-    val (sec, h) = Bench.hostCalPar(4, 1000000L)
-    assert(sec > 0.0 && sec < 60.0)
-    assert(h === 4L * Bench.hostCal(1000000L)._2)
-    intercept[IllegalArgumentException] { Bench.hostCalPar(0, 1000L) }
-  }
-
-  test("parallel-cal printed readings are width-capped at the certified frame width") {
-    // the frame certifies 999.999 for host_cal_par's pre/post — an
-    // absurd reading must saturate there, not widen the line
-    assert(Bench.r3c(12345.678) === 999.999)
-    assert(Bench.r3c(1.23456) === 1.235)
-    assert(Bench.r3c(0.0) === 0.0)
-  }
-
-  test("single-cal printed readings are width-capped at the certified 99.999 (ADVICE r15)") {
-    // host_cal's frame slots allow 99.999, not 999.999 — pre/post now
-    // print through r3s so a pathological ≥100 s single-kernel reading
-    // saturates instead of eroding the certified budget arithmetic
-    assert(Bench.r3s(123.456) === 99.999)
-    assert(Bench.r3s(1.23456) === 1.235)
-    assert(Bench.r3s(0.0) === 0.0)
-    // the shared 2-decimal ratio cap for rep_spread AND rep1_infl
-    // (review r16: was two identical local copies — a retune of one
-    // would have printed the two fields at different certified widths)
-    assert(Bench.r2(12345.678) === 999.99)
-    assert(Bench.r2(1.234) === 1.23)
-    // per-query printed seconds saturate at the certified 8-char slot
+  test("per-query printed seconds saturate at 9999.999") {
+    // the line budget certifies an 8-char slot per headline reading
     // (review r16: uncapped r3 could print 9+ chars and erode the
     // line-budget arithmetic by 1 char per pathological query)
     assert(Bench.r3q(123456.789) === 9999.999)
     assert(Bench.r3q(5.1784) === 5.178)
-  }
-
-  test("parallel host-cal pack: a dead worker thread fails loudly (ADVICE r15)") {
-    // join() returns normally after an uncaught throw, so without the
-    // completion check a dead worker would read as a FAST quiet host
-    // with a wrong hash — the failure must surface at the call site
-    val ex = intercept[IllegalStateException] {
-      Bench.runPack(2, () => throw new RuntimeException("boom"))
-    }
-    assert(ex.getMessage.contains("2 of 2 kernel threads died"))
-    assert(ex.getMessage.contains("boom"))
-    // green path through the same code: full pack completes, hash adds
-    assert(Bench.runPack(3, () => 7L)._2 === 21L)
   }
 
   test("catalog names are printable in the bench line without escaping (ADVICE r14)") {
@@ -105,65 +44,6 @@ class BenchGuardSpec extends AnyFunSuite {
     // same predicate at startup; this is the build-time face of it).
     val bad = SparkEntry.queries.keys.filterNot(_.matches("[A-Za-z0-9_]+"))
     assert(bad.isEmpty, s"unprintable catalog names: ${bad.mkString(",")}")
-  }
-
-  test("rep_spread: ratio is max over lower-median, with a sub-ms floor") {
-    // same lower-median convention as the reported seconds
-    assert(Bench.repRatio(Seq(1.0, 2.0, 4.0)) === 2.0)
-    // lower median with an even count: (size-1)/2 picks the smaller mid
-    assert(Bench.repRatio(Seq(1.0, 3.0)) === 3.0)
-    // sub-ms medians report 1.0 — scheduler jitter there is not signal
-    assert(Bench.repRatio(Seq(0.0005, 0.0004, 0.01)) === 1.0)
-    assert(Bench.repRatio(Nil) === 1.0)
-    assert(Bench.repRatio(Seq(1.2)) === 1.0)
-  }
-
-  test("rep_spread: printed format, hi threshold, and hi cap (VERDICT r13 #2)") {
-    // quiet drive: hi stays empty, med/max carry the summary
-    assert(Bench.repSpreadJson(Seq("a" -> 1.0, "b" -> 1.04, "c" -> 1.1)) ===
-      """{"med":1.04,"max":1.1,"hi":{}}""")
-    // contended drive: offenders at ≥ 1.5 listed descending, capped at
-    // 3 entries so the printed line stays bounded under total contention
-    val contended = Seq("q1" -> 2.0, "q2" -> 1.6, "q3" -> 3.1, "q4" -> 1.51,
-      "q5" -> 1.49, "q6" -> 2.5, "q7" -> 1.8)
-    assert(Bench.repSpreadJson(contended) ===
-      """{"med":1.8,"max":3.1,"hi":{"q3":3.1,"q6":2.5,"q1":2.0}}""")
-    assert(Bench.RepSpreadHiCap === 3 && Bench.RepSpreadHiThreshold === 1.5,
-      "hi cap/threshold are part of the artifact's round-over-round contract")
-    // degenerate: an empty headline set still prints a parseable field
-    assert(Bench.repSpreadJson(Nil) === """{"med":1.0,"max":1.0,"hi":{}}""")
-    // printed ratios are width-capped at 999.99 — an absurd ratio (10 s
-    // rep over a just-above-floor median) must not erode the certified
-    // line-budget arithmetic
-    assert(Bench.repSpreadJson(Seq("a" -> 12345.6)) ===
-      """{"med":999.99,"max":999.99,"hi":{"a":999.99}}""")
-  }
-
-  test("rep1_infl: ratio needs multiple reps and a multi-second median (VERDICT r15 #1)") {
-    // rep-1 over lower-median, only where the median clears the frozen
-    // 1 s floor — below it, the structural codegen premium dominates
-    // and the ratio is rep_spread's territory, not transient signal
-    assert(Bench.rep1Ratio(Seq(12.4, 7.8, 6.8)) === Some(12.4 / 7.8))
-    // rep-1 can be the FASTEST rep — the ratio reports it honestly
-    assert(Bench.rep1Ratio(Seq(2.0, 3.0, 4.0)) === Some(2.0 / 3.0))
-    // sub-floor median: excluded
-    assert(Bench.rep1Ratio(Seq(2.5, 0.4, 0.3)) === None)
-    // single-shot / empty: no rep-1-vs-steady-state signal exists
-    assert(Bench.rep1Ratio(Seq(5.0)) === None)
-    assert(Bench.rep1Ratio(Nil) === None)
-    assert(Bench.Rep1InflFloorSec === 1.0,
-      "the floor is frozen: changing it re-bases every future rep1_infl reading")
-  }
-
-  test("rep1_infl: printed format, med/max over qualifying queries, width cap") {
-    // two qualifying queries (ml03-like, synth-like) + one sub-floor
-    val drives = Seq(Seq(12.0, 6.0, 6.0), Seq(9.0, 6.0, 6.0), Seq(2.2, 0.3, 0.3))
-    assert(Bench.rep1InflJson(drives) === """{"med":1.5,"max":2.0}""")
-    // no qualifying queries: a parseable quiet default
-    assert(Bench.rep1InflJson(Seq(Seq(0.5, 0.2), Nil)) === """{"med":1.0,"max":1.0}""")
-    // width-capped at 999.99 like rep_spread's ratios
-    assert(Bench.rep1InflJson(Seq(Seq(99999.0, 1.0, 1.0))) ===
-      """{"med":999.99,"max":999.99}""")
   }
 
   test("headline composition is pinned: rotations must update this list deliberately (VERDICT r15 #2)") {
@@ -194,61 +74,26 @@ class BenchGuardSpec extends AnyFunSuite {
       "duplicate headline names would double-time a query")
   }
 
-  test("printed line budget holds with the rep_spread field at worst-case width") {
-    // lineBudgetOk now derives its fixed overhead from a formatted
-    // frame with pathological widths (ADVICE r13) — this keeps the
-    // check itself exercised, so a headline addition that overflows
-    // the driver's ~1500-char buffer fails HERE, not in the artifact
+  test("printed line budget holds at worst-case width, and the line's keys are fixed") {
+    // worstCaseLineLen formats the same Bench.line main prints, at
+    // pathological widths — a headline addition that overflows the
+    // driver's 2000-char tail fails HERE, not in the artifact
     assert(Bench.lineBudgetOk,
       s"worst-case printed line is ${Bench.worstCaseLineLen} chars, budget is 1800 " +
         "(measured r18: driver tail = 2000 chars, trailing sbt success line ≤ 80) — " +
         "rotate a redundant headline sibling out (r15 dd02/tx08, r16 mx05 precedents)")
+    // the driver contract: exactly these top-level keys, in this order
+    assert(Bench.line(12.5, 4, 1.25, Seq("q_a"), Seq("q_b"), Seq("q01" -> 0.5), "/sf") ===
+      """{"metric":"total","value":12.5,"unit":"sec","warmup":"v6-median3",""" +
+      """"cpus":4,"spark_par":1.25,"n_failed":1,"failed":["q_a"],"memo_warn":["q_b"],""" +
+      """"queries":{"q01":0.5},"sf":"/sf"}""")
   }
 
-  test("steal_pct: exact arithmetic on synthetic /proc/stat lines, rejection on every degenerate shape (r19)") {
-    // 8-field deltas: user+100, idle+860, steal+40 → 40/1000 = 4%
-    val a = "cpu  1000 0 500 10000 10 0 5 100 0 0"
-    val b = "cpu  1100 0 500 10860 10 0 5 140 0 0"
-    assert(Bench.stealPct(a, b) === Some(4.0))
-    // zero steal delta on a live window → exactly 0.0, not None (a
-    // quiet reading is a reading — the ledger's ≤0.1% class)
-    val c = "cpu  2000 0 500 10000 10 0 5 100 0 0"
-    assert(Bench.stealPct(a, c) === Some(0.0))
-    // guest fields absent (8-field kernels) still parse
-    assert(Bench.stealPct("cpu 0 0 0 0 0 0 0 0", "cpu 10 0 0 80 0 0 0 10")
-      === Some(10.0))
-    // degenerate shapes are None, never a fabricated number: per-cpu
-    // line, non-numeric field, short line, zero/negative total delta,
-    // counter wrap (steal going backwards), steal exceeding the total
-    assert(Bench.stealPct(a.replace("cpu ", "cpu0 "), b) === None)
-    assert(Bench.stealPct(a, b.replace("140", "x40")) === None)
-    assert(Bench.stealPct("cpu 1 2 3", b) === None)
-    assert(Bench.stealPct(a, a) === None) // zero elapsed
-    assert(Bench.stealPct(b, a) === None) // negative deltas
-    // a steal-only advance is a consistent 100%-steal window, not an
-    // error (steal is a summand of the total)
-    assert(Bench.stealPct(a,
-      "cpu  1000 0 500 10000 10 0 5 2000 0 0") === Some(100.0))
-    // but a partial counter wrap (idle going backwards while steal
-    // advances, dTot < dSteal) is inconsistent → None, never >100%
-    assert(Bench.stealPct(a,
-      "cpu  1000 0 500 9000 10 0 5 2000 0 0") === None)
-  }
-
-  test("steal_pct: the live /proc/stat read parses and a spanned window yields a sane percentage") {
-    // Attribution-only receipt (scaladoc on stealPct): on a host
-    // without /proc/stat the bench prints null and this test vacuously
-    // passes — the contract is "never wrong", not "always present".
-    Bench.readProcStat() match {
-      case None => assert(!new java.io.File("/proc/stat").canRead)
-      case Some(line0) =>
-        assert(line0.startsWith("cpu "))
-        Thread.sleep(120) // aggregate jiffies across all cpus tick well within this
-        val p = for {
-          a <- Some(line0); b <- Bench.readProcStat(); v <- Bench.stealPct(a, b)
-        } yield v
-        assert(p.isDefined, "spanned live window must produce a reading")
-        assert(p.get >= 0.0 && p.get <= 100.0)
+  test("SPARK_GRAFT_CPUS parse rejects non-integers and values outside [1, 999]") {
+    assert(Bench.sparkCpus(" 8 ") === 8)
+    assert(Bench.sparkCpus("999") === 999)
+    Seq("", "four", "1.5", "0", "1000", "-2").foreach { raw =>
+      intercept[IllegalArgumentException](Bench.sparkCpus(raw))
     }
   }
 
@@ -272,283 +117,6 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(!Bench.memoDrift("q35_json_extract", Seq(1.2)))
   }
 
-  test("band classifier replays every recorded BANDS.json reading to its adjudicated class (VERDICT r17 #1)") {
-    // The read-order rules are now EXECUTABLE (graft.Bands.classify,
-    // printed as the bench line's "band_verdict"); this replays every
-    // r13–r17 ledger row through the classifier and asserts it
-    // reproduces the hand-adjudicated verdict CLASS: rows recorded
-    // quiet classify "quiet", every flagged row classifies non-quiet.
-    // (Exact non-quiet labels may differ where the recorded evidence
-    // underdetermines the class — r15 drive 6's steady-contention was
-    // adjudicated from bench_detail the ledger row doesn't carry — so
-    // the contract is the quiet/non-quiet boundary plus vocabulary.)
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val bands = Bands.load().getOrElse(fail("BANDS.json did not load"))
-    val src = scala.io.Source.fromFile("BANDS.json", "UTF-8")
-    val root = try JsonMethods.parse(src.mkString) finally src.close()
-    def optPair(v: JValue): Seq[Option[Double]] = v match {
-      case JArray(xs) => xs.map {
-        case JNull => None
-        case x => Some(x.values.toString.toDouble)
-      }
-      case _ => Seq(None, None)
-    }
-    val vocabulary = Set("quiet", "off-profile", "steady-contention",
-      "contended-start", "mid-drive-transient", "tail-contention")
-    val JArray(readings) = root \ "readings"
-    assert(readings.size >= 26, s"expected the full r13+ ledger, got ${readings.size}")
-    def optScalar(v: JValue): Option[Double] = v match {
-      case JNull | JNothing => None
-      case x => Some(x.values.toString.toDouble)
-    }
-    for (r <- readings) {
-      val JString(round) = r \ "round"
-      val drive = (r \ "drive").values.toString
-      val JString(prof) = r \ "profile"
-      val JString(recorded) = r \ "verdict"
-      val reading = Bands.Reading(
-        hostCal = optPair(r \ "host_cal"),
-        parKernel = optPair(r \ "par_kernel_s"),
-        parRatio = optPair(r \ "par_ratio"),
-        repSpreadMed = optPair(r \ "rep_spread").headOption.flatten,
-        rep1Med = optPair(r \ "rep1_infl").headOption.flatten,
-        total = (r \ "total_s").values.toString.toDouble,
-        catalog = (r \ "catalog").values.toString.toInt,
-        profileHint = Some(prof),
-        nInflated = optScalar(r \ "n_inflated").map(_.toInt),
-        tailS = optScalar(r \ "tail_s"))
-      val (verdict, p) = Bands.classify(bands, reading)
-      assert(vocabulary.contains(verdict), s"$round/$drive: $verdict not in vocabulary")
-      assert(p === prof, s"$round/$drive: classified profile $p, ledger says $prof")
-      val recordedQuiet = recorded.startsWith("quiet")
-      assert((verdict == "quiet") === recordedQuiet,
-        s"$round drive $drive: classifier says $verdict, ledger verdict '$recorded'")
-      // rows adjudicated through the tail band must reproduce EXACTLY
-      // (the r19 class the tail_s field exists to name)
-      if (recorded.startsWith("tail-contention"))
-        assert(verdict === "tail-contention",
-          s"$round drive $drive: expected tail-contention, classifier says $verdict")
-    }
-  }
-
-  test("band classifier mutation drills: each non-quiet class fires on its signature (VERDICT r17 #1)") {
-    val bands = Bands.load().getOrElse(fail("BANDS.json did not load"))
-    // baseline: r17 drive 1's quiet reading
-    val quiet = Bands.Reading(
-      hostCal = Seq(Some(1.021), Some(1.025)),
-      parKernel = Seq(Some(1.174), Some(1.103)),
-      parRatio = Seq(Some(1.15), Some(1.08)),
-      repSpreadMed = Some(1.36), rep1Med = Some(1.29),
-      total = 179.26, catalog = 215)
-    assert(Bands.classify(bands, quiet) === ("quiet", "B"))
-    // drill 1 (the judge's prescribed one): drive 2's par ratios and
-    // total grafted onto the quiet reading → contended-start
-    assert(Bands.classify(bands, quiet.copy(
-      parRatio = Seq(Some(2.09), Some(1.06)), total = 191.041))
-      === ("contended-start", "B"))
-    // drill 2: both endpoints elevated → steady-contention (r16 d4)
-    assert(Bands.classify(bands, quiet.copy(
-      parRatio = Seq(Some(1.28), Some(1.5)), total = 217.04))
-      === ("steady-contention", "B"))
-    // drill 3: kernels+ratios quiet, rep1 med above band → mid-drive
-    // transient (the BENCH_r16/r17-artifact class)
-    assert(Bands.classify(bands, quiet.copy(
-      rep1Med = Some(1.40), total = 267.141))
-      === ("mid-drive-transient", "B"))
-    // drill 4: an elevated total that NO recorded field explains is
-    // still flagged (r15 drive 5's signature)
-    assert(Bands.classify(bands, quiet.copy(total = 230.0))
-      === ("mid-drive-transient", "B"))
-    // drill 5: BOTH kernels outside every profile band → off-profile
-    // (the r16 host-shift lesson: a new profile, not a regression)
-    assert(Bands.classify(bands, quiet.copy(
-      hostCal = Seq(Some(0.5), Some(0.5))))._1 === "off-profile")
-    assert(Bands.classify(bands, quiet.copy(
-      hostCal = Seq(Some(1.5), Some(1.6))))._1 === "off-profile")
-    // drill 5b (r18 drive 2's signature): ONE kernel above an
-    // otherwise-matching band is endpoint contention, not a profile
-    // shift — the profile holds and the contention rules classify.
-    // With drive 2's own par ratios (both out of core): steady.
-    assert(Bands.classify(bands, quiet.copy(
-      hostCal = Seq(Some(1.503), Some(1.037)),
-      parRatio = Seq(Some(1.27), Some(1.68)), total = 243.497))
-      === ("steady-contention", "B"))
-    // same kernel shape with QUIET ratios and an elevated total: the
-    // elevated kernel endpoint is the contended-start evidence
-    assert(Bands.classify(bands, quiet.copy(
-      hostCal = Seq(Some(1.503), Some(1.037)),
-      parRatio = Seq(Some(1.1), Some(1.1)), total = 243.497))
-      === ("contended-start", "B"))
-    // and with a QUIET total: endpoint transient, not a verdict
-    assert(Bands.classify(bands, quiet.copy(
-      hostCal = Seq(Some(1.2), Some(1.037)),
-      parRatio = Seq(Some(1.1), Some(1.1)), total = 179.0))
-      === ("quiet", "B"))
-    // drill 6: a lone elevated endpoint with a QUIET total stays an
-    // endpoint transient, not a verdict (r16 drive 6 precedent)
-    assert(Bands.classify(bands, quiet.copy(
-      parRatio = Seq(Some(1.28), Some(1.13)), total = 175.53))
-      === ("quiet", "B"))
-    // drill 7: n_inflated at/above the BANDS threshold → steady
-    // contention once per-query medians exist; below or unavailable,
-    // no effect (threshold is Int.MaxValue until medians land)
-    val withN = quiet.copy(nInflated = Some(Int.MaxValue - 1))
-    // can't exceed MaxValue — use the loaded threshold if finite
-    if (bands.nInflatedContentionMin != Int.MaxValue) {
-      assert(Bands.classify(bands, quiet.copy(
-        nInflated = Some(bands.nInflatedContentionMin)))._1 === "steady-contention")
-      assert(Bands.classify(bands, quiet.copy(
-        nInflated = Some(bands.nInflatedContentionMin - 1)))._1 === "quiet")
-    } else {
-      assert(Bands.classify(bands, withN)._1 === "quiet")
-    }
-  }
-
-  test("tail-contention drills: tail_s above band fires on its own field, yields to headline evidence (VERDICT r18 #2)") {
-    val bands = Bands.load().getOrElse(fail("BANDS.json did not load"))
-    // baseline: r19 drive 3's fully-quiet reading (tail at the floor)
-    val quiet = Bands.Reading(
-      hostCal = Seq(Some(0.993), Some(1.043)),
-      parKernel = Seq(Some(1.149), Some(1.135)),
-      parRatio = Seq(Some(1.16), Some(1.09)),
-      repSpreadMed = Some(1.3), rep1Med = Some(1.15),
-      total = 176.362, catalog = 215, nInflated = Some(0),
-      tailS = Some(136.34))
-    assert(Bands.classify(bands, quiet) === ("quiet", "B"))
-    // drill 1 (r19 drive 1's signature): headline fields quiet, tail
-    // above the band — named from its own field, not by elimination
-    assert(Bands.classify(bands, quiet.copy(
-      tailS = Some(148.35), total = 188.989))
-      === ("tail-contention", "B"))
-    // drill 2: same tail with the total still inside the cluster —
-    // the band adjudicates the tail independently of the total
-    assert(Bands.classify(bands, quiet.copy(tailS = Some(142.0)))
-      === ("tail-contention", "B"))
-    // drill 3: unrecorded tail contributes no evidence — an elevated
-    // total falls through to the unexplained-total rule (pre-r19 rows)
-    assert(Bands.classify(bands, quiet.copy(tailS = None, total = 189.0))
-      === ("mid-drive-transient", "B"))
-    // drill 4: headline evidence NOT quiet takes precedence — rep1
-    // med above its band names the mid-drive transient even with the
-    // tail also elevated (the tail rule is the quiet-headline class)
-    assert(Bands.classify(bands, quiet.copy(
-      rep1Med = Some(1.40), tailS = Some(148.35), total = 189.0))
-      === ("mid-drive-transient", "B"))
-    // drill 5: at the band hi edge exactly is NOT above (strict >)
-    assert(Bands.classify(bands, quiet.copy(tailS = Some(141.0)))
-      === ("quiet", "B"))
-    // drill 6: a profile without a recorded tail band never fires the
-    // rule (profile A predates per-query/tail detail retention)
-    val aProfile = bands.profiles.find(_.name == "A").getOrElse(fail("A missing"))
-    assert(aProfile.tailQuiet === None)
-    assert(Bands.classify(bands, Bands.Reading(
-      hostCal = Seq(Some(0.88), Some(0.9)),
-      parKernel = Seq(None, None), parRatio = Seq(Some(1.1), Some(1.1)),
-      repSpreadMed = Some(1.3), rep1Med = Some(1.2),
-      total = 210.0, catalog = 215, tailS = Some(500.0)))
-      === ("quiet", "A"))
-  }
-
-  test("partial kernel match refuses cross-profile-ambiguous readings (ADVICE r18)") {
-    // An above-band endpoint that falls INSIDE another profile's band
-    // makes the reading ambiguous: host_cal [0.90, 1.05] is either a
-    // contended A host or a B host with one fast endpoint — guessing A
-    // would compare the total against A's much higher quiet cluster
-    // and could print quiet on a contended drive. Ambiguity → None
-    // (off-profile), never a guess.
-    val a = Bands.Profile("A", 0.71, 0.94, Map(215 -> (205.1, 216.1)), Map.empty)
-    val b = Bands.Profile("B", 0.99, 1.12, Map(215 -> (174.9, 182.7)), Map.empty)
-    val bands = Bands.BandSet(Seq(a, b), parRatioQuietHi = 1.25,
-      repSpreadContentionMed = 1.7, rep1MedQuietHi = 1.29,
-      nInflatedContentionMin = 5)
-    // ambiguous: 1.05 is above A's hi AND inside B's band
-    assert(Bands.partialMatchAbove(bands, Seq(Some(0.90), Some(1.05))) === None)
-    // the classifier surfaces it as off-profile (totals not comparable)
-    val ambiguous = Bands.Reading(
-      hostCal = Seq(Some(0.90), Some(1.05)),
-      parKernel = Seq(None, None), parRatio = Seq(Some(1.1), Some(1.1)),
-      repSpreadMed = Some(1.3), rep1Med = Some(1.1),
-      total = 200.0, catalog = 215)
-    assert(Bands.classify(bands, ambiguous)._1 === "off-profile")
-    // NOT ambiguous: 1.40 is above BOTH bands — endpoint contention on
-    // A, the r18-drive-2 class, classifies through the contention rules
-    assert(Bands.partialMatchAbove(bands, Seq(Some(0.90), Some(1.40)))
-      .map(_.name) === Some("A"))
-    // the real file's r18 drive 2 adjudication is unaffected: 1.503 is
-    // above B's band and inside no other profile's
-    val real = Bands.load().getOrElse(fail("BANDS.json did not load"))
-    assert(Bands.partialMatchAbove(real, Seq(Some(1.503), Some(1.037)))
-      .map(_.name) === Some("B"))
-  }
-
-  test("band file load distinguishes missing from present-but-corrupt (ADVICE r18)") {
-    // NonFatal-to-None mapped both cases to a silent "no-bands"; a bad
-    // edit to the checked-in file must be visible on the drive itself.
-    assert(Bands.loadResult("target/does_not_exist_bands.json") === Bands.Missing)
-    val tmp = java.nio.file.Files.createTempFile("graft_badbands_", ".json")
-    java.nio.file.Files.write(tmp, "{\"profiles\": {\"B\": {".getBytes("UTF-8"))
-    Bands.loadResult(tmp.toString) match {
-      case Bands.Unreadable(detail) => assert(detail.nonEmpty)
-      case other => fail(s"corrupt band file loaded as $other")
-    }
-    // the Option view folds the corrupt case to None while the file
-    // still exists (deleting first would re-test the missing case)
-    assert(Bands.load(tmp.toString) === None)
-    java.nio.file.Files.delete(tmp)
-    // the checked-in file loads; the Option view agrees on the rest
-    assert(Bands.loadResult().isInstanceOf[Bands.Loaded])
-    assert(Bands.load("target/does_not_exist_bands.json") === None)
-    assert(Bands.load().isDefined)
-    // the unreadable verdict literal fits the certified frame slot
-    assert("bands-unreadable".length <= 19)
-  }
-
-  test("headline quiet medians cover exactly the pinned headline set (VERDICT r17 #2)") {
-    // the per-query medians recorded for profile B must track the
-    // headline pin one-to-one: a rotation that forgets to re-derive
-    // them would silently exempt the new member from n_inflated (and
-    // count a ghost for the old one)
-    val bands = Bands.load().getOrElse(fail("BANDS.json did not load"))
-    val b = bands.profiles.find(_.name == "B").getOrElse(fail("profile B missing"))
-    assert(b.headlineQuietMedians.keySet === Bench.headline.toSet,
-      "headline_quiet_median_s drifted from the headline pin — re-derive from quiet drives")
-    assert(b.headlineQuietMedians.values.forall(v => v > 0 && v < 100))
-    // the classifier threshold is recorded and sane relative to the
-    // 35-query pin
-    assert(bands.nInflatedContentionMin >= 2 &&
-      bands.nInflatedContentionMin <= Bench.headline.size)
-    // profile A predates per-query detail retention: no medians, and
-    // n_inflated must stay -1 there rather than counting against B's
-    val a = bands.profiles.find(_.name == "A").getOrElse(fail("profile A missing"))
-    assert(a.headlineQuietMedians.isEmpty)
-    // end-to-end validation pinned from the seeding receipts: the
-    // shipped r17 contended artifact counts 9 inflated headliners
-    // against these medians and classifies steady-contention even
-    // though its par ratios are quiet — the exact class VERDICT r17
-    // #2 asked this field to catch
-    val r17Artifact = Bands.Reading(
-      hostCal = Seq(Some(1.097), Some(1.06)),
-      parKernel = Seq(Some(1.31), Some(1.211)),
-      parRatio = Seq(Some(1.19), Some(1.14)),
-      repSpreadMed = Some(1.44), rep1Med = Some(1.4),
-      total = 267.141, catalog = 215, nInflated = Some(9))
-    assert(Bands.classify(bands, r17Artifact) === ("steady-contention", "B"))
-  }
-
-  test("n_inflated counter: factor, floor, and missing-median semantics are frozen (VERDICT r17 #2)") {
-    assert(Bench.NInflatedFactor === 1.5 && Bench.NInflatedFloorSec === 0.3,
-      "frozen: changing either re-bases every future n_inflated reading")
-    val medians = Map("a" -> 2.0, "b" -> 0.1, "c" -> 1.0)
-    // a: 3.1 > 1.5×2.0 → counts; b: sub-floor median → never counts
-    // even at 10×; c: 1.4 < 1.5× → not inflated; d: no median → skip
-    assert(Bench.nInflatedCount(medians,
-      Seq("a" -> 3.1, "b" -> 1.0, "c" -> 1.4, "d" -> 99.0)) === 1)
-    // boundary: exactly 1.5× is NOT inflated (strict >)
-    assert(Bench.nInflatedCount(medians, Seq("a" -> 3.0)) === 0)
-    assert(Bench.nInflatedCount(Map.empty, Seq("a" -> 3.0)) === 0)
-  }
-
   test("lowerMed is the shared lower-median used by every printed statistic") {
     assert(Bench.lowerMed(Seq(3.0, 1.0, 2.0)) === 2.0)
     assert(Bench.lowerMed(Seq(1.0, 4.0)) === 1.0) // even count → lower
@@ -556,134 +124,4 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.lowerMed(Nil, 0.0) === 0.0)
   }
 
-  test("printed band fields: profile names are sanitized to the certified width") {
-    assert(Bench.sanitizeProfileName("B") === "B")
-    assert(Bench.sanitizeProfileName("a profile \"name\" that is long") === "aprofilenamethat")
-    assert(Bench.sanitizeProfileName("\"\\") === "unknown")
-    // every verdict literal fits the frame's certified 19-char slot
-    val verdicts = Seq("quiet", "off-profile", "steady-contention",
-      "contended-start", "mid-drive-transient", "no-bands", "bands-unreadable")
-    assert(verdicts.forall(_.length <= 19))
-    assert(verdicts.forall(_.matches("[a-z-]+")))
-  }
-
-  test("BANDS.json parses and its calibration bands are ordered and sane (VERDICT r16 #2)") {
-    // The adjudication bands moved from four rounds of SCALE.md prose
-    // into one machine-readable artifact; this smoke keeps that file
-    // loadable and internally consistent so a future band update (they
-    // EVOLVE — the r16 host-profile shift revised them mid-round)
-    // cannot ship a malformed or inverted band. Consistency only, not
-    // policy: the bands' VALUES are maintained by hand per drive.
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val src = scala.io.Source.fromFile("BANDS.json", "UTF-8")
-    val root = try JsonMethods.parse(src.mkString) finally src.close()
-    def lohi(v: JValue, what: String): (Double, Double) = v match {
-      case JArray(List(a, b)) =>
-        val (lo, hi) = (a.values.toString.toDouble, b.values.toString.toDouble)
-        assert(lo > 0 && lo < hi, s"$what band [$lo, $hi] must be 0 < lo < hi")
-        (lo, hi)
-      case other => fail(s"$what must be a 2-element array, got $other")
-    }
-    val profiles = (root \ "profiles").asInstanceOf[JObject].obj
-    assert(profiles.nonEmpty)
-    val profileNames = profiles.map(_._1).toSet
-    for ((name, p) <- profiles) {
-      lohi(p \ "host_cal_s", s"profile $name host_cal")
-      lohi(p \ "quiet_cluster_total_s", s"profile $name quiet cluster")
-      if ((p \ "tail_quiet_s") != JNothing)
-        lohi(p \ "tail_quiet_s", s"profile $name tail band")
-      val JInt(n) = p \ "n_host_cal_readings"
-      assert(n > 0, s"profile $name n_host_cal_readings")
-    }
-    // the tail band exists where the tail rule is live (profile B,
-    // seeded r19) and its hi sits below the quiet cluster's lo — a
-    // tail alone can never exceed a quiet TOTAL
-    val bTail = lohi((root \ "profiles" \ "B") \ "tail_quiet_s", "B tail band")
-    val bCluster = lohi((root \ "profiles" \ "B") \ "quiet_cluster_total_s", "B cluster")
-    assert(bTail._2 < bCluster._1, "tail band hi must sit below the quiet cluster lo")
-    val x = root \ "cross_profile"
-    lohi(x \ "par_ratio_quiet_core", "par_ratio_quiet_core")
-    lohi(x \ "rep_spread_quiet_med", "rep_spread_quiet_med")
-    val (r1lo, r1hi) = lohi(x \ "rep1_infl_quiet_med", "rep1_infl_quiet_med")
-    lohi(x \ "rep1_infl_quiet_max", "rep1_infl_quiet_max")
-    // rep-1 inflation below 1 would mean rep-1 ran FASTER than the
-    // lower-median — a sign of a transcription error, not a band
-    assert(r1lo >= 1.0 && r1hi < 10, s"rep1_infl med band [$r1lo, $r1hi]")
-    // the floor is the comparability contract with the Bench constant
-    val JDouble(floor) = root \ "rep1_infl_floor_sec"
-    assert(floor == Bench.Rep1InflFloorSec,
-      "BANDS.json floor must track Bench.Rep1InflFloorSec (changing it re-bases every reading)")
-    // readings: every row names a known profile, a round, a positive
-    // total, and carries the full uniform key set (null = unrecorded);
-    // recorded pair elements are positive and sane
-    val JArray(readings) = root \ "readings"
-    assert(readings.nonEmpty)
-    def pairVals(v: JValue): Seq[Double] = v match {
-      case JArray(xs) => xs.collect { case x if x != JNull =>
-        x.values.toString.toDouble }
-      case JNull | JNothing => Seq.empty
-      case other => fail(s"pair field must be a 2-array or null, got $other")
-    }
-    // band-coverage (the review catch this test originally missed):
-    // a QUIET reading must sit inside its own profile's kernel band
-    // and — for catalog-215 rows, the only ones the per-profile quiet
-    // clusters describe — inside the profile's quiet-cluster range.
-    // This makes "bands ... update to cover them" (the file's own
-    // maintenance contract) mechanically checked instead of advertised.
-    val profBands = profiles.map { case (name, p) =>
-      name -> (lohi(p \ "host_cal_s", s"$name cal"),
-               lohi(p \ "quiet_cluster_total_s", s"$name cluster")) }.toMap
-    val profTail = profiles.map { case (name, p) =>
-      name -> (if ((p \ "tail_quiet_s") != JNothing)
-        Some(lohi(p \ "tail_quiet_s", s"$name tail")) else None) }.toMap
-    val uniformKeys = Seq("host_cal", "par_kernel_s", "par_ratio",
-      "rep_spread", "rep1_infl")
-    for (r <- readings) {
-      val JString(prof) = r \ "profile"
-      assert(profileNames.contains(prof), s"reading references unknown profile $prof")
-      val JString(round) = r \ "round"
-      assert(round.matches("r\\d+"), round)
-      val total = (r \ "total_s").values.toString.toDouble
-      assert(total > 0 && total < 10000, s"$round total $total")
-      for (k <- uniformKeys) {
-        assert((r \ k) != JNothing, s"$round/$prof reading missing key $k")
-        pairVals(r \ k).foreach(v =>
-          assert(v > 0 && v < 1000, s"$round $k value $v out of sane range"))
-      }
-      val JString(verdict) = r \ "verdict"
-      // tail_s, where recorded, is a positive sub-total number of
-      // seconds (scalar — not part of the uniform pair-key set, which
-      // predates it) — and only meaningful in the catalog-215/35-pin
-      // era the tail band was seeded in (tail arithmetic moves with
-      // either; a different-era row here means the band needs
-      // re-deriving, per the tail_quiet_note's era caveat)
-      (r \ "tail_s") match {
-        case JNull | JNothing => ()
-        case x =>
-          val v = x.values.toString.toDouble
-          assert(v > 0 && v < total, s"$round tail_s $v vs total $total")
-          val JInt(cat) = r \ "catalog"
-          assert(cat == 215,
-            s"$round records tail_s at catalog $cat — the tail band is seeded for the 215-era; re-derive it")
-      }
-      if (verdict.startsWith("quiet")) {
-        val ((calLo, calHi), (cluLo, cluHi)) = profBands(prof)
-        pairVals(r \ "host_cal").foreach(v => assert(v >= calLo && v <= calHi,
-          s"$round quiet reading host_cal $v outside profile $prof band [$calLo, $calHi]"))
-        val JInt(cat) = r \ "catalog"
-        if (cat == 215) assert(total >= cluLo && total <= cluHi,
-          s"$round quiet catalog-215 total $total outside profile $prof quiet cluster [$cluLo, $cluHi]")
-        // a quiet reading with a recorded tail must sit inside the
-        // profile's tail band (same coverage contract as the others:
-        // an honest quiet outlier widens the band in the SAME commit)
-        for (((tLo, tHi)) <- profTail(prof); x <- Option(r \ "tail_s")
-             if x != JNull && x != JNothing) {
-          val v = x.values.toString.toDouble
-          assert(v >= tLo && v <= tHi,
-            s"$round quiet reading tail_s $v outside profile $prof tail band [$tLo, $tHi]")
-        }
-      }
-    }
-  }
 }

@@ -64,12 +64,13 @@ class ProbeSmokeSpec extends SparkSpec {
   }
 
   test("IngestBlast regime: two-sided family candidates are quadratic; corpus cap keeps output") {
-    // The r14 cross-store regime at smoke scale, on the probe's exact
-    // shape (the real longest sf0.001 doc, K mutated copies on BOTH
-    // sides): the band join's candidate law is (K_in)·(K_c) for the
-    // family — the quadratic pressure IngestBlast measures is real —
+    // The r14 cross-store regime at smoke scale, on the retired
+    // IngestBlast probe's shape (the real longest sf0.001 doc, K mutated
+    // copies on BOTH sides): the band join's candidate law is
+    // (K_in)·(K_c) for the family — the quadratic pressure is real —
     // and the corpus bucket cap must keep the verdicts identical (the
-    // structural property behind the 29 s → 1.8 s K=1000 receipt).
+    // structural property behind the 29 s → 1.8 s K=1000 receipt,
+    // SCALE.md "Round-14, session 3").
     val docs = Tables.documents(spark, Sf0001).select(col("doc_id"), col("text"))
     val body = docs.orderBy(length(col("text")).desc).limit(1)
       .select(col("text")).first().getString(0)
