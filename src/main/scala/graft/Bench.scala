@@ -184,8 +184,8 @@ object Bench {
     * once and validated (review r15) — a bare toInt at each use site
     * would die in an unexplained NumberFormatException before any
     * descriptive require fires, and the ≤ 999 bound is what the
-    * printed line's certified `cpus` width allows. Shared with
-    * `tools.ProfileQ` so both run at the same validated parallelism.
+    * printed line's certified `cpus` width allows. Shared with Verify
+    * and `graft.tools` so all run at the same validated parallelism.
     */
   private[graft] def sparkCpus(raw: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): Int = {
     val n = scala.util.Try(raw.trim.toInt).getOrElse(

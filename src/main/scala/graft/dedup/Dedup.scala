@@ -572,20 +572,30 @@ object Dedup {
     // Min-propagation moves a label one hop per round, so a component
     // with diameter > maxIter won't converge. Instead of handing back
     // wrong cluster_ids, fall through to the O(log n) star algorithm —
-    // same output contract, immune to diameter.
+    // immune to diameter.
     nbrs.unpersist(blocking = false)
-    if (!converged) {
+    val labels = if (converged) {
+      val rows = state.map { case (v, (_, l, _)) =>
+        if (isString) Row(Option(v).map(_.toString).orNull, Option(l).map(_.toString).orNull)
+        else Row(v, l)
+      }
+      spark.createDataFrame(rows, StructType(Seq(node.copy(name = "v"), node.copy(name = "label"))))
+    } else {
       state.unpersist(blocking = false)
-      return connectedComponentsStars(pairs, aCol, bCol)
-    }
-    val rows = state.map { case (v, (_, l, _)) =>
-      if (isString) Row(Option(v).map(_.toString).orNull, Option(l).map(_.toString).orNull)
-      else Row(v, l)
+      // The stars see only non-NULL edges between distinct ids, so the
+      // nodes they drop take this path's labels back: the NULL node
+      // min(its non-NULL neighbours), a node whose only edges are
+      // self-loops or NULL endpoints itself.
+      val stars = connectedComponentsStars(pairs, aCol, bCol)
+      edges.groupBy(col("src").as("v")).agg(min(col("dst")).as("m"))
+        .join(stars, col("v") === stars("doc_id"), "left")
+        .select(col("v"), when(col("v").isNull, col("m"))
+          .otherwise(coalesce(col("cluster_id"), col("v"))).as("label"))
     }
     // cluster_size as a window count, not groupBy+join-back (r20): one
     // partitionBy(label) exchange; the oracle side uses exactly this
     // window formulation.
-    spark.createDataFrame(rows, StructType(Seq(node.copy(name = "v"), node.copy(name = "label"))))
+    labels
       .withColumn("cluster_size", count(lit(1)).over(Window.partitionBy(col("label"))))
       .select(col("v").as("doc_id"), col("label").as("cluster_id"), col("cluster_size"))
   }
@@ -794,13 +804,14 @@ object Dedup {
     * Returns the kept incoming rows (doc_id only, dd07's contract).
     *
     * `corpusBucketCap` (default off — exact candidates): the TWO-SIDED
-    * face of the near-identical boilerplate wall (IngestBlast probe,
-    * SCALE.md r14). The candidate set is bIn ⋈ bC per (band, band_key),
-    * so K_in incoming copies of a page whose K_c mutated copies sit in
-    * the store emit K_in × K_c candidates. The shipped streaming
-    * composition curates the store (families collapse to ~one survivor
-    * before entering), but the corpus argument here is ARBITRARY — a
-    * raw or seeded store re-opens the quadratic. With the cap on, each
+    * face of the near-identical boilerplate wall (measured by the
+    * retired IngestBlast probe: SCALE.md "Round-14, session 3"). The
+    * candidate set is bIn ⋈ bC per (band, band_key), so K_in incoming
+    * copies of a page whose K_c mutated copies sit in the store emit
+    * K_in × K_c candidates. The shipped streaming composition curates
+    * the store (families collapse to ~one survivor before entering),
+    * but the corpus argument here is ARBITRARY — a raw or seeded store
+    * re-opens the quadratic. With the cap on, each
     * corpus band bucket contributes at most `corpusBucketCap` members
     * (the smallest c_doc ids — deterministic), bounding candidates at
     * K_in × bands × cap. The incoming side is never capped: every
@@ -914,9 +925,10 @@ object Dedup {
     // ONE tokenize+md5+shingle pass, materialized (VERDICT r12 #4):
     // the index feeds FOUR subtrees — minhash signatures (candidate
     // generation), both sides of the verification join, and the
-    // per-doc size agg. Measured NEUTRAL at sf0.1 (ProfileDd14:
-    // exchange reuse was already deduplicating the distinct's shuffle
-    // across the subtrees), but the single-pass property is now
+    // per-doc size agg. Measured NEUTRAL at sf0.1 (the retired
+    // ProfileDd14 probe, SCALE.md "Round-13: steady-state": exchange
+    // reuse was already deduplicating the distinct's shuffle across
+    // the subtrees), but the single-pass property is now
     // structural rather than an optimizer artifact — ReuseExchange
     // depends on plan-fragment identity that a version bump or a
     // caller-side alias can silently break, and at 100 TB a second

@@ -116,6 +116,10 @@ object DedupQueries {
       |  WHERE len(toks) >= 3
       |)""".stripMargin
 
+  // The MinHash oracles (dd04/dd14/dd15/dd16) write `sig` MATERIALIZED,
+  // and `inv` too where more than `sig` reads it: both sides of all 8
+  // band joins read `sig`, and DuckDB 1.0 inlines a plain CTE at every
+  // read, recomputing the signatures 16 times.
   private val dd04Sql: String = {
     val bands = 8; val rowsPerBand = 4
     val coeffs = Dedup.minHashCoeffs(bands * rowsPerBand)
@@ -130,7 +134,7 @@ object DedupQueries {
         s"  FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND $conds"
     }.mkString("\n  UNION\n")
     s"""WITH $shingleCteBody, inv AS (SELECT doc_id, unnest(sh) AS h FROM sh),
-       |sig AS (
+       |sig AS MATERIALIZED (
        |  SELECT doc_id,
        |$mins
        |  FROM inv GROUP BY doc_id
@@ -389,9 +393,9 @@ object DedupQueries {
         s"  FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND $conds"
     }.mkString("\n  UNION ALL\n")
     s"""WITH RECURSIVE $shingleCteBody,
-       | inv AS (SELECT doc_id, unnest(sh) AS h FROM sh),
+       | inv AS MATERIALIZED (SELECT doc_id, unnest(sh) AS h FROM sh),
        | sizes AS (SELECT doc_id, len(sh) AS n_sh FROM sh),
-       | sig AS (
+       | sig AS MATERIALIZED (
        |  SELECT doc_id,
        |$mins
        |  FROM inv GROUP BY doc_id
@@ -476,7 +480,7 @@ object DedupQueries {
         s"  FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND $conds"
     }.mkString("\n  UNION ALL\n")
     s"""WITH $shingleCteBody,
-       | inv AS (SELECT doc_id, unnest(sh) AS h FROM sh),
+       | inv AS MATERIALIZED (SELECT doc_id, unnest(sh) AS h FROM sh),
        | sizes AS (SELECT doc_id, len(sh) AS n_sh FROM sh),
        | co AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
@@ -487,7 +491,7 @@ object DedupQueries {
        |  JOIN sizes na ON doc_a = na.doc_id
        |  JOIN sizes nb ON doc_b = nb.doc_id
        |  WHERE common / CAST(na.n_sh + nb.n_sh - common AS DOUBLE) >= 0.5
-       | ), sig AS (
+       | ), sig AS MATERIALIZED (
        |  SELECT doc_id,
        |$mins
        |  FROM inv GROUP BY doc_id
@@ -530,10 +534,11 @@ object DedupQueries {
     dd16Chain(s, dir, Int.MaxValue)
 
   /** dd16's exact chain with the corpus bucket cap ENGAGED
-    * (corpusBucketCap = 8) — the r14 cross-store mitigation (IngestBlast,
-    * SCALE.md r14 session 3) under the driver's hash gate instead of
-    * spec-only coverage (VERDICT r14 #1, the one judge-authorized
-    * catalog addition for r15; everything else stays frozen).
+    * (corpusBucketCap = 8) — the r14 cross-store mitigation (the retired
+    * IngestBlast probe, SCALE.md "Round-14, session 3") under the
+    * driver's hash gate instead of spec-only coverage (VERDICT r14 #1,
+    * the one judge-authorized catalog addition for r15; everything
+    * else stays frozen).
     *
     * Why the oracle is dd16's SQL UNCHANGED: the cap only changes which
     * CORPUS members a band bucket contributes as candidates, and only
@@ -575,9 +580,9 @@ object DedupQueries {
         s"  FROM sig a JOIN sig b ON a.doc_id < 400 AND b.doc_id >= 400 AND $conds"
     }.mkString("\n  UNION ALL\n")
     s"""WITH $shingleCteBody,
-       | inv AS (SELECT doc_id, unnest(sh) AS h FROM sh),
+       | inv AS MATERIALIZED (SELECT doc_id, unnest(sh) AS h FROM sh),
        | sizes AS (SELECT doc_id, len(sh) AS n_sh FROM sh),
-       | sig AS (
+       | sig AS MATERIALIZED (
        |  SELECT doc_id,
        |$mins
        |  FROM inv GROUP BY doc_id

@@ -66,12 +66,14 @@ object Extended13Queries {
          |    FROM edges e JOIN d${k - 1} p ON p.node = e.u
          |    WHERE p.dist IS NOT NULL
          |    GROUP BY 1) n USING (node))""".stripMargin
+    // edges is read by every round: MATERIALIZED, or DuckDB 1.0
+    // re-derives it from lineitem at each read
     """WITH half AS (
       |  SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
       |  FROM lineitem a JOIN lineitem b
       |    ON a.l_orderkey = b.l_orderkey AND a.l_suppkey < b.l_suppkey
       |  WHERE a.l_suppkey < 100 AND b.l_suppkey < 100),
-      |edges AS (
+      |edges AS MATERIALIZED (
       |  SELECT u, v FROM half UNION ALL SELECT v AS u, u AS v FROM half),
       |d0 AS (
       |  SELECT node, CASE WHEN node = 1 THEN 0 END AS dist

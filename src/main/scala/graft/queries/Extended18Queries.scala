@@ -141,6 +141,9 @@ object Extended18Queries {
   }
 
   private val q103Sql = {
+    // each score step reads its input three times (histogram, count,
+    // join), so rfm and every step are MATERIALIZED: DuckDB 1.0 inlines
+    // a plain CTE at every read, compounding the chain 3^3
     def score(in: String, metric: String, out: String, invert: Boolean) = {
       val sc = if (invert) "6 - q5" else "q5"
       s"""h_$metric AS (
@@ -152,12 +155,12 @@ object Extended18Queries {
          |      / CAST((SELECT count(*) FROM $in) AS DOUBLE)), 5) AS INTEGER)
          |    AS q5
          |  FROM h_$metric),
-         |$out AS (
+         |$out AS MATERIALIZED (
          |  SELECT i.*, $sc AS ${metric}_s
          |  FROM $in i JOIN c_$metric c ON i.$metric = c.v)""".stripMargin
     }
     """WITH maxd AS (SELECT max(o_orderdate) AS maxd FROM orders),
-      |rfm AS (
+      |rfm AS MATERIALIZED (
       |  SELECT o_custkey,
       |    CAST(date_diff('day', max(o_orderdate), (SELECT maxd FROM maxd))
       |      AS BIGINT) AS recency,

@@ -287,7 +287,8 @@ object Extended4Queries {
     // shuffle in the query carries 8-byte keys, not 5-gram strings.
     // Positions exploded + per-row slice, NOT explode(transform(...)):
     // the materializing shape is ~2.5× slower per giant-doc token and
-    // OOMs ~3× earlier (GramShapeAB, SCALE.md r12 session 4).
+    // OOMs ~3× earlier (the retired GramShapeAB probe, SCALE.md
+    // "Round-12, session 4").
     val sh = Tables.documents(s, dir)
       .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 5)
@@ -814,10 +815,12 @@ object Extended4Queries {
          |    FROM e JOIN od USING (src) JOIN r${i - 1} r ON r.node = e.src
          |    GROUP BY e.dst) c USING (node))""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS (
+    // e, nodes and od are read by every iteration: MATERIALIZED, or
+    // DuckDB 1.0 re-derives them from lineitem at each read
+    s"""WITH e AS MATERIALIZED (
        |  SELECT DISTINCT l_partkey % 100 AS src, l_suppkey % 100 AS dst FROM lineitem),
-       |nodes AS (SELECT DISTINCT node FROM (SELECT src AS node FROM e UNION SELECT dst FROM e)),
-       |od AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
+       |nodes AS MATERIALIZED (SELECT DISTINCT node FROM (SELECT src AS node FROM e UNION SELECT dst FROM e)),
+       |od AS MATERIALIZED (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
        |r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS rank FROM nodes),
        |$iterCtes
        |SELECT node, round(rank, 4) AS rank FROM r$PageRankIters

@@ -444,19 +444,23 @@ object MlQueries {
   }
 
   private val ml08Sql: String = {
+    // x, g and every w/n/v are MATERIALIZED, as in ml05b: each v reads
+    // its w directly and again through its norm, so DuckDB's default
+    // inlining doubles the plan per iteration (2^8), and x and g are
+    // read several times each
     val iters = (1 to 8).map { t =>
       val prev = s"v${t - 1}"
-      s"""w$t AS (
+      s"""w$t AS MATERIALIZED (
          |  SELECT g.i, sum(g.gv * $prev.vval) AS w
          |  FROM g JOIN $prev ON g.j = $prev.i GROUP BY 1),
-         |n$t AS (SELECT sqrt(sum(w * w)) AS nrm FROM w$t),
-         |v$t AS (SELECT i, round(w / nrm, 8) AS vval FROM w$t, n$t)""".stripMargin
+         |n$t AS MATERIALIZED (SELECT sqrt(sum(w * w)) AS nrm FROM w$t),
+         |v$t AS MATERIALIZED (SELECT i, round(w / nrm, 8) AS vval FROM w$t, n$t)""".stripMargin
     }.mkString(",\n")
     s"""WITH e AS (SELECT vec_id, v FROM ${OracleVec.EmbScreened} t),
-       |x AS (
+       |x AS MATERIALIZED (
        |  SELECT vec_id, i, v[i] AS xi
        |  FROM (SELECT vec_id, v, unnest(range(1, 65)) AS i FROM e)),
-       |g AS (
+       |g AS MATERIALIZED (
        |  SELECT a.i, b.i AS j, sum(a.xi * b.xi) AS gv
        |  FROM x a JOIN x b USING (vec_id)
        |  GROUP BY 1, 2),

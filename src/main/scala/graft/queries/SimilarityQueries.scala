@@ -254,8 +254,10 @@ object SimilarityQueries {
       .mkString("\n  ")
     val slices = (0 until m).map(j => s"k$j.v[${j * sub + 1}:${(j + 1) * sub}]")
       .mkString(", ")
-    s"""WITH e AS (SELECT vec_id, v FROM ${OracleVec.EmbScreened} t),
-       |cent AS (SELECT vec_id AS ci, v FROM e WHERE vec_id < 8),
+    // e and cent are read by every sub-quantizer's assignment:
+    // MATERIALIZED, or DuckDB 1.0 re-derives them at each read
+    s"""WITH e AS MATERIALIZED (SELECT vec_id, v FROM ${OracleVec.EmbScreened} t),
+       |cent AS MATERIALIZED (SELECT vec_id AS ci, v FROM e WHERE vec_id < 8),
        |$assigns,
        |recon AS (
        |  SELECT e.vec_id, flatten([$slices]) AS rv
@@ -315,9 +317,11 @@ object SimilarityQueries {
       .mkString("\n  ")
     val slices = (0 until m).map(j => s"k$j.v[${j * sub + 1}:${(j + 1) * sub}]")
       .mkString(", ")
-    s"""WITH e AS (SELECT vec_id, v FROM ${OracleVec.EmbScreened} t),
-       |cent AS (SELECT vec_id AS ci, v FROM e WHERE vec_id < 8),
-       |coarse AS (
+    // e and cent are read by every sub-quantizer's assignment:
+    // MATERIALIZED, or DuckDB 1.0 re-derives them at each read
+    s"""WITH e AS MATERIALIZED (SELECT vec_id, v FROM ${OracleVec.EmbScreened} t),
+       |cent AS MATERIALIZED (SELECT vec_id AS ci, v FROM e WHERE vec_id < 8),
+       |coarse AS MATERIALIZED (
        |  SELECT e.vec_id, c.ci,
        |    row_number() OVER (PARTITION BY e.vec_id ORDER BY
        |      list_dot_product(c.v, c.v) - 2.0::DOUBLE * list_dot_product(e.v, c.v),

@@ -144,7 +144,8 @@ object DocStream {
           if (store == null) inBatchKept
           else inBatchKept.join(
             // the cross-store corpus bucket cap (a seeded store can be
-            // raw crawl — the two-sided K_in×K_c wall, IngestBlast r14):
+            // raw crawl — the two-sided K_in×K_c wall, SCALE.md
+            // "Round-14, session 3", the retired IngestBlast probe):
             // its own knob since ADVICE r14, following the star cap
             // unless tuned apart
             Dedup.minHashDedupAgainstCorpus(inBatchKept, store, "doc_id", "text",

@@ -167,7 +167,7 @@ object SpanDedup {
     // explode(transform(...)): the transform shape materializes the
     // whole per-doc gram array as one value, which is ~2.5× slower and
     // hits the task heap wall ~3× earlier on a giant document
-    // (GramShapeAB probe, SCALE.md round-12 session 4)
+    // (the retired GramShapeAB probe, SCALE.md "Round-12, session 4")
     val bsh = bench
       .select(TextStats.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= n)

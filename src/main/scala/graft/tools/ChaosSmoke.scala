@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Catalog-wide degenerate-data smoke (driver-side tooling): rebuilds a
@@ -20,6 +20,7 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.tools.ChaosSmoke
   *   SPARK_GRAFT_SF_DIR   source testdata (default sf0.001)
   *   SPARK_GRAFT_CHAOS    output dir (default /tmp/graft_chaos)
+  * Runs on `SPARK_GRAFT_CPUS` cores, validated as Bench does.
   */
 object ChaosSmoke {
 
@@ -32,17 +33,6 @@ object ChaosSmoke {
     */
   def build(spark: SparkSession, srcDir: String, outDir: String): Unit = {
     import spark.implicits._
-    val out = java.nio.file.Paths.get(outDir)
-    org.apache.commons.io.FileUtils.deleteQuietly(out.toFile)
-    java.nio.file.Files.createDirectories(out)
-    Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
-      .foreach { t =>
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$srcDir/$t.parquet"),
-          out.resolve(s"$t.parquet"))
-      }
-
-    val docs = graft.Tables.documents(spark, srcDir)
     val badDocs = Seq(
       (900001L, "", "en", "chaos", 0L),
       (900002L, "   \t  \n ", "en", "chaos", 8L),
@@ -68,11 +58,9 @@ object ChaosSmoke {
         (900011L, "perfectly ordinary text with missing metadata fields",
           null.asInstanceOf[String], null.asInstanceOf[String], 52L))
         .toDF("doc_id", "text", "lang", "source", "n_chars"))
-    docs.unionByName(badDocs).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/documents.parquet")
 
-    val emb = graft.Tables.embeddings(spark, srcDir)
-    val dim = emb.select(size(col("embedding"))).first().getInt(0)
+    val dim = graft.Tables.embeddings(spark, srcDir)
+      .select(size(col("embedding"))).first().getInt(0)
     val zero = Array.fill(dim)(0.0f)
     val nan = Array.tabulate(dim)(i => if (i == 3) Float.NaN else 0.1f)
     // shape wave 2 (r11): the corruption classes a real embedding job
@@ -116,13 +104,9 @@ object ChaosSmoke {
       .toDF("vec_id", "embedding", "label")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"),
         col("label"))
-    emb.filter(col("vec_id") =!= 5L)
-      .unionByName(nanSeed).unionByName(badEmb).unionByName(nullElem).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/embeddings.parquet")
 
     // events + NULL ts / user / type / value rows (written back as
     // plain TimestampType — a supported loader arrival)
-    val ev = graft.Tables.events(spark, srcDir)
     val badEv = Seq(
       (9000001L, Some("2024-01-02 03:04:05"), None: Option[Long], Some("click"), Some(1.0), Some("{}")),
       (9000002L, None: Option[String], Some(1L), Some("view"), Some(2.0), Some("{}")),
@@ -142,59 +126,37 @@ object ChaosSmoke {
       .toDF("event_id", "ts_s", "user_id", "event_type", "value", "props")
       .select(col("event_id"), to_timestamp(col("ts_s")).as("ts"), col("user_id"),
         col("event_type"), col("value"), col("props"))
-    ev.unionByName(badEv).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/events.parquet")
+    Shards.derive(spark, srcDir, outDir, parts = 1)(
+      "documents" -> (Shards.append(_, badDocs)),
+      "embeddings" -> (emb => Shards.append(emb.filter(col("vec_id") =!= 5L),
+        nanSeed.unionByName(badEmb).unionByName(nullElem))),
+      "events" -> (Shards.append(_, badEv)))
   }
 
   /** Run EVERY catalog query against `dir`; pass = does not throw.
     * Returns (query, root-cause) per failure. Shared by the CLI below
     * and by ChaosGateSpec, which makes this sweep part of `sbt test`
     * (VERDICT r10 #3): the degenerate-input guarantee is a machine
-    * gate, not a tool the builder remembers to run.
-    *
-    * Evaluation is forced with bit_xor(xxhash64(struct(*))) — NOT
-    * count(): under count() Catalyst prunes every deterministic
-    * output projection, so a per-row expression that throws on a
-    * degenerate value (an unguarded ANSI 0/0 in a final SELECT) was
-    * never executed and the sweep reported a pass it had not earned
-    * (found in r11 when a deliberately reverted guard stayed green).
-    * Hashing a struct of every output column keeps the whole plan
-    * live, which is exactly what a downstream sink does at scale.
+    * gate, not a tool the builder remembers to run. Each query runs
+    * under [[Blast.force]], whose hash keeps every output projection
+    * live, so a throw in a final SELECT cannot pass unexecuted.
     */
-  def sweep(spark: SparkSession, dir: String): Seq[(String, String)] = {
-    val failures = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, dir)
-          .selectExpr("bit_xor(xxhash64(struct(*)))").collect()
-        // per-query progress line: when a degenerate row sends a plan
-        // quadratic (r11: a year-9999 ts exploding a window frame), the
-        // stuck query must be identifiable from the log, not a jstack
-        println(f"[chaos] ok $name ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      } catch { case t: Throwable =>
-        val root = {
-          var c: Throwable = t
-          while (c.getCause != null && c.getCause != c) c = c.getCause
-          c
-        }
-        failures += name -> s"${root.getClass.getSimpleName}: ${Option(root.getMessage).getOrElse("").linesIterator.take(1).mkString.take(160)}"
-        println(s"[chaos] FAIL $name  ${failures.last._2}")
-      }
+  def sweep(spark: SparkSession, dir: String): Seq[(String, String)] =
+    graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val (dt, res) = Blast.force(fn(spark, dir))
+      // per-query progress line: when a degenerate row sends a plan
+      // quadratic (r11: a year-9999 ts exploding a window frame), the
+      // stuck query must be identifiable from the log, not a jstack
+      res.fold(root => println(s"[chaos] FAIL $name  $root"),
+        _ => println(f"[chaos] ok $name $dt%.1fs"))
       try { spark.catalog.clearCache() } catch { case _: Throwable => () }
+      res.left.toOption.map(name -> _)
     }
-    failures.toSeq
-  }
 
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_CHAOS", "/tmp/graft_chaos")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Blast.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     build(spark, srcDir, outDir)

@@ -1,11 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch profiler (driver-side tooling, not library surface): times
   * the named catalog queries, several rounds each, after Bench's warmup
   * — separates cold-start from steady-state cost so optimization work
-  * targets the right component.
+  * targets the right component. Each timing forces the whole plan
+  * through [[Blast.force]], not count().
   *
   * Usage: runMain graft.tools.ProfileQ q30_sql_entry ml03_gbt_eval
   * Runs on `SPARK_GRAFT_CPUS` cores, validated as Bench does.
@@ -14,14 +13,7 @@ object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val rounds = sys.env.getOrElse("SPARK_GRAFT_ROUNDS", "3").toInt
-    val nCpus = graft.Bench.sparkCpus()
-    val spark = SparkSession.builder()
-      .master(s"local[$nCpus]")
-      .config("spark.sql.shuffle.partitions", nCpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Blast.session()
 
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.range(100000L).selectExpr("id % 32 AS k", "id")
@@ -44,10 +36,10 @@ object ProfileQ {
           spark.catalog.clearCache(); System.gc() }
         catch { case _: Throwable => () }
       }
-      val fn = graft.queries.Catalog.queries(name)
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      println(f"[$r] $name%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s  rows=$n")
+      Blast.force(graft.queries.Catalog.queries(name)(spark, sfDir)) match {
+        case (dt, Right((n, x))) => println(f"[$r] $name%-28s $dt%8.3f s  rows=$n x=$x%016x")
+        case (dt, Left(e)) => println(f"[$r] $name%-28s $dt%8.3f s  THREW $e")
+      }
     }
     spark.stop()
   }

@@ -216,6 +216,23 @@ class DedupSpec extends SparkSpec {
     assert(got.forall { case (_, cid, size) => cid == 0L && size == 61L })
   }
 
+  test("duplicateClusters' star fallback keeps NULL endpoints and self-loop nodes") {
+    // the 61-node chain forces the not-converged branch; the NULL
+    // endpoint and the self-loop node beside it must come out exactly
+    // as the converged path labels the same two edges on their own
+    val extra = Seq[(Option[Long], Option[Long])]((Some(100L), None), (Some(200L), Some(200L)))
+    val chain = (0L until 60L).map(i => (Option(i), Option(i + 1)))
+    def rows(pairs: Seq[(Option[Long], Option[Long])]) =
+      Dedup.duplicateClusters(pairs.toDF("doc_a", "doc_b"), "doc_a", "doc_b").collect()
+        .map(r => (Option(r.get(0)), Option(r.get(1)), r.getLong(2))).toSet
+    val alone = rows(extra)
+    assert(alone === Set[(Option[Any], Option[Any], Long)](
+      (Some(100L), Some(100L), 2L), (None, Some(100L), 2L), (Some(200L), Some(200L), 1L)))
+    val both = rows(chain ++ extra)
+    assert(both.filter(_._2 != Some(0L)) === alone)
+    assert(both.count(r => r._2 == Some(0L) && r._3 == 61L) === 61)
+  }
+
   test("keepCanonical drops non-canonical members, passes unclustered docs") {
     val docs = Seq((1L, "a"), (2L, "b"), (3L, "c"), (9L, "z")).toDF("doc_id", "text")
     val clusters = Seq((1L, 1L, 2L), (2L, 1L, 2L)).toDF("doc_id", "cluster_id", "cluster_size")

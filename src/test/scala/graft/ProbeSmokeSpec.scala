@@ -6,14 +6,16 @@ import graft.dedup.Dedup
 import graft.text.TextStats
 
 /** Pins the r12 scale-probe regimes against drift (VERDICT r12 #5):
-  * DupBlast / SkewBlast / GiantDocBlast / RegexBlast encoded that
-  * round's scale verdicts (collapse kills the O(K²) boilerplate term,
-  * hot-key windows are linear, giant docs are linear, the PII token
-  * gate changes no match set) but nothing re-ran them — a future edit
+  * the [[Shards]] regimes dup / skew / giant / regex (first built by
+  * the retired DupBlast / SkewBlast / GiantDocBlast / RegexBlast tools,
+  * SCALE.md "Blast regimes") encoded that round's scale verdicts
+  * (collapse kills the O(K²) boilerplate term, hot-key windows are
+  * linear, giant docs are linear, the PII token gate changes no match
+  * set) but nothing re-ran them — a future edit
   * to the collapse or the gate could silently regress the regime they
   * certified. One cheap smoke per probe, asserting the STRUCTURAL
   * property at the smallest blast size — never wall-time, which
-  * belongs to the probes themselves.
+  * belongs to the `graft.tools.Blast` probe.
   */
 class ProbeSmokeSpec extends SparkSpec {
   import spark.implicits._
@@ -25,11 +27,11 @@ class ProbeSmokeSpec extends SparkSpec {
 
   test("DupBlast regime: the byte-identical collapse absorbs exactly the K blast copies") {
     inTempShard("graft_smoke_dup_") { dir =>
-      DupBlast.build(spark, Sf0001, dir, k = 100)
+      Shards.dup(spark, Sf0001, dir, k = 100)
       val blasted = Tables.documents(spark, dir)
       val base = Tables.documents(spark, Sf0001)
       assert(blasted.count() === base.count() + 100)
-      // The property DupBlast certified: K identical copies collapse
+      // The property the dup regime certified: K identical copies collapse
       // into the replicated original's min-id rep BEFORE any pairwise
       // stage — so the collapsed shard has exactly the collapsed base's
       // row count, and no blast id (≥ 900000) survives as a rep.
@@ -42,7 +44,7 @@ class ProbeSmokeSpec extends SparkSpec {
 
   test("NearDupBlast regime: distinct-byte copies defeat the collapse; star cap keeps output") {
     inTempShard("graft_smoke_neardup_") { dir =>
-      NearDupBlast.build(spark, Sf0001, dir, k = 100)
+      Shards.neardup(spark, Sf0001, dir, k = 100)
       val docs = Tables.documents(spark, dir)
       // The regime's premise: every blast copy has distinct bytes (one
       // unique session token), so the byte-identical collapse passes
@@ -100,7 +102,7 @@ class ProbeSmokeSpec extends SparkSpec {
 
   test("RegexBlast regime: the PII token gate changes no match set on adversarial text") {
     inTempShard("graft_smoke_regex_") { dir =>
-      RegexBlast.build(spark, Sf0001, dir, n = 1000)
+      Shards.regex(spark, Sf0001, dir, n = 1000)
       val docs = Tables.documents(spark, dir)
       val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
       val phoneRe = "\\+1-555-[0-9]{4}"
@@ -132,7 +134,7 @@ class ProbeSmokeSpec extends SparkSpec {
 
   test("SkewBlast regime: the blast stays inside the event span and on the hot user") {
     inTempShard("graft_smoke_skew_") { dir =>
-      SkewBlast.build(spark, Sf0001, dir, k = 2000)
+      Shards.skew(spark, Sf0001, dir, k = 2000)
       val base = Tables.events(spark, Sf0001)
       val blasted = Tables.events(spark, dir)
       assert(blasted.count() === base.count() + 2000)
@@ -155,13 +157,13 @@ class ProbeSmokeSpec extends SparkSpec {
     inTempShard("graft_smoke_giant_") { dir =>
       // generator contract first: exactly T whitespace tokens, mostly
       // distinct (the "worst honest case for n-gram volume" claim)
-      val txt = GiantDocBlast.giantText(2000)
+      val txt = Shards.giantText(2000)
       val toks = Seq(txt).toDF("text")
         .select(TextStats.tokens(col("text")).as("t"))
         .select(size(col("t")).as("n"), size(array_distinct(col("t"))).as("d")).first()
       assert(toks.getInt(0) === 2000)
       assert(toks.getInt(1) > 1800) // ~100k vocab at T=2000 → few repeats
-      GiantDocBlast.build(spark, Sf0001, dir, t = 2000)
+      Shards.giant(spark, Sf0001, dir, t = 2000)
       val giant = graft.SparkEntry.queries("tx01_token_stats")(spark, dir)
         .filter(col("doc_id") === 900000L).first()
       assert(giant.getInt(giant.fieldIndex("n_tokens")) === 2000)
@@ -173,5 +175,38 @@ class ProbeSmokeSpec extends SparkSpec {
           "doc_id", "text", n = 3).count()
       assert(grams <= 1998L && grams > 1700L)
     }
+  }
+
+  test("regimes derive from a Spark-written shard: every copied table keeps its rows") {
+    // a dup-built shard's documents and embeddings are directories of
+    // part files; each regime built on top of it copies every table it
+    // does not rewrite, so a copy that drops the part files shows here
+    inTempShard("graft_smoke_derive_") { base =>
+      val dup = s"$base/dup"
+      Shards.dup(spark, Sf0001, dup, k = 10)
+      assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$dup/documents.parquet")))
+      def rows(dir: String, t: String): Long = Shards.load(spark, dir, t).count()
+      val builds = Seq[(String, String => Unit, Set[String])](
+        ("skew", Shards.skew(spark, dup, _, 100), Set("events")),
+        ("regex", Shards.regex(spark, dup, _, 100), Set("documents")),
+        ("giant", Shards.giant(spark, dup, _, 100), Set("documents")),
+        ("chaos", ChaosSmoke.build(spark, dup, _), Set("documents", "embeddings", "events")))
+      for ((name, build, rewritten) <- builds) {
+        val dir = s"$base/$name"
+        build(dir)
+        for (t <- Shards.tables.filterNot(rewritten))
+          assert(rows(dir, t) === rows(dup, t), s"$name: copied table $t")
+      }
+    }
+  }
+
+  test("forced evaluation reports a throw in a pruned output column; count() does not") {
+    // under ANSI the only output column divides by zero: count() prunes
+    // the projection and succeeds, the forced hash must run it and fail
+    assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
+    def frame = spark.range(3).select((col("id") / lit(0)).as("q"))
+    assert(frame.count() === 3L)
+    val (_, res) = Blast.force(frame)
+    assert(res.isLeft && res.left.exists(_.contains("DIVIDE_BY_ZERO")), res)
   }
 }
