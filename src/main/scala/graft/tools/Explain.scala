@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for selected catalog queries (dev
   * tool). Usage: runMain graft.tools.Explain <sfDir> [name ...]
+  * Runs on `SPARK_GRAFT_CPUS` cores, validated as Bench does.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -11,12 +10,7 @@ object Explain {
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q01_pricing_summary", "q05_join_broadcast", "q13_trends",
         "q07_topk", "dd02_jaccard_pairs", "sim01_brute_topk")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Blast.session()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
