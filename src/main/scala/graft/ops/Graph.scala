@@ -100,7 +100,8 @@ object Graph {
     case _ => false
   }
 
-  /** Spark's `round(x, 8)` on a double, bit for bit. */
+  /** Spark's `round(x, 8)` on a double, bit for bit: HALF_UP on the
+    * double's decimal form (not `queries.MlQueries.snap8`'s rounding). */
   private def snap8(x: Double): Double =
     if (x.isNaN || x.isInfinite) x
     else java.math.BigDecimal.valueOf(x).setScale(8, java.math.RoundingMode.HALF_UP).doubleValue

@@ -26,50 +26,11 @@ final case class Q(
     // reuses the memoized run instead of launching jobs at class init.
     oracleGen: Option[() => String] = None)
 
-/** Data-quality guards shared by the gap-fill/interpolation family. */
-object Guards {
-  /** Max hours a generated time spine may span, applied as
-    * `h1 := least(h1, h0 + CAP)` on BOTH engines. A dense spine is
-    * generated between each group's min and max timestamp — so ONE
-    * corrupted timestamp (the r11 chaos shard carries year-0001 and
-    * year-9999 rows) stretches the spine to ~87 MILLION hours per
-    * group and, in q93's case, feeds a window frame that then burned
-    * 20+ CPU-minutes on a single task without finishing. Clean data
-    * spans 720 hours at every SF, so a 20 000-hour (~2.3 year) cap is
-    * ~28× headroom for legitimate spans while bounding a poisoned
-    * group to 20 001 rows. The cap is mirrored verbatim in each
-    * query's oracle SQL, so results agree on any input.
-    */
-  val SpineCapHours = 20000
-
-  /** PII patterns (tx09) apply per whitespace token, and only to
-    * tokens of at most this many characters. Two bounds in one, both
-    * SEMANTIC and mirrored verbatim in the oracle: (1) the PII
-    * regexes' character classes exclude whitespace, so a match can
-    * never span tokens — per-token scanning finds the identical match
-    * set; (2) Java's backtracking regex engine is O(len²) on
-    * class-run text that feeds `local+@domain+\.tld` without
-    * completing it (RegexBlast probe: the full-text formulation costs
-    * 10.6/36/145 s at 25k/50k/100k chars of `a@bbb…` — a 10 MB blob
-    * token would pin one task for ~2 weeks), so unbounded tokens must
-    * not reach the engine. An RFC-total email is ≤ 254 chars; 320
-    * leaves margin, and a longer run is a blob (base64, minified JS),
-    * not a redactable contact artifact. The cap is a contract: PII
-    * embedded INSIDE a >320-char blob token is left unredacted, on
-    * both engines, by design.
-    */
-  val MaxPiiTokenChars = 320
-}
-
 object Catalog {
   lazy val all: Seq[Q] =
-    RelationalQueries.all ++ ExtendedQueries.all ++ Extended2Queries.all ++
-      Extended3Queries.all ++ Extended4Queries.all ++ Extended5Queries.all ++
-      Extended6Queries.all ++ Extended7Queries.all ++ Extended8Queries.all ++
-      Extended9Queries.all ++ Extended10Queries.all ++ Extended11Queries.all ++
-      Extended12Queries.all ++ Extended13Queries.all ++ Extended14Queries.all ++ Extended15Queries.all ++ Extended16Queries.all ++ Extended17Queries.all ++ Extended18Queries.all ++ Extended19Queries.all ++ Extended20Queries.all ++ Extended21Queries.all ++ Extended22Queries.all ++ Extended23Queries.all ++ FunctionQueries.all ++
-      JoinQueries.all ++ TextQueries.all ++
-      DedupQueries.all ++ SimilarityQueries.all ++ MlQueries.all ++
+    RelationalQueries.all ++ WindowQueries.all ++ EventQueries.all ++
+      TextQueries.all ++ DedupQueries.all ++ SimilarityQueries.all ++
+      MlQueries.all ++ QualityQueries.all ++ GraphQueries.all ++
       ImdbQueries.all ++ MultimodalQueries.all
 
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -1,15 +1,18 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.similarity.Ann
 
-/** Similarity-search queries over the embeddings table. sim01 (exact
-  * brute force) and sim02 (sign-LSH, seeded hyperplanes interpolated
-  * into generated SQL) are DuckDB-oracle-checked; sim03's k-means
-  * quantizer is not SQL-expressible → rows-only, recall-tested
-  * against sim01 in AnnSpec.
+/** Similarity search over the embeddings table — exact, sign-LSH,
+  * IVF, PQ, quantized, Hamming, reranked and MIPS top-k, recall
+  * measurement, label centroids and hard-negative mining — plus the
+  * blocked edit-distance fuzzy join. sim01 (exact brute force) and
+  * sim02 (sign-LSH, seeded hyperplanes interpolated into generated
+  * SQL) are DuckDB-oracle-checked; sim03's k-means quantizer is
+  * recall-tested against sim01 in AnnSpec.
   */
 object SimilarityQueries {
 
@@ -23,10 +26,10 @@ object SimilarityQueries {
   }
 
   private val sim01Sql =
-    s"""WITH e AS (SELECT vec_id, v FROM ${OracleVec.EmbFinite} t),
+    s"""WITH e AS (SELECT vec_id, v FROM ${OracleSql.EmbFinite} t),
       |pairs AS (
       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |    ${OracleVec.cosPair("q.v", "c.v")} AS cosine
+      |    ${OracleSql.cosPair("q.v", "c.v")} AS cosine
       |  FROM e q JOIN e c ON q.vec_id != c.vec_id
       |  WHERE q.vec_id < 10)
       |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id,
@@ -65,14 +68,14 @@ object SimilarityQueries {
       val arr = p.map(_.toString).mkString("[", ", ", "]")
       s"(CASE WHEN list_dot_product(v, $arr) > 0 THEN ${1 << i} ELSE 0 END)"
     }.mkString("\n      + ")
-    s"""WITH e AS (SELECT vec_id, v FROM ${OracleVec.EmbScreened} t),
+    s"""WITH e AS (SELECT vec_id, v FROM ${OracleSql.EmbScreened} t),
        |sig AS (
        |  SELECT vec_id, v,
        |    $sigExpr AS bucket
        |  FROM e),
        |pairs AS (
        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    ${OracleVec.cos("q.v", "c.v")} AS cosine
+       |    ${OracleSql.cos("q.v", "c.v")} AS cosine
        |  FROM sig q JOIN sig c ON q.bucket = c.bucket AND q.vec_id != c.vec_id
        |  WHERE q.vec_id < 10),
        |ranked AS (
@@ -109,7 +112,7 @@ object SimilarityQueries {
     * the exact comparator Ann.centroidDists builds.
     */
   private val sim03Sql: String =
-    s"""WITH e AS (SELECT vec_id, v FROM ${OracleVec.EmbScreened} t),
+    s"""WITH e AS (SELECT vec_id, v FROM ${OracleSql.EmbScreened} t),
       |cent AS (SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id < 16),
       |assign AS (
       |  SELECT e.vec_id, e.v, c.cell,
@@ -126,7 +129,7 @@ object SimilarityQueries {
       |  FROM e, cent c WHERE e.vec_id < 10),
       |pairs AS (
       |  SELECT q.query_id, s.vec_id AS neighbor_id,
-      |    ${OracleVec.cos("q.qv", "s.v")} AS cosine
+      |    ${OracleSql.cos("q.qv", "s.v")} AS cosine
       |  FROM (SELECT query_id, qv, cell FROM probes WHERE rn <= 4) q
       |  JOIN cells s ON q.cell = s.cell AND q.query_id != s.vec_id),
       |ranked AS (
@@ -179,9 +182,9 @@ object SimilarityQueries {
   }
 
   private val sim05Sql =
-    """WITH terms AS (
+    raw"""WITH terms AS (
       |  SELECT doc_id, unnest(toks) AS t
-      |  FROM (SELECT doc_id, list_filter(regexp_split_to_array(text, '[ \t\n\f\r]+'), z -> z != '') AS toks
+      |  FROM (SELECT doc_id, ${OracleSql.tokens("text")} AS toks
       |        FROM documents)),
       |h AS (
       |  SELECT doc_id, ('0x' || substr(md5(t), 1, 12))::BIGINT % 1048576 AS h
@@ -256,7 +259,7 @@ object SimilarityQueries {
       .mkString(", ")
     // e and cent are read by every sub-quantizer's assignment:
     // MATERIALIZED, or DuckDB 1.0 re-derives them at each read
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, v FROM ${OracleVec.EmbScreened} t),
+    s"""WITH e AS MATERIALIZED (SELECT vec_id, v FROM ${OracleSql.EmbScreened} t),
        |cent AS MATERIALIZED (SELECT vec_id AS ci, v FROM e WHERE vec_id < 8),
        |$assigns,
        |recon AS (
@@ -319,7 +322,7 @@ object SimilarityQueries {
       .mkString(", ")
     // e and cent are read by every sub-quantizer's assignment:
     // MATERIALIZED, or DuckDB 1.0 re-derives them at each read
-    s"""WITH e AS MATERIALIZED (SELECT vec_id, v FROM ${OracleVec.EmbScreened} t),
+    s"""WITH e AS MATERIALIZED (SELECT vec_id, v FROM ${OracleSql.EmbScreened} t),
        |cent AS MATERIALIZED (SELECT vec_id AS ci, v FROM e WHERE vec_id < 8),
        |coarse AS MATERIALIZED (
        |  SELECT e.vec_id, c.ci,
@@ -369,7 +372,7 @@ object SimilarityQueries {
   }
 
   private val sim08Sql =
-    s"""WITH e AS (SELECT vec_id, v FROM ${OracleVec.EmbScreened} t),
+    s"""WITH e AS (SELECT vec_id, v FROM ${OracleSql.EmbScreened} t),
       |sig AS (
       |  SELECT vec_id,
       |    bit_or(CASE WHEN i <= 32 AND v[i] > 0 THEN 1::BIGINT << (i - 1)
@@ -406,7 +409,7 @@ object SimilarityQueries {
   }
 
   private val sim09Sql =
-    s"""WITH e AS (SELECT vec_id, v FROM ${OracleVec.EmbScreened} t),
+    s"""WITH e AS (SELECT vec_id, v FROM ${OracleSql.EmbScreened} t),
       |sig AS (
       |  SELECT vec_id,
       |    bit_or(CASE WHEN i <= 32 AND v[i] > 0 THEN 1::BIGINT << (i - 1)
@@ -425,7 +428,7 @@ object SimilarityQueries {
       |  WHERE rnk <= 50),
       |scored AS (
       |  SELECT p.query_id, p.neighbor_id,
-      |    ${OracleVec.cos("q.v", "c.v")} AS cosine
+      |    ${OracleSql.cos("q.v", "c.v")} AS cosine
       |  FROM pre p
       |  JOIN e q ON q.vec_id = p.query_id
       |  JOIN e c ON c.vec_id = p.neighbor_id),
@@ -497,6 +500,190 @@ object SimilarityQueries {
       "  ON e.query_id = l.query_id AND e.neighbor_id = l.neighbor_id\n" +
       "GROUP BY e.query_id\nORDER BY e.query_id"
 
+  /** Int8-quantized top-5 for the first 10 vectors: global symmetric
+    * scale, explicit half-up rounding, integer dot ranking (ties by
+    * neighbor_id) — exactly reproducible cross-engine, unlike float
+    * cosine near a top-k cut.
+    */
+  private def sim04QuantizedTopK(s: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(s, dir)
+    graft.similarity.Ann.quantizedTopK(emb, emb.filter(col("vec_id") < 10),
+        "vec_id", "embedding", k = 5)
+      .orderBy(col("query_id"), col("rank"))
+  }
+
+  private val sim04Sql =
+    s"""WITH e AS (SELECT vec_id, embedding FROM ${OracleSql.EmbScreened} t),
+      |s AS (
+      |  SELECT 127.0 / CAST(max(list_max(list_transform(embedding, x -> abs(x)))) AS DOUBLE) AS scale
+      |  FROM e),
+      |qz AS (
+      |  SELECT vec_id,
+      |    list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * scale + 0.5)) AS qv
+      |  FROM e, s),
+      |pairs AS (
+      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+      |    CAST(list_dot_product(q.qv, c.qv) AS BIGINT) AS qdot
+      |  FROM qz q JOIN qz c ON q.vec_id != c.vec_id
+      |  WHERE q.vec_id < 10),
+      |ranked AS (
+      |  SELECT query_id, neighbor_id, qdot,
+      |    CAST(row_number() OVER (
+      |      PARTITION BY query_id ORDER BY qdot DESC, neighbor_id) AS INTEGER) AS rank
+      |  FROM pairs)
+      |SELECT query_id, rank, neighbor_id, qdot
+      |FROM ranked WHERE rank <= 5
+      |ORDER BY query_id, rank""".stripMargin
+
+  /** Hard-negative mining (contrastive-training batch construction):
+    * for each of the first 10 vectors, the 3 nearest neighbors whose
+    * label differs — [[graft.similarity.Ann.hardNegatives]].
+    */
+  private def q87HardNegatives(s: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(s, dir)
+    graft.similarity.Ann.hardNegatives(emb, emb.filter(col("vec_id") < 10),
+        "vec_id", "embedding", "label", k = 3)
+      .select(col("query_id"), col("rank"), col("neighbor_id"),
+        col("neg_label"), round(col("cosine"), 4).as("cosine"))
+      .orderBy(col("query_id"), col("rank"))
+  }
+
+  private val q87Sql =
+    s"""WITH e AS (SELECT vec_id, label, v FROM ${OracleSql.EmbFinite} t),
+      |pairs AS (
+      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+      |    c.label AS neg_label,
+      |    ${OracleSql.cosPair("q.v", "c.v")} AS cosine
+      |  FROM e q JOIN e c
+      |    ON q.vec_id != c.vec_id AND q.label != c.label
+      |  WHERE q.vec_id < 10)
+      |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, neg_label,
+      |  round(cosine, 4) AS cosine
+      |FROM (
+      |  SELECT query_id, neighbor_id, neg_label, cosine,
+      |    row_number() OVER (
+      |      PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
+      |  FROM pairs WHERE cosine IS NOT NULL
+      |)
+      |WHERE rank <= 3
+      |ORDER BY query_id, rank""".stripMargin
+
+  // ---------------------------------------------------------------- q95
+
+  /** Blocked edit-distance fuzzy join (entity resolution): near-match
+    * pairs of distinct part names within Levenshtein distance 3,
+    * blocked on the head noun (last token) so no all-pairs comparison
+    * ever happens — the block key bounds candidate fan-out to
+    * Σ block², the same containment argument as the LSH band joins.
+    * Matching runs on the DISTINCT name vocabulary (entity resolution
+    * always does), so row count is irrelevant to the match cost.
+    */
+  private def q95EditJoin(s: SparkSession, dir: String): DataFrame = {
+    val names = Tables.part(s, dir)
+      .select(col("p_name")).distinct()
+      .select(col("p_name"), element_at(split(col("p_name"), " "), -1).as("blk"))
+      .localCheckpoint()
+    names.as("a").join(names.as("b"),
+        col("a.blk") === col("b.blk") && col("a.p_name") < col("b.p_name"))
+      .select(col("a.p_name").as("name_a"), col("b.p_name").as("name_b"),
+        levenshtein(col("a.p_name"), col("b.p_name")).as("dist"))
+      .filter(col("dist") <= 3)
+      .orderBy(col("name_a"), col("name_b"))
+  }
+
+  private val q95Sql =
+    """WITH names AS (
+      |  SELECT DISTINCT p_name,
+      |    list_extract(regexp_split_to_array(p_name, ' '), -1) AS blk
+      |  FROM part)
+      |SELECT a.p_name AS name_a, b.p_name AS name_b,
+      |  CAST(levenshtein(a.p_name, b.p_name) AS INTEGER) AS dist
+      |FROM names a JOIN names b
+      |  ON a.blk = b.blk AND a.p_name < b.p_name
+      |WHERE levenshtein(a.p_name, b.p_name) <= 3
+      |ORDER BY name_a, name_b""".stripMargin
+
+  // ---------------------------------------------------------------- sim10
+
+  /** Maximum-inner-product search via the norm-augmentation reduction
+    * (Shrivastava & Li / Bachrach et al.): append
+    * sqrt(M² − ‖x‖²) to every corpus vector (M = max corpus norm, a
+    * broadcast in-plan scalar — no driver round-trip) and a 0 to every
+    * query; cosine order on the augmented space IS dot-product order
+    * on the original. The gate emits both rankings side by side so the
+    * oracle verifies the reduction, not just one score: rank comes
+    * from the raw dot, aug_cos must be monotone within each query.
+    */
+  private def sim10Mips(s: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(s, dir)
+    // Shape/finiteness screen on both sides (r12 chaos-parity drive):
+    // this ranking is on the RAW dot, which has no zero-norm NULL fold
+    // — one NaN embedding took rank 1 in EVERY query (Spark orders NaN
+    // above all numbers in desc), a +Inf one took rank 2, and the max
+    // self-dot scalar m2 went NaN, so every aug_cos was NaN. Corrupt
+    // rows are unscoreable, same contract as the cosine tails.
+    val dim = graft.functions.VectorExprs.dominantDim(emb, "embedding")
+    val shaped = emb.filter(
+      graft.functions.VectorExprs.isShapedVec(col("embedding"), dim))
+    val corpus = shaped.filter(col("vec_id") >= 5)
+    val queries = shaped.filter(col("vec_id") < 5)
+    val m2 = corpus
+      .agg(max(graft.functions.VectorExprs.dot(col("embedding"), col("embedding")))
+        .as("m2"))
+    val pairs = queries.as("q")
+      .crossJoin(corpus.as("c"))
+      .crossJoin(broadcast(m2))
+      .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
+        graft.functions.VectorExprs.dot(col("q.embedding"), col("c.embedding"))
+          .as("dp"),
+        graft.functions.VectorExprs.dot(col("c.embedding"), col("c.embedding"))
+          .as("cn2"),
+        graft.functions.VectorExprs.dot(col("q.embedding"), col("q.embedding"))
+          .as("qn2"),
+        col("m2"))
+      // augmented corpus vector has norm M exactly; query keeps its
+      // norm. nullif: a zero-magnitude query (shaped + finite, so the
+      // screen keeps it) would make this 0/0 — an ANSI DIVIDE_BY_ZERO
+      // job abort — instead of the inert NULL every other scoring
+      // path degrades to.
+      .select(col("query_id"), col("neighbor_id"), col("dp"),
+        (col("dp") / nullif(sqrt(col("m2")) * sqrt(col("qn2")), lit(0.0)))
+          .as("aug_cos"))
+    val wr = Window.partitionBy(col("query_id"))
+      .orderBy(round(col("dp"), 6).desc, col("neighbor_id"))
+    pairs.withColumn("rank", row_number().over(wr))
+      .filter(col("rank") <= 3)
+      .select(col("query_id"), col("rank").cast("int").as("rank"),
+        col("neighbor_id"), round(col("dp"), 4).as("dot"),
+        round(col("aug_cos"), 6).as("aug_cos"))
+      .orderBy(col("query_id"), col("rank"))
+  }
+
+  private val sim10Sql =
+    s"""WITH e AS (SELECT vec_id, v FROM ${OracleSql.EmbScreened} t),
+      |corpus AS (SELECT * FROM e WHERE vec_id >= 5),
+      |queries AS (SELECT * FROM e WHERE vec_id < 5),
+      |m AS (
+      |  SELECT max(list_dot_product(v, v)) AS m2
+      |  FROM corpus),
+      |pairs AS (
+      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+      |    list_dot_product(q.v, c.v) AS dp,
+      |    list_dot_product(q.v, q.v) AS qn2,
+      |    m.m2
+      |  FROM queries q CROSS JOIN corpus c CROSS JOIN m),
+      |ranked AS (
+      |  SELECT query_id, neighbor_id, dp,
+      |    CASE WHEN m2 * qn2 = 0 THEN NULL
+      |      ELSE dp / (sqrt(m2) * sqrt(qn2)) END AS aug_cos,
+      |    row_number() OVER (
+      |      PARTITION BY query_id ORDER BY round(dp, 6) DESC, neighbor_id) AS rank
+      |  FROM pairs)
+      |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id,
+      |  round(dp, 4) AS dot, round(aug_cos, 6) AS aug_cos
+      |FROM ranked WHERE rank <= 3
+      |ORDER BY query_id, rank""".stripMargin
+
   val all: Seq[Q] = Seq(
     Q("sim01_brute_topk", sim01BruteTopK, Some(sim01Sql)),
     Q("sim02_lsh_topk", sim02LshTopK, Some(sim02Sql)),
@@ -508,5 +695,9 @@ object SimilarityQueries {
     Q("sim09_rerank_topk", sim09RerankTopK, Some(sim09Sql)),
     Q("q84_label_centroids", q84LabelCentroids, Some(q84Sql)),
     Q("q85_ann_recall", q85AnnRecall, Some(q85Sql)),
+    Q("sim04_quantized_topk", sim04QuantizedTopK, Some(sim04Sql)),
+    Q("q87_hard_negatives", q87HardNegatives, Some(q87Sql)),
+    Q("q95_edit_join", q95EditJoin, Some(q95Sql)),
+    Q("sim10_mips", sim10Mips, Some(sim10Sql)),
   )
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.queries.Extended18Queries
+import graft.queries.EventQueries
 
 /** Pins the cardinality bound behind every unpartitioned
   * `Window.orderBy` the library still runs (r20, VERDICT r19 #5: the
@@ -36,34 +36,34 @@ class BoundedWindowSpec extends SparkSpec {
     val orders = Tables.orders(spark, Sf0001)
     val part = Tables.part(spark, Sf0001)
 
-    // Extended5:399 / Extended6:299 — quality is round(…, 4) in [0, 1]
+    // tx17 / mx08 (TextQueries) — quality is round(…, 4) in [0, 1]
     val qualityCells = docs
       .withColumn("__tk", graft.text.TextStats.tokens($"text"))
       .select(round(graft.text.TextStats.qualityScoreFromTokens($"__tk"), 4).as("q"))
       .filter($"q".isNotNull).distinct().count()
     assert(qualityCells <= 10001L)
 
-    // Extended6:37 (q45b) — acctbal is cents in [-999.99, 9999.99]
+    // q45b (WindowQueries) — acctbal is cents in [-999.99, 9999.99]
     val acctCells = cust.select($"c_acctbal").distinct().count()
     assert(acctCells <= 1100000L)
     val acctRange = cust
       .agg(min($"c_acctbal").cast("double"), max($"c_acctbal").cast("double")).first()
     assert(acctRange.getDouble(0) >= -1000.0 && acctRange.getDouble(1) <= 10000.0)
 
-    // Extended8:328 (q94) — floor(o_totalprice/1000): TPC-H totalprice
+    // q94 (MlQueries) — floor(o_totalprice/1000): TPC-H totalprice
     // tops out under 600k, so ≤ ~600 buckets at any SF
     val priceBuckets = orders.select(floor($"o_totalprice" / 1000)).distinct().count()
     assert(priceBuckets <= 700L)
 
-    // Extended8:338 (q94 stage 2) — deciles: ≤ 10 rows by construction
+    // q94 stage 2 — deciles: ≤ 10 rows by construction
     // (least(ceil(·*10/n), 10) has image {1..10})
 
-    // Extended10:251 (q96) — floor(p_retailprice): TPC-H retail price
+    // q96 (RelationalQueries) — floor(p_retailprice): TPC-H retail price
     // lives in ~[900, 2100], so ≤ ~1300 whole-dollar buckets
     val retailBuckets = part.select(floor($"p_retailprice")).distinct().count()
     assert(retailBuckets <= 1300L)
 
-    // Extended20:312 — b = pmod(h, 1024) ≤ 1024 by construction
+    // mx10 (TextQueries.shardManifest) — b = pmod(h, 1024) ≤ 1024 by construction
 
     // q103 recency — calendar-bounded: distinct day-diffs ≤ date span
     val span = orders.agg(datediff(max($"o_orderdate"), min($"o_orderdate"))).first().getInt(0)
@@ -90,7 +90,7 @@ class BoundedWindowSpec extends SparkSpec {
     val single = hist.withColumn("cum", sum($"nv").over(wc))
       .select($"v", $"cum")
 
-    val bucketed = hist.withColumn("hb", Extended18Queries.logBucket($"v"))
+    val bucketed = hist.withColumn("hb", EventQueries.logBucket($"v"))
     val offs = bucketed.groupBy($"hb").agg(sum($"nv").as("bt"))
       .withColumn("off", coalesce(sum($"bt").over(
         Window.orderBy($"hb").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
@@ -117,7 +117,7 @@ class BoundedWindowSpec extends SparkSpec {
       1e4, 1e12, Double.MaxValue, Double.PositiveInfinity)
     // one local frame keeps the input order: NULL, the values, NaN
     val all = (None +: vals.map(Some(_)) :+ Some(Double.NaN)).toDF("v")
-      .select(Extended18Queries.logBucket($"v")).as[Long].collect().toSeq
+      .select(EventQueries.logBucket($"v")).as[Long].collect().toSeq
     val buckets = all.slice(1, all.size - 1)
     assert(buckets == buckets.sorted && buckets.distinct.size == buckets.size,
       s"bucket order broke: $vals → $buckets")

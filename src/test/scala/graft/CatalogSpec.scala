@@ -31,6 +31,14 @@ class CatalogSpec extends SparkSpec {
     assert(manifest.size == 215, s"frozen catalog is 215 keys, manifest has ${manifest.size}")
   }
 
+  test("the family modules list each query once: 215 entries, 215 distinct names") {
+    // `queries` is `all.toMap`, so a query listed twice would silently
+    // collapse there and pass the key-set check above
+    val names = graft.queries.Catalog.all.map(_.name)
+    assert(names.size == 215 && names.distinct.size == 215,
+      s"${names.size} entries, ${names.distinct.size} distinct names")
+  }
+
   test("every oracle key exists in the catalog, and the no-oracle set is exactly the contractual five") {
     assert(spark.sparkContext.isLocal) // force the session BEFORE oracleSql
     val live = graft.queries.Catalog.queries.keySet

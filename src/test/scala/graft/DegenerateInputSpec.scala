@@ -321,16 +321,16 @@ class DegenerateInputSpec extends SparkSpec {
   }
 
   test("sessionize: empty events and NULL timestamps stay deterministic") {
-    import graft.queries.Extended4Queries
+    import graft.queries.EventQueries
     val empty = Seq.empty[(Long, Long, Long)].toDF("user_id", "event_id", "us")
-    assert(Extended4Queries.sessionize(empty, gapUs = 1000L).isEmpty)
+    assert(EventQueries.sessionize(empty, gapUs = 1000L).isEmpty)
     // a NULL timestamp has no defined gap to any neighbor: each such
     // event opens its own session (is_new = 1 on a NULL lag diff) with
     // NULL span — sessions of real events are unaffected
     val e = Seq(
       (1L, 10L, Some(100L)), (1L, 11L, Some(200L)), (1L, 12L, None),
       (2L, 20L, None)).toDF("user_id", "event_id", "us")
-    val got = Extended4Queries.sessionize(e, gapUs = 1000L)
+    val got = EventQueries.sessionize(e, gapUs = 1000L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.toSeq === Seq((1L, 1L, 1L), (1L, 2L, 2L), (2L, 1L, 1L)))
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.{Catalog, Extended20Queries}
+import graft.queries.{Catalog, TextQueries}
 
 /** Round-8 wave: the mega-pipeline funnel and the deterministic
   * sharding contract. */
@@ -43,7 +43,7 @@ class Extended20Spec extends SparkSpec {
 
   test("mx10: manifest reconciles with the gated corpus; ids dense in [0, 8)") {
     val docs = Tables.documents(spark, Sf0001)
-    val out = Extended20Queries.shardManifest(docs).collect()
+    val out = TextQueries.shardManifest(docs).collect()
     assert(out.nonEmpty && out.length <= 8)
     val ids = out.map(_.getLong(0))
     assert(ids.min == 0 && ids.max == ids.length - 1, "shard ids must be dense from 0")
@@ -101,7 +101,7 @@ class Extended20Spec extends SparkSpec {
     // epoch-0 rows are byte-identical to a standalone mx10 layout of
     // the base corpus — shipped shards are immutable under append
     val docs = Tables.documents(spark, Sf0001)
-    val standalone = Extended20Queries
+    val standalone = TextQueries
       .shardManifest(docs.filter(col("doc_id") < 400)).collect()
     assert(e0.map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq ==
       standalone.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq,
@@ -114,9 +114,9 @@ class Extended20Spec extends SparkSpec {
 
   test("mx10: manifest is invariant to input partitioning and row order") {
     val docs = Tables.documents(spark, Sf0001)
-    val base = Extended20Queries.shardManifest(docs).collect().toSeq
-    val repart = Extended20Queries.shardManifest(docs.repartition(7)).collect().toSeq
-    val shuffled = Extended20Queries
+    val base = TextQueries.shardManifest(docs).collect().toSeq
+    val repart = TextQueries.shardManifest(docs.repartition(7)).collect().toSeq
+    val shuffled = TextQueries
       .shardManifest(docs.orderBy(col("text"))).collect().toSeq
     assert(base == repart, "repartitioned input must yield an identical manifest")
     assert(base == shuffled, "row order must not change the manifest")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.{Catalog, Extended21Queries}
+import graft.queries.{Catalog, QualityQueries}
 
 /** Round-8 second wave: event-analytics staples + FK audit. */
 class Extended21Spec extends SparkSpec {
@@ -77,7 +77,7 @@ class Extended21Spec extends SparkSpec {
     import spark.implicits._
     val planted = ((1 to 100).map(i => ("a", i.toDouble)) :+ ("a", 10000.0))
       .toDF("grp", "v")
-    val out = Extended21Queries.iqrOutliers(planted, "grp", "v").collect()(0)
+    val out = QualityQueries.iqrOutliers(planted, "grp", "v").collect()(0)
     assert(out.getLong(6) == 1, s"planted outlier count ${out.getLong(6)}")
     assert(out.getDouble(2) == 26.0 && out.getDouble(3) == 76.0,
       s"rank-based quartiles (${out.getDouble(2)}, ${out.getDouble(3)})")
@@ -95,7 +95,7 @@ class Extended21Spec extends SparkSpec {
     val child = Seq(Some(1L), Some(2L), Some(99L), Some(98L), None)
       .toDF("fk_key")
     val parent = Seq(1L, 2L, 3L).toDF("pk")
-    val audit = Extended21Queries
+    val audit = QualityQueries
       .fkEdge("planted", child, "fk_key", parent, "pk").collect()(0)
     assert(audit.getLong(1) == 5 && audit.getLong(2) == 1 && audit.getLong(3) == 2,
       s"planted audit got (${audit.getLong(1)}, ${audit.getLong(2)}, ${audit.getLong(3)})")

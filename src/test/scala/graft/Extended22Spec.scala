@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.{Catalog, Extended22Queries}
+import graft.queries.{Catalog, QualityQueries}
 
 /** Round-8 third wave: cohort LTV and value reconciliation. */
 class Extended22Spec extends SparkSpec {
@@ -49,7 +49,7 @@ class Extended22Spec extends SparkSpec {
     val o = Seq(
       (1L, "O", 100.0 * 0.9 * 1.2 + 50.0), (2L, "O", 5.0), (3L, "F", 77.0),
     ).toDF("o_orderkey", "o_orderstatus", "o_totalprice")
-    val audit = Extended22Queries.priceReconciliation(o, li).collect()
+    val audit = QualityQueries.priceReconciliation(o, li).collect()
       .map(r => r.getString(0) -> r).toMap
     assert(audit("O").getLong(3) == 0, "reconciling books must report no mismatch")
     assert(audit("O").getDouble(4) == 0.0 && audit("O").getDouble(5) == 0.0)

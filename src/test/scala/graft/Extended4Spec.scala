@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.{Catalog, Extended4Queries}
+import graft.queries.{Catalog, EventQueries}
 
 /** Edge semantics for the round-4 operators: sessionization gap
   * boundaries, funnel ordering, packing arithmetic, repetition and
@@ -16,7 +16,7 @@ class Extended4Spec extends SparkSpec {
       (1L, 1L, 0L),
       (1L, 2L, 1800000000L),
       (1L, 3L, 3600000001L)).toDF("user_id", "event_id", "us")
-    val out = Extended4Queries.sessionize(e, gapUs = 1800000000L)
+    val out = EventQueries.sessionize(e, gapUs = 1800000000L)
       .select($"session_seq", $"n_events").as[(Long, Long)].collect().toSeq
     assert(out === Seq((1L, 2L), (2L, 1L)))
   }
@@ -24,7 +24,7 @@ class Extended4Spec extends SparkSpec {
   test("sessionize: simultaneous events tie-break on event_id and never split") {
     val e = Seq((7L, 10L, 500L), (7L, 11L, 500L), (7L, 12L, 500L))
       .toDF("user_id", "event_id", "us")
-    val out = Extended4Queries.sessionize(e, gapUs = 1L)
+    val out = EventQueries.sessionize(e, gapUs = 1L)
       .select($"session_seq", $"n_events", $"span_sec").as[(Long, Long, Double)]
       .collect().toSeq
     assert(out === Seq((1L, 3L, 0.0)))

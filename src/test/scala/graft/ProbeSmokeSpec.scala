@@ -112,7 +112,7 @@ class ProbeSmokeSpec extends SparkSpec {
       // exclude whitespace and the adversarial `a@bbb…` token never
       // completes a match. At n=1000 the ungated arm is still cheap.
       val huge = 1 << 20
-      val cap = graft.queries.Guards.MaxPiiTokenChars
+      val cap = graft.queries.TextQueries.MaxPiiTokenChars
       val diff = docs.select(col("doc_id"),
           TextStats.countMatchesTokenGated(col("text"), emailRe, cap).as("g_email"),
           TextStats.countMatchesTokenGated(col("text"), emailRe, huge).as("u_email"),

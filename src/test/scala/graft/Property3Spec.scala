@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.queries.{Extended20Queries, Extended21Queries}
+import graft.queries.{QualityQueries, TextQueries}
 
 /** Property pins for the round-8 operator math, Property2Spec-style
   * (seeded ScalaCheck generators): the depth-2 tree never classifies
@@ -55,7 +55,7 @@ class Property3Spec extends SparkSpec {
     samples(Gen.listOfN(30, doc), 4).foreach { docs0 =>
       val docs = docs0.distinctBy(_._1)
       val df = docs.toDF("doc_id", "text")
-      val out = Extended20Queries.shardManifest(df).collect()
+      val out = TextQueries.shardManifest(df).collect()
       val total = out.map(_.getLong(2)).sum
       val nDocs = out.map(_.getLong(1)).sum
       assert(nDocs == docs.size, s"covered $nDocs of ${docs.size}")
@@ -73,7 +73,7 @@ class Property3Spec extends SparkSpec {
     val gen = Gen.listOfN(60, Gen.chooseNum(0, 50000).map(_ / 100.0))
     samples(gen, 6).foreach { vs =>
       val df = vs.map(("g", _)).toDF("grp", "v")
-      val r = Extended21Queries.iqrOutliers(df, "grp", "v").collect()(0)
+      val r = QualityQueries.iqrOutliers(df, "grp", "v").collect()(0)
       val (q1, q3, lo, hi, nOut) =
         (r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getLong(6))
       assert(lo <= q1 && q1 <= q3 && q3 <= hi)

@@ -68,7 +68,7 @@ class Property6Spec extends SparkSpec {
 
     val streamed = spark.table("sess_prop").filter($"user_id" >= 0)
       .select($"user_id", $"n_events").as[(Long, Long)].collect().sorted.toSeq
-    val batch = graft.queries.Extended4Queries.sessionize(
+    val batch = graft.queries.EventQueries.sessionize(
         exact.select($"user_id", $"event_id", unix_micros($"ts").as("us")), GapUs)
       .select($"user_id", $"n_events").as[(Long, Long)].collect().sorted.toSeq
     assert(streamed.nonEmpty)
@@ -81,7 +81,7 @@ class Property6Spec extends SparkSpec {
     val two = Seq((1L, 5L, t0), (2L, 5L, t0 + GapUs))
       .toDF("event_id", "user_id", "us")
       .withColumn("ts", timestamp_micros($"us"))
-    val batch = graft.queries.Extended4Queries.sessionize(
+    val batch = graft.queries.EventQueries.sessionize(
       two.select($"user_id", $"event_id", $"us"), GapUs)
     assert(batch.count() === 1, "batch: gap == 30 min is NOT > 30 min → one session")
     val viaWindow = two
@@ -93,7 +93,7 @@ class Property6Spec extends SparkSpec {
     val split = Seq((1L, 5L, t0), (2L, 5L, t0 + GapUs + 1))
       .toDF("event_id", "user_id", "us")
       .withColumn("ts", timestamp_micros($"us"))
-    assert(graft.queries.Extended4Queries.sessionize(
+    assert(graft.queries.EventQueries.sessionize(
       split.select($"user_id", $"event_id", $"us"), GapUs).count() === 2)
     assert(split.groupBy(session_window($"ts", "30 minutes"), $"user_id")
       .agg(count(lit(1)).as("n")).count() === 2)

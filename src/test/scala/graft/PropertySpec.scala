@@ -63,7 +63,7 @@ class PropertySpec extends SparkSpec {
     val events = samples(gen, 6).flatten.zipWithIndex
       .map { case ((u, sec), i) => (u, i.toLong, sec * 1000000L) }
     val df = events.toDF("user_id", "event_id", "us")
-    val out = graft.queries.Extended4Queries.sessionize(df, gapUs = 600L * 1000000L)
+    val out = graft.queries.EventQueries.sessionize(df, gapUs = 600L * 1000000L)
       .select($"user_id", $"session_seq", $"n_events", $"span_sec")
       .as[(Long, Long, Long, Double)].collect()
     assert(out.map(_._3).sum === events.length.toLong)
