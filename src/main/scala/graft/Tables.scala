@@ -22,9 +22,9 @@ import org.apache.spark.sql.types.StructType
   * inference uses (summary file first, then the first data file;
   * `ParquetFileFormat.readSchemaFromFooter` under the session's
   * `binaryAsString`/`int96AsTimestamp`/`nanosAsLong`/`inferTimestampNTZ`
-  * confs), so the loaded schema is the inferred one. Reads that need
-  * partition discovery or merge appended batches keep Spark's inference:
-  * `Sources.readPartitionedParquet` and DocStream's corpus store.
+  * confs), so the loaded schema is the inferred one. A read that needs
+  * partition discovery or merges appended batches should keep Spark's
+  * inference instead: one footer cannot describe it.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -808,10 +808,10 @@ object Dedup {
     * retired IngestBlast probe: SCALE.md "Round-14, session 3"). The
     * candidate set is bIn ⋈ bC per (band, band_key), so K_in incoming
     * copies of a page whose K_c mutated copies sit in the store emit
-    * K_in × K_c candidates. The shipped streaming composition curates
-    * the store (families collapse to ~one survivor before entering),
-    * but the corpus argument here is ARBITRARY — a raw or seeded store
-    * re-opens the quadratic. With the cap on, each
+    * K_in × K_c candidates. A curated store (families collapsed to
+    * ~one survivor before entering) stays clear of that, but the corpus
+    * argument here is ARBITRARY — a raw or seeded store re-opens the
+    * quadratic. With the cap on, each
     * corpus band bucket contributes at most `corpusBucketCap` members
     * (the smallest c_doc ids — deterministic), bounding candidates at
     * K_in × bands × cap. The incoming side is never capped: every

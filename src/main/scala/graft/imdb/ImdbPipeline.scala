@@ -201,21 +201,6 @@ object ImdbPipeline {
     mergedData.join(stats, Seq("tconst"), "left")
   }
 
-  /** Top-N entities of a csv id column ranked by two aggregates —
-    * data_processing.py:266-288. One explode + hash agg +
-    * TakeOrderedAndProject, then a bounded collect (N ids) that feeds
-    * the flag predicate.
-    */
-  def rankEntitiesByImpact(df: DataFrame, columnName: String, n: Int,
-      ratingCol: String = "averageRating", votesCol: String = "numVotes"): Seq[String] =
-    df.select(col("tconst"), col(ratingCol), col(votesCol),
-        explode(split(col(columnName), ",")).as("entity"))
-      .groupBy(col("entity"))
-      .agg(avg(col(ratingCol)).as("avg_rating"), avg(col(votesCol)).as("avg_votes"))
-      .orderBy(col("avg_rating").desc, col("avg_votes").desc)
-      .limit(n)
-      .select("entity").collect().map(_.getString(0)).toSeq
-
   /** Membership flag of a csv column against a collected top-id set.
     * Fidelity: the reference's unanchored rlike over "id1|id2|…"
     * (data_processing.py:290-298) with its prefix false-positives.
@@ -262,11 +247,6 @@ object ImdbPipeline {
     }
   }
 
-  /** Stage 3 — data_processing.py:253-315: four top-1000 rankings
-    * (directors/writers × rated/popular), four membership flags, then
-    * the reference's `dropna()` (which silently inner-izes the earlier
-    * left joins — preserved, it defines the output dataset).
-    */
   /** The four stage-3 rankings as one value. The reference runs four
     * independent explode+agg+sort jobs (data_processing.py:266-288);
     * the rated and popular orderings of one csv column share the same
@@ -296,6 +276,11 @@ object ImdbPipeline {
     TopSets(directorsRated, writersRated, directorsPopular, writersPopular)
   }
 
+  /** Stage 3 — data_processing.py:253-315: four top-1000 rankings
+    * (directors/writers × rated/popular), four membership flags, then
+    * the reference's `dropna()` (which silently inner-izes the earlier
+    * left joins — preserved, it defines the output dataset).
+    */
   def addPopularityColumns(mergedData: DataFrame, cfg: Config = Config(),
       precomputedTops: Option[TopSets] = None): DataFrame = {
     val tops = precomputedTops.getOrElse(topSets(mergedData, cfg))

@@ -66,7 +66,7 @@ object DedupQueries {
 
   private val dd03Sql =
     raw"""WITH tok AS (
-      |  SELECT doc_id, unnest(${OracleSql.tokens("text")}) AS t
+      |  SELECT doc_id, unnest(${TextStats.tokensSql("text")}) AS t
       |  FROM documents
       |), h AS (
       |  SELECT doc_id, ('0x' || substr(md5(t), 1, 12))::BIGINT AS h FROM tok
@@ -134,7 +134,7 @@ object DedupQueries {
 
   private val dd06Sql =
     raw"""WITH tok AS (
-      |  SELECT doc_id, unnest(${OracleSql.tokens("text")}) AS t
+      |  SELECT doc_id, unnest(${TextStats.tokensSql("text")}) AS t
       |  FROM documents
       |), h AS (
       |  SELECT doc_id, ('0x' || substr(md5(t), 1, 12))::BIGINT AS h FROM tok
@@ -536,7 +536,7 @@ object DedupQueries {
        |    CASE WHEN len(toks) = 0 THEN CAST(0.0 AS DOUBLE) ELSE
        |      round(${OracleSql.quality("len(toks)", "len(list_distinct(toks))", OracleSql.stopHits("toks"))}, 6)
        |    END AS quality
-       |  FROM (SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+       |  FROM (SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
        |        FROM documents)
        | ), best AS (
        |  SELECT doc_id, cluster_id, quality FROM (
@@ -613,7 +613,7 @@ object DedupQueries {
 
   private val dd10Sql =
     raw"""WITH toks AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |grams AS (
       |  SELECT doc_id, st AS pos,
@@ -680,7 +680,7 @@ object DedupQueries {
 
   private val dd11Sql =
     raw"""WITH RECURSIVE toks AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |grams AS (
       |  SELECT doc_id, st AS pos,
@@ -755,7 +755,7 @@ object DedupQueries {
       |    SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS pos
       |    FROM (
       |      SELECT doc_id,
-      |        ${OracleSql.tokens("text")} AS t
+      |        ${TextStats.tokensSql("text")} AS t
       |      FROM documents) d0) d1),
       |chunked AS (
       |  SELECT doc_id, tok, pos,
@@ -900,7 +900,7 @@ object DedupQueries {
   private val dd18Sql =
     raw"""WITH t0 AS (
       |  SELECT doc_id,
-      |    ${OracleSql.tokens("text")} AS ts
+      |    ${TextStats.tokensSql("text")} AS ts
       |  FROM documents),
       |toks AS (
       |  SELECT DISTINCT doc_id,
@@ -979,7 +979,7 @@ object DedupQueries {
   private val dd19Sql =
     raw"""WITH t0 AS (
       |  SELECT doc_id,
-      |    ${OracleSql.tokens("text")} AS ts
+      |    ${TextStats.tokensSql("text")} AS ts
       |  FROM documents),
       |sh AS (
       |  SELECT DISTINCT doc_id,

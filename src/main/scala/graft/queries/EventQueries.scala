@@ -134,11 +134,10 @@ object EventQueries {
       |GROUP BY 1, 2
       |ORDER BY cohort_week, week_offset""".stripMargin
 
-  /** Batch shape of the streaming attribution join (EventStream.
-    * attributed): every purchase attributed to each view by the same
-    * user within the preceding hour — the event-time-bounded interval
-    * join whose streaming twin bounds state by watermarks. Exact
-    * integer-microsecond bounds, so the oracle is trivial.
+  /** Interval attribution: every purchase attributed to each view by
+    * the same user within the preceding hour — an event-time-bounded
+    * interval join. Exact integer-microsecond bounds, so the oracle is
+    * trivial.
     */
   private def q75Attribution(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(s, dir)

@@ -198,7 +198,7 @@ object MlQueries {
        |    $values),
        |toks AS (
        |  SELECT doc_id,
-       |    unnest(${OracleSql.tokens("text")}) AS tok
+       |    unnest(${TextStats.tokensSql("text")}) AS tok
        |  FROM documents),
        |agg AS (
        |  SELECT t.doc_id,
@@ -789,7 +789,7 @@ object MlQueries {
   private val ml07Sql =
     raw"""WITH terms AS (
       |  SELECT doc_id, unnest(toks) AS t
-      |  FROM (SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  FROM (SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |        FROM documents WHERE doc_id < 100)
       |  WHERE len(toks) > 0),
       |h AS (
@@ -1348,7 +1348,7 @@ object MlQueries {
   private[queries] val nbPredsSqlPrefix: String =
     raw"""WITH docs AS (
       |  SELECT doc_id, source,
-      |    ${OracleSql.tokens("text")} AS toks
+      |    ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |nz AS (
       |  SELECT *, ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT % 5

@@ -7,9 +7,11 @@ import graft.text.TextStats
   * mirrors is written here once, so a change to the engine rule has
   * one oracle-side counterpart to change with it.
   *
-  * Text family: the DuckDB mirrors of `TextStats.tokens`, the
-  * exact-dedup fingerprint, the stopword hit count and the quality
-  * score. Dedup family: the MinHash signature and band joins, the
+  * Text family: the DuckDB mirrors of the exact-dedup fingerprint,
+  * the stopword and language-marker hit counts, the language argmax and
+  * the quality score. The tokenizer mirror is `TextStats.tokensSql`,
+  * beside the rule it mirrors, so `graft.text`'s own oracles reach it.
+  * Dedup family: the MinHash signature and band joins, the
   * exact-Jaccard verification, and the label-propagation components.
   *
   * Embedding family: the oracle-side mirror of the engine's
@@ -31,30 +33,40 @@ object OracleSql {
 
   // ------------------------------------------------------------ text
 
-  /** `TextStats.WsClass` run as a SQL string literal. */
-  private val WsRun = s"'${TextStats.WsClass}+'"
-
-  /** `TextStats.tokens` over the text expression `text`: split on
-    * whitespace runs, the empty strings that leading or trailing
-    * whitespace leaves dropped.
-    */
-  def tokens(text: String): String =
-    s"list_filter(regexp_split_to_array($text, $WsRun), z -> z != '')"
-
   /** `TextStats.fingerprint`: md5 of the trimmed, whitespace-run
     * collapsed, ASCII-lowercased (translate, not lower) text.
     */
   def fingerprint(text: String): String =
-    s"md5(translate(regexp_replace(trim($text), $WsRun, ' ', 'g'), " +
+    s"md5(translate(regexp_replace(trim($text), ${TextStats.WsRunSql}, ' ', 'g'), " +
       "'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'))"
 
+  /** `words` as a DuckDB list literal. */
+  private def listLit(words: Seq[String]): String = words.map(w => s"'$w'").mkString("[", ",", "]")
+
   /** `TextStats.DefaultStopwords` as a DuckDB list literal. */
-  private val Stopwords = TextStats.DefaultStopwords.map(w => s"'$w'").mkString("[", ",", "]")
+  private val Stopwords = listLit(TextStats.DefaultStopwords)
 
   /** Stopword hits in the token list `toks` (`TextStats.wordHitCount`
     * over the default stopwords). The long list starts its own line. */
   def stopHits(toks: String): String =
     s"len(list_filter($toks, x -> list_contains(\n      $Stopwords, x)))"
+
+  /** Per-language marker hit counts `c_<lang>` in the token list
+    * `toks`, one select item per `TextStats.LangMarkers` entry — the
+    * staged scores of `TextStats.withLangId`. */
+  def langHits(toks: String): String =
+    TextStats.LangMarkers.map { case (lang, words) =>
+      s"len(list_filter($toks, x -> list_contains(${listLit(words)}, x))) AS c_$lang"
+    }.mkString(",\n    ")
+
+  /** `TextStats.langIdFromScores` over the [[langHits]] columns: the
+    * first language whose count is the positive maximum, else 'und'. */
+  val LangPred: String = {
+    val langs = TextStats.LangMarkers.map(_._1)
+    val best = langs.map(l => s"c_$l").mkString("greatest(", ", ", ")")
+    langs.map(l => s"WHEN c_$l = $best AND $best > 0 THEN '$l'")
+      .mkString("CASE ", "\n    ", "\n    ELSE 'und' END")
+  }
 
   /** `TextStats.qualityScore` from its three counts: 0.4·min(n/50, 1)
     * + 0.4·ttr + 0.2·min(5·stop_ratio, 1). Unrounded and unguarded:
@@ -78,7 +90,7 @@ object OracleSql {
       |    SELECT doc_id, list_transform(toks,
       |      t -> ('0x' || substr(md5(t), 1, 12))::BIGINT % 2147483647) AS th,
       |      toks
-      |    FROM (SELECT doc_id, ${tokens("text")} AS toks
+      |    FROM (SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |          FROM documents)
       |  )
       |  WHERE len(toks) >= 3

@@ -443,8 +443,7 @@ object RelationalQueries {
       |  min(l_quantity) AS min, max(l_quantity) AS max
       |FROM lineitem""".stripMargin
 
-  /** Windowed-by-time aggregation (batch shape of the streaming
-    * pipeline in graft.streaming): hour-bucket × event_type counts.
+  /** Windowed-by-time aggregation: hour-bucket × event_type counts.
     * Extension beyond the reference (SURVEY.md §2.10 notes it has no
     * windows); included because a training-data pipeline needs it.
     */
@@ -1547,7 +1546,7 @@ object RelationalQueries {
 
   private val q79Sql =
     raw"""WITH items AS (
-      |  SELECT unnest(${OracleSql.tokens("text")}) AS item
+      |  SELECT unnest(${TextStats.tokensSql("text")}) AS item
       |  FROM documents),
       |seeds AS (SELECT unnest(range(0, 4)) AS seed),
       |exact AS (SELECT item, count(*) AS exact_cnt FROM items GROUP BY item),

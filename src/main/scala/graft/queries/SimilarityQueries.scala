@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.similarity.Ann
+import graft.text.TextStats
 
 /** Similarity search over the embeddings table — exact, sign-LSH,
   * IVF, PQ, quantized, Hamming, reranked and MIPS top-k, recall
@@ -184,7 +185,7 @@ object SimilarityQueries {
   private val sim05Sql =
     raw"""WITH terms AS (
       |  SELECT doc_id, unnest(toks) AS t
-      |  FROM (SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  FROM (SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |        FROM documents)),
       |h AS (
       |  SELECT doc_id, ('0x' || substr(md5(t), 1, 12))::BIGINT % 1048576 AS h

@@ -40,11 +40,11 @@ object TextQueries {
 
   private val tx01Sql =
     raw"""SELECT doc_id,
-      |  CAST(len(${OracleSql.tokens("text")}) AS INTEGER) AS n_tokens,
-      |  CAST(len(list_distinct(${OracleSql.tokens("text")})) AS INTEGER) AS n_distinct_tokens,
+      |  CAST(len(${TextStats.tokensSql("text")}) AS INTEGER) AS n_tokens,
+      |  CAST(len(list_distinct(${TextStats.tokensSql("text")})) AS INTEGER) AS n_distinct_tokens,
       |  CAST(length(text) AS INTEGER) AS len_chars,
-      |  round(list_sum(list_transform(${OracleSql.tokens("text")}, t -> length(t)))
-      |        / len(${OracleSql.tokens("text")}), 4) AS mean_token_len
+      |  round(list_sum(list_transform(${TextStats.tokensSql("text")}, t -> length(t)))
+      |        / len(${TextStats.tokensSql("text")}), 4) AS mean_token_len
       |FROM documents
       |ORDER BY doc_id""".stripMargin
 
@@ -68,7 +68,7 @@ object TextQueries {
   // 0.0 there, mirroring TextStats.qualityScore's curation-gate guard.
   private val tx02Sql =
     raw"""WITH t AS (
-      |  SELECT doc_id, text, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, text, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents
       |), m AS (
       |  SELECT doc_id, text,
@@ -97,22 +97,15 @@ object TextQueries {
 
   private val tx03Sql =
     raw"""WITH t AS (
-      |  SELECT doc_id, lang, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, lang, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents
       |), sc AS (
       |  SELECT doc_id, lang,
-      |    len(list_filter(toks, x -> list_contains(['the','a','is','and','of'], x))) AS c_en,
-      |    len(list_filter(toks, x -> list_contains(['der','die','das','und','ist'], x))) AS c_de,
-      |    len(list_filter(toks, x -> list_contains(['el','la','los','y','es'], x))) AS c_es,
-      |    len(list_filter(toks, x -> list_contains(['le','la','et','les','est'], x))) AS c_fr
+      |    ${OracleSql.langHits("toks")}
       |  FROM t
       |)
       |SELECT doc_id, lang,
-      |  CASE WHEN c_en = greatest(c_en, c_de, c_es, c_fr) AND greatest(c_en, c_de, c_es, c_fr) > 0 THEN 'en'
-      |       WHEN c_de = greatest(c_en, c_de, c_es, c_fr) AND greatest(c_en, c_de, c_es, c_fr) > 0 THEN 'de'
-      |       WHEN c_es = greatest(c_en, c_de, c_es, c_fr) AND greatest(c_en, c_de, c_es, c_fr) > 0 THEN 'es'
-      |       WHEN c_fr = greatest(c_en, c_de, c_es, c_fr) AND greatest(c_en, c_de, c_es, c_fr) > 0 THEN 'fr'
-      |       ELSE 'und' END AS lang_pred
+      |  ${OracleSql.LangPred} AS lang_pred
       |FROM sc
       |ORDER BY doc_id""".stripMargin
 
@@ -129,7 +122,7 @@ object TextQueries {
 
   private val tx04Sql =
     raw"""SELECT token, count(*) AS freq FROM (
-      |  SELECT unnest(${OracleSql.tokens("text")}) AS token
+      |  SELECT unnest(${TextStats.tokensSql("text")}) AS token
       |  FROM documents
       |)
       |GROUP BY token
@@ -191,25 +184,18 @@ object TextQueries {
 
   private val tx07Sql =
     raw"""WITH t AS (
-      |  SELECT doc_id, text, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, text, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents
       |), m AS (
       |  SELECT doc_id, text,
       |    len(toks) AS n, len(list_distinct(toks)) AS nd,
       |    ${OracleSql.stopHits("toks")} AS nstop,
-      |    len(list_filter(toks, x -> list_contains(['the','a','is','and','of'], x))) AS c_en,
-      |    len(list_filter(toks, x -> list_contains(['der','die','das','und','ist'], x))) AS c_de,
-      |    len(list_filter(toks, x -> list_contains(['el','la','los','y','es'], x))) AS c_es,
-      |    len(list_filter(toks, x -> list_contains(['le','la','et','les','est'], x))) AS c_fr
+      |    ${OracleSql.langHits("toks")}
       |  FROM t
       |), scored AS (
       |  SELECT doc_id,
       |    round(${OracleSql.quality("n", "nd", "nstop")}, 4) AS quality,
-      |    CASE WHEN c_en = greatest(c_en, c_de, c_es, c_fr) AND greatest(c_en, c_de, c_es, c_fr) > 0 THEN 'en'
-      |         WHEN c_de = greatest(c_en, c_de, c_es, c_fr) AND greatest(c_en, c_de, c_es, c_fr) > 0 THEN 'de'
-      |         WHEN c_es = greatest(c_en, c_de, c_es, c_fr) AND greatest(c_en, c_de, c_es, c_fr) > 0 THEN 'es'
-      |         WHEN c_fr = greatest(c_en, c_de, c_es, c_fr) AND greatest(c_en, c_de, c_es, c_fr) > 0 THEN 'fr'
-      |         ELSE 'und' END AS lang_pred
+      |    ${OracleSql.LangPred} AS lang_pred
       |  FROM m
       |), fp AS (
       |  SELECT doc_id, ${OracleSql.fingerprint("text")} AS fp
@@ -257,7 +243,7 @@ object TextQueries {
 
   private val q65Sql =
     raw"""WITH toks AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |terms AS (SELECT doc_id, len(toks) AS doc_len, unnest(toks) AS term
       |          FROM toks WHERE len(toks) > 0),
@@ -317,7 +303,7 @@ object TextQueries {
 
   private val tx08Sql =
     raw"""WITH toks AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |sh AS (SELECT DISTINCT doc_id, ('0x' || substr(md5(sh5s), 1, 12))::BIGINT AS sh5
       |  FROM (SELECT doc_id,
@@ -398,7 +384,7 @@ object TextQueries {
       |  FROM documents),
       |toks AS (
       |  SELECT doc_id,
-      |    ${OracleSql.tokens("aug")} AS toks
+      |    ${TextStats.tokensSql("aug")} AS toks
       |  FROM aug)
       |SELECT doc_id,
       |  -- toks-conditional coalesce (ADVICE r12): DuckDB's list_sum
@@ -452,7 +438,7 @@ object TextQueries {
     raw"""WITH bg AS (
       |  SELECT doc_id,
       |    unnest(list_transform(range(1, len(toks)), i -> array_to_string(toks[i:i+1], ' '))) AS bg
-      |  FROM (SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  FROM (SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |        FROM documents)
       |  WHERE len(toks) >= 2)
       |SELECT doc_id, count(*) AS n_bigrams, count(DISTINCT bg) AS n_distinct,
@@ -487,7 +473,7 @@ object TextQueries {
   private val mx01Sql =
     raw"""WITH t AS (
       |  SELECT source, doc_id,
-      |    CAST(len(${OracleSql.tokens("text")}) AS INTEGER) AS n_tokens
+      |    CAST(len(${TextStats.tokensSql("text")}) AS INTEGER) AS n_tokens
       |  FROM documents),
       |c AS (
       |  SELECT source, doc_id, n_tokens,
@@ -559,7 +545,7 @@ object TextQueries {
 
   private val mx03Sql =
     raw"""WITH toks AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |starts AS (
       |  SELECT doc_id, toks, unnest(range(1, len(toks) + 1, 96)) AS st
@@ -597,7 +583,7 @@ object TextQueries {
 
   private val mx04Sql =
     raw"""WITH t AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |m AS (
       |  SELECT doc_id, len(toks) AS n, len(list_distinct(toks)) AS nd,
@@ -641,7 +627,7 @@ object TextQueries {
   private val tx11Sql =
     raw"""WITH terms AS (
       |  SELECT doc_id, unnest(toks) AS t
-      |  FROM (SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  FROM (SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |        FROM documents)
       |  WHERE len(toks) > 0),
       |vocab AS (SELECT t, count(*) AS c FROM terms GROUP BY 1),
@@ -707,7 +693,7 @@ object TextQueries {
 
   private val mx05Sql =
     raw"""WITH toks AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |fp AS (
       |  SELECT doc_id, ${OracleSql.fingerprint("text")} AS fp
@@ -761,7 +747,7 @@ object TextQueries {
 
   private val tx12Sql =
     raw"""WITH toks AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |spans AS (
       |  SELECT doc_id, CAST((st - 1) // 8 AS INTEGER) AS span_idx,
@@ -828,7 +814,7 @@ object TextQueries {
 
   private val tx14Sql =
     raw"""WITH base AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS t
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS t
       |  FROM documents),
       |toks AS (
       |  SELECT doc_id, pos, t[pos] AS w
@@ -859,7 +845,7 @@ object TextQueries {
 
   private val tx16Sql =
     raw"""WITH toks AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |spans AS (
       |  SELECT doc_id,
@@ -913,7 +899,7 @@ object TextQueries {
 
   private val tx17Sql =
     raw"""WITH t AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |q AS (
       |  -- CASE mirrors TextStats.qualityScore's token-less guard:
@@ -1005,7 +991,7 @@ object TextQueries {
 
   private val mx06Sql =
     raw"""WITH toks AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |fp AS (
       |  SELECT doc_id, ${OracleSql.fingerprint("text")} AS fp
@@ -1110,7 +1096,7 @@ object TextQueries {
       |  FROM (
       |    SELECT source,
       |      unnest(list_transform(range(1, len(toks) - 3), i -> array_to_string(toks[i:i+4], ' '))) AS s5s
-      |    FROM (SELECT source, ${OracleSql.tokens("text")} AS toks
+      |    FROM (SELECT source, ${TextStats.tokensSql("text")} AS toks
       |          FROM documents)
       |    WHERE len(toks) >= 5)),
       |sizes AS (SELECT source, count(*) AS n_sh FROM inv GROUP BY 1),
@@ -1201,7 +1187,7 @@ object TextQueries {
 
   private val mx08Sql =
     raw"""WITH t AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |d AS (
       |  SELECT doc_id,
@@ -1249,7 +1235,7 @@ object TextQueries {
 
   private val tx19Sql =
     raw"""WITH toks AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |bsh AS (
       |  SELECT DISTINCT ('0x' || substr(md5(s), 1, 12))::BIGINT AS h
@@ -1316,7 +1302,7 @@ object TextQueries {
 
   private val q88Sql =
     raw"""WITH toks AS (
-      |  SELECT doc_id, source, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, source, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |nz AS (SELECT * FROM toks WHERE len(toks) > 0),
       |base AS (
@@ -1384,7 +1370,7 @@ object TextQueries {
       |    SELECT doc_id, source, t, unnest(range(1, len(t) + 1)) AS pos
       |    FROM (
       |      SELECT doc_id, source,
-      |        ${OracleSql.tokens("text")} AS t
+      |        ${TextStats.tokensSql("text")} AS t
       |      FROM documents) d0) d1),
       |flagged AS (
       |  SELECT doc_id, source, pos, tok,
@@ -1545,7 +1531,7 @@ object TextQueries {
     * given final query are not evaluated by DuckDB. */
   private val pipelineSqlCtes =
     raw"""WITH toks AS (
-      |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+      |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
       |  FROM documents),
       |fp AS (
       |  SELECT doc_id, ${OracleSql.fingerprint("text")} AS fp
@@ -1726,7 +1712,7 @@ object TextQueries {
     * mx11 can instantiate it once per delivery epoch. */
   private def shardChainSql(sfx: String, pred: String): String =
     s"""t$sfx AS (
-       |  SELECT doc_id, ${OracleSql.tokens("text")} AS toks
+       |  SELECT doc_id, ${TextStats.tokensSql("text")} AS toks
        |  FROM documents WHERE $pred),
        |m$sfx AS (
        |  SELECT doc_id, len(toks) AS n, len(list_distinct(toks)) AS nd,

@@ -149,7 +149,7 @@ object BpeTrainer {
       .mkString("\nUNION ALL\n")
     s"""WITH words AS MATERIALIZED (
        |  SELECT word, count(*) AS wcount
-       |  FROM (SELECT unnest(list_filter(regexp_split_to_array(text, '${TextStats.WsClass}+'), z -> z != '')) AS word
+       |  FROM (SELECT unnest(${TextStats.tokensSql("text")}) AS word
        |        FROM documents)
        |  WHERE regexp_matches(word, '^[a-z0-9]+$$')
        |  GROUP BY word),
@@ -186,7 +186,7 @@ object BpeTrainer {
          |  FROM v$numMerges),
          |doctoks AS (
          |  SELECT doc_id,
-         |    unnest(list_filter(regexp_split_to_array(text, '${TextStats.WsClass}+'), z -> z != '')) AS word
+         |    unnest(${TextStats.tokensSql("text")}) AS word
          |  FROM documents)
          |SELECT d.doc_id,
          |  CAST(count(p.word) AS BIGINT) AS n_trainable,

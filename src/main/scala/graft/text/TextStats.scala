@@ -45,6 +45,17 @@ object TextStats {
   def tokens(text: Column): Column =
     filter(split(text, Ws + "+"), t => length(t) > 0)
 
+  /** [[WsClass]] run as a SQL string literal. */
+  val WsRunSql: String = s"'$WsClass+'"
+
+  /** DuckDB mirror of [[tokens]] over the SQL text expression `text`:
+    * split on whitespace runs, the empty strings that leading or
+    * trailing whitespace leaves dropped. Every oracle tokenizes through
+    * this one spelling, the BPE oracles here and the catalog's alike.
+    */
+  def tokensSql(text: String): String =
+    s"list_filter(regexp_split_to_array($text, $WsRunSql), z -> z != '')"
+
   def tokenCount(text: Column): Column = size(tokens(text))
 
   def distinctTokenCount(text: Column): Column = size(array_distinct(tokens(text)))

@@ -68,8 +68,8 @@ class ImdbSpec extends SparkSpec {
     assert(m("t2").getDouble(4) === 3.0) // but professions x,y,z = 3
   }
 
-  test("rankEntitiesByImpact ranks by avg rating then votes") {
-    val top = ImdbPipeline.rankEntitiesByImpact(initial, "directors", 2)
+  test("topSets ranks directors by avg rating then votes") {
+    val top = ImdbPipeline.topSets(initial, ImdbPipeline.Config(topN = 2)).directorsRated
     // directors: nm1,nm2 (t1: 7.5) vs nm123 (t2: 5.0) → nm1/nm2 first
     assert(top.length === 2)
     assert(top.toSet === Set("nm1", "nm2"))

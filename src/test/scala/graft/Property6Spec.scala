@@ -1,29 +1,24 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.streaming.EventStream
 
-/** Randomized streaming ≡ batch sessionization, plus an explicit pin of
-  * the exact-gap boundary where the two formulations could plausibly
-  * diverge (they don't — see below).
+/** Randomized `session_window` ≡ lag-based sessionization, plus an
+  * explicit pin of the exact-gap boundary where the two formulations
+  * could plausibly diverge (they don't — see below).
   *
-  * Equivalence: on any event set, `session_window` (streaming,
-  * incremental state) and the lag-based batch sessionization must
-  * produce the same per-user session multiset — delivered here across
-  * two time-ordered drops so sessions span the micro-batch cut.
+  * Equivalence: on any event set, Spark's `session_window` grouping and
+  * the lag-based `EventQueries.sessionize` must produce the same
+  * per-user session multiset.
   *
   * Boundary agreement (empirically pinned): both formulations keep an
-  * event at EXACTLY +30 min in the same session — the batch form
+  * event at EXACTLY +30 min in the same session — the lag form
   * because gap > 30 min is strict, session_window because its merge is
   * end-inclusive (an event at the previous window's end extends it).
   * The second test pins that agreement so a Spark-side change to the
-  * merge rule surfaces as a failure here, not as a silent streaming ≡
-  * batch drift in production.
+  * merge rule surfaces as a failure here, not as a silent drift
+  * between the two formulations.
   */
 class Property6Spec extends SparkSpec {
   import spark.implicits._
@@ -33,7 +28,7 @@ class Property6Spec extends SparkSpec {
   private def samples[A](g: Gen[A], n: Int, seed: Long): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(seed + i)))
 
-  test("streaming session_window ≡ batch sessionize on random clustered events") {
+  test("session_window ≡ batch sessionize on random clustered events") {
     // clustered timestamps: a session anchor slot plus a sub-slot
     // offset, so multi-event sessions, singletons, duplicate
     // timestamps, and cross-slot merges all occur
@@ -43,37 +38,19 @@ class Property6Spec extends SparkSpec {
     val rows = samples(gen, 400, 31L).zipWithIndex.map { case ((u, anchor, off), i) =>
       (i.toLong, u, base + anchor * 2 * GapUs + off)
     }
-    val exact = rows.toDF("event_id", "user_id", "us")
-      .withColumn("ts", timestamp_micros(col("us")))
-      .select($"event_id", $"ts", $"user_id",
-        lit("view").as("event_type"), lit(1.0).as("value"), lit("{}").as("props"))
+    val events = rows.toDF("event_id", "user_id", "us")
+      .withColumn("ts", timestamp_micros($"us"))
 
-    val maxTs = exact.agg(max($"ts")).first().getTimestamp(0)
-    val mid = new Timestamp((exact.agg(min($"ts")).first().getTimestamp(0).getTime
-      + maxTs.getTime) / 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess_prop_").toString
-    val q = EventStream.sessionized(EventStream.readEvents(spark, dir),
-        gap = "30 minutes", watermarkDelay = "10 minutes")
-      .writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName("sess_prop").start()
-    exact.filter($"ts" <= lit(mid)).coalesce(1).write.mode("append").parquet(dir)
-    q.processAllAvailable()
-    exact.filter($"ts" > lit(mid)).coalesce(1).write.mode("append").parquet(dir)
-    q.processAllAvailable()
-    Seq((-1L, new Timestamp(maxTs.getTime + 7200000L), -1L, "view", 0.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("append").parquet(dir)
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.table("sess_prop").filter($"user_id" >= 0)
+    val viaWindow = events
+      .groupBy(session_window($"ts", "30 minutes"), $"user_id")
+      .agg(count(lit(1)).as("n_events"))
       .select($"user_id", $"n_events").as[(Long, Long)].collect().sorted.toSeq
     val batch = graft.queries.EventQueries.sessionize(
-        exact.select($"user_id", $"event_id", unix_micros($"ts").as("us")), GapUs)
+        events.select($"user_id", $"event_id", $"us"), GapUs)
       .select($"user_id", $"n_events").as[(Long, Long)].collect().sorted.toSeq
-    assert(streamed.nonEmpty)
-    assert(streamed === batch,
-      s"streaming ${streamed.take(5)}… diverged from batch ${batch.take(5)}…")
+    assert(viaWindow.nonEmpty)
+    assert(viaWindow === batch,
+      s"session_window ${viaWindow.take(5)}… diverged from batch ${batch.take(5)}…")
   }
 
   test("exact-gap boundary: batch and session_window agree the event stays in-session") {
