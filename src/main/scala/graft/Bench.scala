@@ -61,21 +61,21 @@ object Bench {
     * [[worstCaseLineLen]] formats it with worst-case values, so the
     * certified width and the real line cannot drift apart. Per-query
     * readings and spark_par print through the width-capped [[r3q]];
-    * memo_warn and failed through [[boundedNames]].
+    * failed through [[boundedNames]]. `memo_warn` always prints `[]`:
+    * no catalog query memoizes across calls any more, but the driver
+    * parses the line by its 11 keys in this order, so the key stays.
     */
   private[graft] def line(total: Double, cpus: Int, sparkPar: Double,
-      failed: Seq[String], memoWarn: Seq[String],
-      queries: Seq[(String, Double)], sf: String): String = {
+      failed: Seq[String], queries: Seq[(String, Double)], sf: String): String = {
     val qs = queries.map { case (k, v) => s"\"" + k + "\":" + r3q(v) }.mkString("{", ",", "}")
     // "warmup" tags the timing regime so round-over-round totals aren't
     // compared across different warmup regimes (ADVICE r2). v4 =
     // xor-prescan: the v3 sum() prescan ANSI-overflowed and silently
     // warmed nothing in r3-r5. v5 adds the sacrificial first-query run
     // (r10): dd01's timing was absorbing post-prescan JIT residue.
-    // v6 (r11) times headline queries median-of-3 with memos dropped
-    // between reps — a host-load spike now costs one rep, not the
-    // round's reading.
-    s"""{"metric":"total","value":$total,"unit":"sec","warmup":"v6-median3","cpus":$cpus,"spark_par":${r3q(sparkPar)},"n_failed":${failed.size},"failed":${boundedNames(failed, MaxFailedNames)},"memo_warn":${boundedNames(memoWarn, MaxWarnNames)},"queries":$qs,"sf":"$sf"}"""
+    // v6 (r11) times headline queries median-of-3 — a host-load spike
+    // now costs one rep, not the round's reading.
+    s"""{"metric":"total","value":$total,"unit":"sec","warmup":"v6-median3","cpus":$cpus,"spark_par":${r3q(sparkPar)},"n_failed":${failed.size},"failed":${boundedNames(failed, MaxFailedNames)},"memo_warn":[],"queries":$qs,"sf":"$sf"}"""
   }
 
   /** Worst-case printed-line length: [[line]] formatted at pathological
@@ -96,30 +96,21 @@ object Bench {
   private[graft] def lineBudgetOk: Boolean = worstCaseLineLen < 1800
   private[graft] def worstCaseLineLen: Int = {
     // The certified class is the rc=0 line — the r1 failure mode was a
-    // HEALTHY run coming back parsed:null. memo_warn can be non-empty
-    // at rc=0 (it is a warning, not a failure), so it is carried at its
-    // printed bound with the longest headline names; failed non-empty
-    // implies rc=1 (bounded too via boundedNames, but a red line is
-    // diagnostic, not a baseline, and is not certified here). 999
-    // names, not MaxWarnNames+1 (ADVICE r14): memoWarn can span the
-    // whole catalog, so the truncation marker must be the 3-digit
-    // "+997 more", not the 1-digit "+1 more". The sf path gets a
+    // HEALTHY run coming back parsed:null. failed non-empty implies
+    // rc=1 (bounded too via boundedNames, but a red line is diagnostic,
+    // not a baseline, and is not certified here). The sf path gets a
     // 40-char allowance — the env var is caller-controlled, not fixed
     // to the driver's default.
-    val longest = headline.maxBy(_.length)
-    line(99999.999, 999, 9999.999, Nil, Seq.fill(999)(longest),
-      headline.map(_ -> 9999.999), "x" * 40).length
+    line(99999.999, 999, 9999.999, Nil, headline.map(_ -> 9999.999), "x" * 40).length
   }
 
   /** Bounded JSON name-list for the printed line: the first `bound`
-    * names plus a "+N more" marker when truncated. memo_warn and
-    * failed were unbounded through r13 — a mass tripwire firing (or a
-    * mass failure) could push the one line the driver parses past its
-    * buffer, truncating the artifact exactly when it matters most. The
-    * true counts stay in-artifact (n_failed; the marker's N), and the
-    * full lists go to stderr at the call sites.
+    * names plus a "+N more" marker when truncated. failed was
+    * unbounded through r13 — a mass failure could push the one line
+    * the driver parses past its buffer, truncating the artifact
+    * exactly when it matters most. The true count stays in-artifact
+    * (n_failed; the marker's N), and the full list goes to stderr.
     */
-  private[graft] val MaxWarnNames = 2
   private[graft] val MaxFailedNames = 5
   private[graft] def boundedNames(names: Seq[String], bound: Int): String = {
     val shown = names.take(bound) ++
@@ -136,39 +127,6 @@ object Bench {
     */
   private[graft] def lowerMed(rs: Seq[Double], default: Double = 1.0): Double =
     if (rs.isEmpty) default else { val s = rs.sorted; s((s.size - 1) / 2) }
-
-  /** Queries served from a session memo after their first execution:
-    * their memo-hit cost is ALSO recorded (one extra timed run without
-    * clearing) so fresh-vs-steady adjudication is answerable from the
-    * bench artifact alone (VERDICT r10 #4), not from a manual replay.
-    */
-  private[graft] val memoizedQueries =
-    Set("imdb_pipeline_demo", "imdb_pipeline_synth", "ml03_gbt_eval")
-
-  /** Memo-drift tripwire (VERDICT r11 #1): the median-of-3 regime
-    * assumes `isolate(dropMemos=true)` makes every rep pay full cost.
-    * If a future query memoizes through a mechanism
-    * `Catalog.clearMemos` doesn't cover and isn't listed in
-    * [[memoizedQueries]], reps 2+ would time a cache hit and the
-    * median would be fiction — silently, with rc=0. This flags exactly
-    * that signature: a fresh-looking rep-1 followed by a >10×
-    * collapse. The 0.5 s floor keeps sub-second jitter (JIT, page
-    * cache) from tripping it; a real memo hit is a ~millisecond map
-    * lookup, far below any real query's tenth-speed. Carried into the
-    * printed JSON as `"memo_warn"` — a warning field, not a failure.
-    */
-  private[graft] def memoDrift(name: String, reps: Seq[Double],
-      declared: Set[String] = memoizedQueries): Boolean =
-    reps.size > 1 && !declared.contains(name) &&
-      reps.head >= 0.5 && reps.head > 10.0 * reps.tail.min
-
-  /** Memo producer→consumer pairs in the catalog (ADVICE r11): ml04
-    * contractually reuses the GBT model ml03 leaves memoized. Headline
-    * reps clear ALL memos, so if any headline name sorted strictly
-    * between a producer and its consumer, the consumer would silently
-    * flip from memo-hit to full-retrain timing. Asserted at startup.
-    */
-  private val memoPairs = Seq(("ml03_gbt_eval", "ml04_importances"))
 
   private def r3(v: Double): Double = math.round(v * 1000.0) / 1000.0
   // Per-headline-query printed seconds (review r16): the line budget
@@ -213,25 +171,6 @@ object Bench {
     require(lineBudgetOk,
       s"headline list too long: worst-case JSON line exceeds the certified budget " +
         s"(${worstCaseLineLen} chars vs the measured 2000-char driver tail minus slack)")
-    memoPairs.foreach { case (producer, consumer) =>
-      val between = headline.filter(n => n > producer && n < consumer)
-      require(between.isEmpty,
-        s"headline ${between.mkString(",")} sorts between memo producer $producer and " +
-          s"consumer $consumer — its reps would clear the memo and $consumer would " +
-          "silently time a full retrain instead of the contractual memo hit")
-      // The strict between-filter misses the endpoints: promoting the
-      // CONSUMER itself to headline is the same silent flip (its own
-      // reps call isolate(dropMemos=true) before every timing), and
-      // the producer is only safe because its post-reps memo-hit run
-      // leaves the memo repopulated — assert both invariants rather
-      // than rely on the reader remembering them.
-      require(!headline.contains(consumer),
-        s"memo consumer $consumer must not be headline: its own reps would drop " +
-          s"the $producer memo and time full retrains")
-      require(!headline.contains(producer) || memoizedQueries.contains(producer),
-        s"headline memo producer $producer must be in memoizedQueries so its " +
-          "post-reps memo-hit run leaves the memo populated for " + consumer)
-    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nCpus = sparkCpus()
     val spark = SparkSession.builder()
@@ -337,34 +276,19 @@ object Bench {
     // MEDIAN (VERDICT r10 #1): four consecutive rounds chased phantom
     // regressions because single-shot timing hands a host-load spike to
     // whichever query it lands on (dd01 r7-r9; synth's 24.5 s in r10 vs
-    // a 10.3 s judge replay). Between reps the session memos (IMDb
-    // pipeline runs, the shared GBT model) are dropped so every rep
-    // pays the real cost — without that, reps 2+ of the memoized trio
-    // would time a TrieMap hit and the median would be fiction.
+    // a 10.3 s judge replay). Every query is a pure function of its
+    // inputs (no cross-call memo), so every rep pays the real cost.
     final case class Outcome(seconds: Double, ok: Boolean, error: Option[String],
-        reps: Seq[Double], memoizedSec: Option[Double])
+        reps: Seq[Double])
     val HeadlineReps = 3
-    // Red-test drill for the memo-drift tripwire: naming a MEMOIZED
-    // headline query here makes its reps 2+ SKIP the memo clear AND
-    // removes it from the declared set for the sweep — together that
-    // simulates exactly the failure the tripwire exists to catch (an
-    // UNLISTED query memoizing through a mechanism Catalog.clearMemos
-    // doesn't cover). Drill-only — never set in a real round; verified
-    // locally when the tripwire landed (r12):
-    // SPARK_GRAFT_MEMO_DRILL=imdb_pipeline_demo turns memo_warn
-    // non-empty while a normal drive keeps it [].
-    val memoDrill = sys.env.get("SPARK_GRAFT_MEMO_DRILL")
-    val declaredMemos = memoizedQueries -- memoDrill
-    def isolate(dropMemos: Boolean): Unit = {
+    def isolate(): Unit = {
       // Untimed isolation between timings: drop SQL cache and nudge the
       // ContextCleaner (localCheckpoint/persist blocks are freed on GC)
       // so one run's leftover blocks don't tax the next one's timing.
       // Profiled: heavy queries ran 3-7x slower inside the sequential
       // bench than in isolation before this (r2: q21 6.8s vs 0.4s).
-      try {
-        if (dropMemos) queries.Catalog.clearMemos()
-        spark.catalog.clearCache(); System.gc()
-      } catch { case _: Throwable => () }
+      try { spark.catalog.clearCache(); System.gc() }
+      catch { case _: Throwable => () }
     }
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       def once(): (Double, Option[String]) = {
@@ -377,9 +301,7 @@ object Bench {
         ((System.nanoTime() - t0) / 1e9, err)
       }
       val outcome = if (headline.contains(name)) {
-        val reps = (0 until HeadlineReps).map { i =>
-          isolate(dropMemos = !(memoDrill.contains(name) && i > 0)); once()
-        }
+        val reps = (0 until HeadlineReps).map { _ => isolate(); once() }
         val times = reps.map(_._1)
         val errs = reps.flatMap(_._2)
         // Median over SUCCESSFUL reps only (ADVICE r11): a failing rep
@@ -389,38 +311,26 @@ object Bench {
         // diagnostic only at that point, and the reps array has it all).
         val good = reps.collect { case (t, None) => t }
         val medianOf = if (good.nonEmpty) good else times
-        // One extra run WITHOUT clearing: the preceding rep left the
-        // memo populated, so this times the steady (memo-hit) regime.
-        val memoSec =
-          if (memoizedQueries.contains(name) && errs.isEmpty) Some(once()._1) else None
-        Outcome(lowerMed(medianOf), errs.isEmpty, errs.headOption,
-          times, memoSec)
+        Outcome(lowerMed(medianOf), errs.isEmpty, errs.headOption, times)
       } else {
-        // Single-shot for the long tail: these only feed the detail
-        // file, and memos are deliberately NOT dropped — ml04 reusing
-        // ml03's model is the catalog's documented sharing contract.
-        isolate(dropMemos = false)
+        // Single-shot for the long tail: these only feed the detail file.
+        isolate()
         val (dt, err) = once()
-        Outcome(dt, err.isEmpty, err, Seq(dt), None)
+        Outcome(dt, err.isEmpty, err, Seq(dt))
       }
       name -> outcome
     }
     val failed = results.collect { case (k, o) if !o.ok => k }
-    // Tripwire sweep (see memoDrift): only successful headline entries
-    // can produce a trustworthy rep pattern worth flagging.
-    val memoWarn = results.collect { case (k, o) if o.ok && memoDrift(k, o.reps, declaredMemos) => k }
     val total = r3(results.map(_._2.seconds).sum)
     def esc(s: String): String =
       s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => " "
                   case c if c < ' ' => " "; case c => c.toString }
     val detail = results.map { case (k, o) =>
       val err = o.error.map(e => s""","error":"${esc(e)}"""").getOrElse("")
-      // reps = every fresh timing (median is what "seconds" reports);
-      // memoized = the memo-hit steady-state where the query has one.
+      // reps = every timing (median is what "seconds" reports)
       val reps =
         if (o.reps.size > 1) s""","reps":[${o.reps.map(r3).mkString(",")}]""" else ""
-      val memo = o.memoizedSec.map(m => s""","memoized":${r3(m)}""").getOrElse("")
-      s"\"" + k + s"\":{\"seconds\":${r3(o.seconds)},\"ok\":${o.ok}$reps$memo$err}"
+      s"\"" + k + s"\":{\"seconds\":${r3(o.seconds)},\"ok\":${o.ok}$reps$err}"
     }.mkString("{", ",", "}")
     try {
       val p = java.nio.file.Paths.get("target/bench_detail.json")
@@ -429,9 +339,7 @@ object Bench {
     } catch { case _: Throwable => () }
     if (failed.size > MaxFailedNames)
       System.err.println(s"[bench] failed (full list): ${failed.mkString(",")}")
-    if (memoWarn.size > MaxWarnNames)
-      System.err.println(s"[bench] memo_warn (full list): ${memoWarn.mkString(",")}")
-    println(line(total, nCpus, sparkParSec, failed, memoWarn,
+    println(line(total, nCpus, sparkParSec, failed,
       results.collect { case (k, o) if headline.contains(k) => k -> o.seconds }, sfDir))
     spark.stop()
     // A bench with any failed query is not a measurement — make the

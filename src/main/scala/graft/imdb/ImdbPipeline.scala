@@ -28,14 +28,7 @@ import org.apache.spark.sql.functions._
   */
 object ImdbPipeline {
 
-  /** `cacheLevel` is the storage level of the stage-2 intermediate that
-    * the four top-N rankings re-scan (r4 advice: at 100 TB the 8-join
-    * frame doesn't fit in executor memory — use
-    * `StorageLevel.DISK_ONLY` or a parquet checkpoint there).
-    */
-  case class Config(strictFidelity: Boolean = false, topN: Int = 1000,
-      cacheLevel: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  case class Config(strictFidelity: Boolean = false, topN: Int = 1000)
 
   /** The four collected top-N id sets that drive stage 3's membership
     * flags (data_processing.py:253-264) — exposed so a caller (the
@@ -253,6 +246,11 @@ object ImdbPipeline {
     * per-entity aggregate, so each column's aggregate is computed once
     * (one shuffle), cached, and sorted twice — half the stage-3
     * shuffle work for the same collected lists.
+    *
+    * The reference leaves ties at the top-N cut unordered, so which
+    * tied entities make the list depends on partitioning. The entity
+    * id is the last ascending key of both orderings: every list is one
+    * the reference could produce, and every run produces the same one.
     */
   def topSets(mergedData: DataFrame, cfg: Config = Config()): TopSets = {
     val n = cfg.topN
@@ -267,8 +265,8 @@ object ImdbPipeline {
         def top(ordering: Seq[Column]): Seq[String] =
           agg.orderBy(ordering: _*).limit(n)
             .select("entity").collect().map(_.getString(0)).toSeq
-        (top(Seq(col("avg_rating").desc, col("avg_votes").desc)),
-          top(Seq(col("avg_votes").desc, col("avg_rating").desc)))
+        (top(Seq(col("avg_rating").desc, col("avg_votes").desc, col("entity"))),
+          top(Seq(col("avg_votes").desc, col("avg_rating").desc, col("entity"))))
       } finally agg.unpersist()
     }
     val (directorsRated, directorsPopular) = bothOrderings("directors")
@@ -348,7 +346,10 @@ object ImdbPipeline {
     // saving nothing.)
     val initial = initialForm(t.titleAkas, t.titleBasics, t.titleCrew,
       t.titlePrincipals, t.titleRatings, cfg)
-    val withPeople = addPeopleColumns(initial, t.nameBasics).persist(cfg.cacheLevel)
+    // At 100 TB the 8-join frame doesn't fit in executor memory — use
+    // StorageLevel.DISK_ONLY or a parquet checkpoint there.
+    val withPeople = addPeopleColumns(initial, t.nameBasics)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val tops = topSets(withPeople, cfg)
       val withPopularity = addPopularityColumns(withPeople, cfg, Some(tops))

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * 100 TB to a driver:
   *
   *   - M4/P14 label bucketing → [[label]] (pure `when`, no UDF)
-  *   - M5 stratified split    → [[stratifiedSplit]] (sampleBy + anti-join)
+  *   - M5 stratified split    → [[stratifiedSplit]] (seeded draw + anti-join)
   *   - M6 GBT classifier      → [[trainGbt]] (GBTClassifier for
   *     xgboost.train, model_train_explain.py:86-111; parity is
   *     pipeline-level, not metric-identical — SURVEY.md §7.4 item 5)
@@ -51,16 +51,19 @@ object MlPipeline {
     Seq("order_year", "order_month", "prio_urgent", "prio_high", "status_f", "custkey")
 
   /** Stratified train/test split — sklearn train_test_split(stratify=y)
-    * (model_train_explain.py:77-81) via sampleBy per-label fractions
-    * for train + anti-join on a unique key for test. Approximate
-    * per-stratum ratios (Bernoulli sampling), asserted within
-    * tolerance in MlSpec, per SURVEY.md §7.4 item 3.
+    * (model_train_explain.py:77-81): a seeded Bernoulli draw for train
+    * + anti-join on a unique key for test. Every stratum keeps the same
+    * fraction, `1 - testFraction`, so one draw over all rows is the
+    * stratified draw — Spark's `sampleBy` with that fraction for every
+    * label keeps exactly the rows `rand(seed) < 1 - testFraction` keeps,
+    * without the job that collects the labels. Approximate per-stratum
+    * ratios (Bernoulli sampling), asserted within tolerance in MlSpec,
+    * per SURVEY.md §7.4 item 3. `labelCol` names the strata; calling
+    * this starts no job.
     */
   def stratifiedSplit(df: DataFrame, labelCol: String, keyCol: String,
       testFraction: Double = 0.2, seed: Long = 42L): (DataFrame, DataFrame) = {
-    val labels = df.select(labelCol).distinct().collect().map(_.get(0))
-    val fractions = labels.map(l => l -> (1.0 - testFraction)).toMap
-    val train = df.stat.sampleBy(labelCol, fractions, seed)
+    val train = df.filter(rand(seed) < lit(1.0 - testFraction))
     val test = df.join(train.select(keyCol), Seq(keyCol), "left_anti")
     (train, test)
   }
@@ -68,7 +71,7 @@ object MlPipeline {
   /** Deterministic split: membership = md5(key) bucket (the q58/mx02
     * idiom), identical on any engine, run, or partitioning — the
     * reproducible-training variant of [[stratifiedSplit]], whose
-    * seeded sampleBy is partitioning-dependent. Like per-label
+    * seeded Bernoulli draw is partitioning-dependent. Like per-label
     * Bernoulli sampling, each label stratum hits testFraction in
     * expectation (the hash is label-independent); unlike it, re-runs
     * and engines agree row-for-row, which also makes it the ml02 gate
@@ -126,7 +129,7 @@ object MlPipeline {
       featureCols: Seq[String], labelCol: String = "label"): DataFrame = {
     // Persist the scored frame: the AUC evaluator and the metrics agg
     // are separate actions, and without a cache each re-runs the whole
-    // upstream DAG (for a sampleBy/anti-join test split that is two
+    // upstream DAG (for a seeded-draw/anti-join test split that is two
     // extra shuffles) plus per-row tree scoring.
     val transformed = model.transform(assemble(df, featureCols))
       .select(col(labelCol), col("rawPrediction"), col("prediction")).persist()

@@ -21,9 +21,8 @@ final case class Q(
     // Oracle SQL built at dump time rather than object init — for
     // oracles that interpolate values collected from a Spark run (the
     // IMDb pipeline's top-N id sets). Evaluated once, lazily, inside
-    // Catalog.oracleSql: by then Verify has created the SparkSession
-    // and (normally) already executed the query, so the generator
-    // reuses the memoized run instead of launching jobs at class init.
+    // Catalog.oracleSql: by then Verify has created the SparkSession,
+    // so the generator's own Spark run happens there, not at class init.
     oracleGen: Option[() => String] = None)
 
 object Catalog {
@@ -35,18 +34,6 @@ object Catalog {
 
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.fn).toMap
-
-  /** Drop every cross-call memo (the IMDb pipeline runs, the shared
-    * GBT model) so the next query execution does its full work.
-    * Bench-only: per-query repetition (VERDICT r10 #1) must time the
-    * real cost each rep, not a TrieMap hit. Verify never calls this —
-    * its generated oracles must describe the memoized run that
-    * produced the dumped parquet.
-    */
-  def clearMemos(): Unit = {
-    ImdbQueries.clearMemo()
-    MlQueries.clearMemo()
-  }
 
   lazy val oracleSql: Map[String, String] =
     all.flatMap { q =>

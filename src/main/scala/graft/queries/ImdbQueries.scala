@@ -11,31 +11,18 @@ import graft.imdb.{ImdbAnalysis, ImdbDemo, ImdbOracle, ImdbPipeline, ImdbSynth}
   * All three now carry generated DuckDB oracles (ImdbOracle): the demo
   * fixtures are inlined as VALUES, the synth inputs re-derived with the
   * same splitmix arithmetic, and each pipeline run's collected top-N id
-  * sets are interpolated into its oracle. The run is memoized per
-  * SparkSession (r4 advice pattern) so the query fn and its oracle
-  * generator see one execution — the oracle must describe the exact
-  * lists the dumped result used.
+  * sets are interpolated into its oracle. The pipeline is
+  * deterministic (sorted genre columns, entity-id tie-break at every
+  * top-N cut), so each query call and each oracle generator runs it
+  * afresh and sees the same lists and genres.
   */
 object ImdbQueries {
 
-  private val runCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, ImdbPipeline.TopSets)]
-
-  /** Drop the memoized pipeline runs so the next call re-executes from
-    * the inputs. Bench-only (Catalog.clearMemos): repeated timing of
-    * the pipeline queries must measure the pipeline, not a map lookup.
-    * Verify must NOT call this — its oracle generators describe the
-    * exact memoized run the dumped result came from.
-    */
-  private[queries] def clearMemo(): Unit = runCache.clear()
-
   private def demoRun(s: SparkSession): (DataFrame, ImdbPipeline.TopSets) =
-    runCache.getOrElseUpdate((s, "demo"),
-      ImdbPipeline.generateDatasetWithTops(ImdbDemo.tables(s)))
+    ImdbPipeline.generateDatasetWithTops(ImdbDemo.tables(s))
 
   private def synthRun(s: SparkSession): (DataFrame, ImdbPipeline.TopSets) =
-    runCache.getOrElseUpdate((s, "synth"),
-      ImdbPipeline.generateDatasetWithTops(ImdbSynth.tables(s, 30000L, 6000L)))
+    ImdbPipeline.generateDatasetWithTops(ImdbSynth.tables(s, 30000L, 6000L))
 
   /** The one-hot genre schema the run collected, recovered from the
     * result's columns (initialForm's single plan-data dependency).

@@ -46,7 +46,7 @@ object MlQueries {
 
   /** Split sizes per label (M5). The gate runs the deterministic
     * md5-bucket split (engine/run/partitioning-invariant → full
-    * oracle); the reference-shaped seeded sampleBy path stays
+    * oracle); the reference-shaped seeded stratified split stays
     * ratio-tested in MlSpec and drives ml03/ml04 training.
     */
   private def ml02SplitCounts(s: SparkSession, dir: String): DataFrame = {
@@ -70,31 +70,16 @@ object MlQueries {
       |FROM b WHERE bucket >= 8000 GROUP BY label
       |ORDER BY split, label""".stripMargin
 
-  /** One GBT per dataset, memoized: the reference trains a single
-    * model and then BOTH evaluates and explains it
-    * (model_train_explain.py) — ml03/ml04 share that model rather than
-    * each training their own. Training is deterministic (seeded
-    * stratified split, fixed GBT seed), so memoization is purely a
-    * cost optimization; the split itself is cheap and recomputed per
-    * call.
+  /** The GBT of ml03/ml04: the reference trains a single model and
+    * then BOTH evaluates and explains it (model_train_explain.py).
+    * Training is seeded (stratified split, fixed GBT seed), so each
+    * query trains its own copy and both see the same model.
     */
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), org.apache.spark.ml.classification.GBTClassificationModel]
-
-  /** Drop the memoized model so the next ml03/ml04 call retrains.
-    * Bench-only (Catalog.clearMemos) — training is deterministic
-    * (seeded split + fixed GBT seed), so a retrain reproduces the same
-    * model and correctness is unaffected; only the timing regime
-    * changes from map-lookup to real training cost.
-    */
-  private[queries] def clearMemo(): Unit = modelCache.clear()
-
-  private def trainedModel(s: SparkSession, dir: String) =
-    modelCache.getOrElseUpdate((s, dir), {
-      val feats = MlPipeline.orderFeatures(Tables.orders(s, dir))
-      val (train, _) = MlPipeline.stratifiedSplit(feats, "label", "o_orderkey")
-      MlPipeline.trainGbt(train, MlPipeline.OrderFeatureCols)
-    })
+  private def trainedModel(s: SparkSession, dir: String) = {
+    val feats = MlPipeline.orderFeatures(Tables.orders(s, dir))
+    val (train, _) = MlPipeline.stratifiedSplit(feats, "label", "o_orderkey")
+    MlPipeline.trainGbt(train, MlPipeline.OrderFeatureCols)
+  }
 
   /** GBT train + held-out evaluation: one row of metrics (M6+M7). */
   private def ml03GbtEval(s: SparkSession, dir: String): DataFrame = {

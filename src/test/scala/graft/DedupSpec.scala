@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.dedup.Dedup
@@ -133,26 +131,17 @@ class DedupSpec extends SparkSpec {
     // a path 0-1-…-m is labelled one hop deep at label₀, so min-label
     // propagation needs m − 1 rounds of decreases and one confirming
     // round: m rounds, each decided by one count
-    var jobs = 0
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
-    }
     def jobsFor(m: Int): Int = {
       val path = (0L until m.toLong).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-      ListenerDrain(spark.sparkContext)
-      counter.synchronized { jobs = 0 }
-      val got = Dedup.duplicateClusters(path, "doc_a", "doc_b").collect()
-      assert(got.length === m + 1 && got.forall(r => r.getLong(1) == 0L && r.getLong(2) == m + 1L))
-      ListenerDrain(spark.sparkContext)
-      counter.synchronized { jobs }
+      jobsDuring {
+        val got = Dedup.duplicateClusters(path, "doc_a", "doc_b").collect()
+        assert(got.length === m + 1 && got.forall(r => r.getLong(1) == 0L && r.getLong(2) == m + 1L))
+      }
     }
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      val counts = Seq(1, 3, 6).map(jobsFor)
-      // 3 = the distinct-edges stage run by `.rdd`, then the output
-      // window's exchange and result stages
-      assert(counts === Seq(1, 3, 6).map(_ + 3), s"jobs for 1/3/6 rounds: $counts")
-    } finally spark.sparkContext.removeSparkListener(counter)
+    val counts = Seq(1, 3, 6).map(jobsFor)
+    // 3 = the distinct-edges stage run by `.rdd`, then the output
+    // window's exchange and result stages
+    assert(counts === Seq(1, 3, 6).map(_ + 3), s"jobs for 1/3/6 rounds: $counts")
   }
 
   test("duplicateClusters: date, timestamp and widened mixed-width ids; other id types are rejected") {

@@ -1,8 +1,6 @@
 package graft
 
 import graft.ops.Graph
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
@@ -108,23 +106,9 @@ class GraphSpec extends SparkSpec {
     // per-round checkpoint, plan or job
     val edges = Seq(("a", "b"), ("b", "a"), ("a", "c"), ("c", "d"), ("d", "a"))
       .toDF("src", "dst")
-    val sc = spark.sparkContext
-    var jobs = 0
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
-    }
-    def jobsFor(iters: Int): Int = {
-      ListenerDrain(sc)
-      counter.synchronized { jobs = 0 }
-      Graph.pageRank(edges, "src", "dst", iters = iters).collect()
-      ListenerDrain(sc)
-      counter.synchronized { jobs }
-    }
-    sc.addSparkListener(counter)
-    try {
-      val counts = Seq(3, 10, 30).map(jobsFor)
-      assert(counts === Seq(2, 2, 2), s"jobs for iters 3/10/30: $counts")
-    } finally sc.removeSparkListener(counter)
+    val counts = Seq(3, 10, 30).map(iters =>
+      jobsDuring(Graph.pageRank(edges, "src", "dst", iters = iters).collect()))
+    assert(counts === Seq(2, 2, 2), s"jobs for iters 3/10/30: $counts")
   }
 
   test("pageRank rejects id types whose JVM equality differs from SQL equality") {

@@ -75,6 +75,21 @@ class ImdbSpec extends SparkSpec {
     assert(top.toSet === Set("nm1", "nm2"))
   }
 
+  test("topSets breaks ties at the cut by entity id, whatever the partitioning") {
+    // four directors (and writers) with identical (avg_rating, avg_votes):
+    // the reference leaves the top-2 among them unordered
+    val tied = Seq("nm9", "nm30", "nm2", "nm10").zipWithIndex.map { case (id, i) =>
+      (s"t$i", 7.0f, 100, id, id)
+    }.toDF("tconst", "averageRating", "numVotes", "directors", "writers")
+    val cfg = ImdbPipeline.Config(topN = 2)
+    val smallest = Seq("nm10", "nm2")
+    Seq(1, 8).foreach { parts =>
+      val tops = ImdbPipeline.topSets(tied.repartition(parts), cfg)
+      Seq(tops.directorsRated, tops.directorsPopular, tops.writersRated,
+        tops.writersPopular).foreach(l => assert(l === smallest, s"$parts partitions: $tops"))
+    }
+  }
+
   test("addFlag: rlike fidelity has prefix false-positive, default semi-join does not") {
     val fidelity = ImdbPipeline.addFlag(initial, "writers", Seq("nm123"), "flag",
       ImdbPipeline.Config(strictFidelity = true))

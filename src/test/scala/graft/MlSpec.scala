@@ -27,6 +27,11 @@ class MlSpec extends SparkSpec {
     }
   }
 
+  test("stratifiedSplit starts no Spark job") {
+    val f = feats
+    assert(jobsDuring(MlPipeline.stratifiedSplit(f, "label", "o_orderkey", 0.2)) === 0)
+  }
+
   test("deterministic md5-bucket split: disjoint, exhaustive, run-invariant") {
     val (train, test) = MlPipeline.deterministicSplit(feats, "o_orderkey", 0.2)
     assert(train.count() + test.count() === feats.count())

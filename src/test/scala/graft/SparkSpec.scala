@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +25,20 @@ trait SparkSpec extends AnyFunSuite {
   // these (no key list here — it went stale once already, ADVICE r16).
   val Sf001 = "/root/testdata/sf0.01"
   val Sf01 = "/root/testdata/sf0.1"
+
+  /** Spark jobs started while `body` runs, counted by a listener after
+    * draining the bus on both sides so no other work's events leak in.
+    */
+  def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(counter)
+    try { body; ListenerDrain(sc); jobs.get } finally sc.removeSparkListener(counter)
+  }
 }
 
 object SparkSpec {

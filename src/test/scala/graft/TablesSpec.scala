@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
@@ -217,18 +215,9 @@ class TablesSpec extends SparkSpec {
   }
 
   test("load starts no Spark job") {
-    var jobs = 0
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
-    }
     val tables = shardTables :+ sparkWrittenTable()
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      tables.foreach { case (dir, t) => Tables.load(spark, dir, t) }
-      ListenerDrain(spark.sparkContext)
-      assert(counter.synchronized(jobs) === 0, s"jobs started by ${tables.size} loads")
-    } finally spark.sparkContext.removeSparkListener(counter)
+    val jobs = jobsDuring(tables.foreach { case (dir, t) => Tables.load(spark, dir, t) })
+    assert(jobs === 0, s"jobs started by ${tables.size} loads")
   }
 
   test("load: a missing path and an empty directory fail with an AnalysisException naming the path") {
