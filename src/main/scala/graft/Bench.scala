@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark entry point (driver contract, BASELINE.md).
   *
@@ -74,8 +74,10 @@ object Bench {
     // warmed nothing in r3-r5. v5 adds the sacrificial first-query run
     // (r10): dd01's timing was absorbing post-prescan JIT residue.
     // v6 (r11) times headline queries median-of-3 — a host-load spike
-    // now costs one rep, not the round's reading.
-    s"""{"metric":"total","value":$total,"unit":"sec","warmup":"v6-median3","cpus":$cpus,"spark_par":${r3q(sparkPar)},"n_failed":${failed.size},"failed":${boundedNames(failed, MaxFailedNames)},"memo_warn":[],"queries":$qs,"sf":"$sf"}"""
+    // now costs one rep, not the round's reading. v7 times each run
+    // through [[force]] instead of count(), which let Catalyst prune
+    // output projections and so timed a smaller plan than the query.
+    s"""{"metric":"total","value":$total,"unit":"sec","warmup":"v7-forced","cpus":$cpus,"spark_par":${r3q(sparkPar)},"n_failed":${failed.size},"failed":${boundedNames(failed, MaxFailedNames)},"memo_warn":[],"queries":$qs,"sf":"$sf"}"""
   }
 
   /** Worst-case printed-line length: [[line]] formatted at pathological
@@ -154,50 +156,66 @@ object Bench {
     n
   }
 
-  def main(args: Array[String]): Unit = {
-    // Fail loudly if the hand-maintained headline list drifts from the
-    // catalog — a renamed query must not silently vanish from the JSON.
-    val missing = headline.filterNot(SparkEntry.queries.contains)
-    require(missing.isEmpty, s"headline names not in catalog: ${missing.mkString(",")}")
-    // boundedNames interpolates catalog names into the printed JSON
-    // unescaped (ADVICE r14): safe only while names are [A-Za-z0-9_]+ —
-    // a name with a quote or backslash would corrupt the one line the
-    // driver parses. Enforce the precondition instead of escaping
-    // (BenchGuardSpec pins the same pattern over the full catalog).
-    val unprintable = SparkEntry.queries.keys.filterNot(_.matches("[A-Za-z0-9_]+"))
-    require(unprintable.isEmpty,
-      s"catalog names must match [A-Za-z0-9_]+ (the printed JSON interpolates them " +
-        s"unescaped): ${unprintable.mkString(",")}")
-    require(lineBudgetOk,
-      s"headline list too long: worst-case JSON line exceeds the certified budget " +
-        s"(${worstCaseLineLen} chars vs the measured 2000-char driver tail minus slack)")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** A local session on `SPARK_GRAFT_CPUS` cores — the one every driver
+    * entry point (Bench, Verify, SchemaProbe, `graft.tools`) runs on.
+    * UTC is part of the contract: the events loader interprets NTZ
+    * wall-clocks in the session zone, so a non-UTC host would shift
+    * session/window boundaries and drift row counts between runs on
+    * different machines. WindowExec's "No Partition Defined" WARN fires
+    * per plan instantiation on every histogram-CDF window and flooded
+    * the stdout tail the driver captures (VERDICT r19 #5); every
+    * unpartitioned window left in the catalog runs over a provably
+    * bounded frame, pinned by BoundedWindowSpec — the gate that keeps
+    * this suppression honest.
+    */
+  private[graft] def session(): SparkSession = {
     val nCpus = sparkCpus()
-    val spark = SparkSession.builder()
-      .master(s"local[$nCpus]")
+    val spark = SparkSession.builder().master(s"local[$nCpus]")
       .config("spark.sql.shuffle.partitions", nCpus.toString)
-      // same timezone contract as Verify: the events loader interprets
-      // NTZ wall-clocks in the session zone, so a non-UTC host would
-      // shift session/window boundaries and drift row counts between
-      // rounds run on different machines
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // WindowExec single-partition WARN suppressed for the same reason
-    // as Verify: every unpartitioned window left in the catalog is
-    // bound-pinned by BoundedWindowSpec, and the flood was most of the
-    // stdout tail the driver captures around the printed line.
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
     catch { case _: Throwable => () }
-    // Warm up JIT/codegen, shuffle, window, hash/regex expression, and
-    // full-scan paths so the alphabetically-first timed query (dd01)
-    // doesn't absorb session start-up — profiled at ~3 s of cold scan +
-    // codegen otherwise vs 0.7 s steady-state (SCALE.md "r7 dd01/dd02/
-    // sim01/sim07/sim09 regressions root cause"). Queries
-    // run in sorted name order for round-over-round comparability.
+    spark
+  }
+
+  /** Runs `query` to completion and returns its wall seconds with either
+    * (rows, bit_xor(xxhash64(struct(*)))) or the root cause of the
+    * throw. The hash, NOT count(): under count() Catalyst prunes every
+    * deterministic output projection, so a per-row expression that
+    * throws on a degenerate value (an unguarded ANSI 0/0 in a final
+    * SELECT) never runs, and a timing covers a smaller plan than the
+    * query (found in r11 when a deliberately reverted guard stayed
+    * green in the chaos sweep). Hashing a struct of every output column
+    * keeps the whole plan live, which is exactly what a downstream sink
+    * does at scale. Building the frame is timed too: some queries run
+    * eager jobs while they plan.
+    */
+  def force(query: => DataFrame): (Double, Either[String, (Long, Long)]) = {
+    val t0 = System.nanoTime()
+    val res =
+      try {
+        val r = query.selectExpr("count(*)", "coalesce(bit_xor(xxhash64(struct(*))), 0)")
+          .collect()(0)
+        Right((r.getLong(0), r.getLong(1)))
+      } catch { case t: Throwable =>
+        var c = t
+        while (c.getCause != null && c.getCause != c) c = c.getCause
+        Left(s"${c.getClass.getSimpleName}: ${Option(c.getMessage).getOrElse("").linesIterator.take(1).mkString.take(160)}")
+      }
+    ((System.nanoTime() - t0) / 1e9, res)
+  }
+
+  /** Untimed warmup of JIT/codegen, shuffle, window, hash/regex
+    * expression and full-scan paths, so the first timed query doesn't
+    * absorb session start-up — profiled at ~3 s of cold scan + codegen
+    * on dd01 otherwise vs 0.7 s steady-state (SCALE.md "r7 dd01/dd02/
+    * sim01/sim07/sim09 regressions root cause").
+    */
+  private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.range(100000L).selectExpr("id % 32 AS k", "id")
       .groupBy("k").count().collect()
@@ -223,12 +241,37 @@ object Bench {
       (() => Tables.events(spark, sfDir))).foreach { mk =>
       try mk().selectExpr("bit_xor(xxhash64(struct(*)))").collect()
       catch { case e: Throwable =>
-        // Untimed best-effort warmup — a failure here is tolerable but
-        // must not be invisible: an aborted warmup job's ERROR lines in
-        // the driver log looked like a timed-query failure in r4/r5.
+        // Best-effort — a failure here is tolerable but must not be
+        // invisible: an aborted warmup job's ERROR lines in the driver
+        // log looked like a timed-query failure in r4/r5.
         System.err.println(s"[bench-warmup] prescan failed: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
       }
     }
+  }
+
+  def main(args: Array[String]): Unit = {
+    // Fail loudly if the hand-maintained headline list drifts from the
+    // catalog — a renamed query must not silently vanish from the JSON.
+    val missing = headline.filterNot(SparkEntry.queries.contains)
+    require(missing.isEmpty, s"headline names not in catalog: ${missing.mkString(",")}")
+    // boundedNames interpolates catalog names into the printed JSON
+    // unescaped (ADVICE r14): safe only while names are [A-Za-z0-9_]+ —
+    // a name with a quote or backslash would corrupt the one line the
+    // driver parses. Enforce the precondition instead of escaping
+    // (BenchGuardSpec pins the same pattern over the full catalog).
+    val unprintable = SparkEntry.queries.keys.filterNot(_.matches("[A-Za-z0-9_]+"))
+    require(unprintable.isEmpty,
+      s"catalog names must match [A-Za-z0-9_]+ (the printed JSON interpolates them " +
+        s"unescaped): ${unprintable.mkString(",")}")
+    require(lineBudgetOk,
+      s"headline list too long: worst-case JSON line exceeds the certified budget " +
+        s"(${worstCaseLineLen} chars vs the measured 2000-char driver tail minus slack)")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val nCpus = sparkCpus()
+    val spark = session()
+    // Queries run in sorted name order for round-over-round
+    // comparability, after the untimed warmup.
+    warmup(spark, sfDir)
     // Sacrificial untimed run of the alphabetically-first timed query:
     // the xor-prescan warms scans/codegen generically, but across r7-r9
     // dd01 still reported 2.8/18.0/7.4 s against a ProfileQ isolated
@@ -238,9 +281,8 @@ object Bench {
     // dropped after) moves the residue out of the measurement without
     // touching any query code.
     SparkEntry.queries.toSeq.sortBy(_._1).headOption.foreach { case (n, fn) =>
-      try { fn(spark, sfDir).count(); () }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench-warmup] sacrificial $n failed: ${e.getClass.getSimpleName}")
+      force(fn(spark, sfDir))._2.left.foreach { e =>
+        System.err.println(s"[bench-warmup] sacrificial $n failed: $e")
       }
       try { spark.catalog.clearCache(); System.gc() }
       catch { case _: Throwable => () }
@@ -292,13 +334,8 @@ object Bench {
     }
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       def once(): (Double, Option[String]) = {
-        val t0 = System.nanoTime()
-        val err =
-          try { fn(spark, sfDir).count(); None }
-          catch { case t: Throwable =>
-            Some(s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("").take(200)}")
-          }
-        ((System.nanoTime() - t0) / 1e9, err)
+        val (dt, res) = force(fn(spark, sfDir))
+        (dt, res.left.toOption)
       }
       val outcome = if (headline.contains(name)) {
         val reps = (0 until HeadlineReps).map { _ => isolate(); once() }

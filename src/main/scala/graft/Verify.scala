@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,26 +12,7 @@ object Verify {
         val ps = prefixes.split(','); name => ps.exists(name.startsWith)
       case None => _ => true
     }
-    val cpus = Bench.sparkCpus()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // WindowExec's "No Partition Defined" WARN fires per plan
-    // instantiation on every histogram-CDF window and flooded this
-    // tail with hundreds of copies, burying real warnings (VERDICT r19
-    // #5). Every unpartitioned window left in the catalog runs over a
-    // provably bounded frame — the bounds are pinned by
-    // BoundedWindowSpec, which is the gate that keeps this suppression
-    // honest; a genuinely unbounded new site must fail there, not
-    // whisper here.
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
     // Probe every table's post-loader schema first (named fail-fast on
     // testdata drift — the r8 events.ts regeneration killed 28 queries

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Scale probe over the [[Shards]] regimes (driver-side tooling): builds
   * the regime's shard at each size and times its queries there, so a
@@ -12,7 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Usage: runMain graft.tools.Blast <regime> [size ...]
   *   regime ∈ dup, neardup, skew, regex, giant (sizes default per regime)
   *   SPARK_GRAFT_SF_DIR  source testdata (default sf0.001)
-  * Runs on `SPARK_GRAFT_CPUS` cores, validated as Bench does.
+  * Runs on `graft.Bench.session()`; each query is timed with
+  * `graft.Bench.force`.
   */
 object Blast {
 
@@ -55,44 +56,6 @@ object Blast {
       // shingle inverted-index dedup (giant doc joins the candidate pool)
       "dd02_jaccard_pairs")))
 
-  /** Runs `query` to completion and returns its wall seconds with either
-    * (rows, bit_xor(xxhash64(struct(*)))) or the root cause of the
-    * throw. The hash, NOT count(): under count() Catalyst prunes every
-    * deterministic output projection, so a per-row expression that
-    * throws on a degenerate value (an unguarded ANSI 0/0 in a final
-    * SELECT) never runs, and a probe times a smaller plan than the
-    * query (found in r11 when a deliberately reverted guard stayed
-    * green in the chaos sweep). Hashing a struct of every output column
-    * keeps the whole plan live, which is exactly what a downstream sink
-    * does at scale. Building the frame is timed too: some queries run
-    * eager jobs while they plan.
-    */
-  def force(query: => DataFrame): (Double, Either[String, (Long, Long)]) = {
-    val t0 = System.nanoTime()
-    val res =
-      try {
-        val r = query.selectExpr("count(*)", "coalesce(bit_xor(xxhash64(struct(*))), 0)")
-          .collect()(0)
-        Right((r.getLong(0), r.getLong(1)))
-      } catch { case t: Throwable =>
-        var c = t
-        while (c.getCause != null && c.getCause != c) c = c.getCause
-        Left(s"${c.getClass.getSimpleName}: ${Option(c.getMessage).getOrElse("").linesIterator.take(1).mkString.take(160)}")
-      }
-    ((System.nanoTime() - t0) / 1e9, res)
-  }
-
-  /** A local session on `SPARK_GRAFT_CPUS` cores, as Bench and Verify run. */
-  private[tools] def session(): SparkSession = {
-    val nCpus = graft.Bench.sparkCpus()
-    val spark = SparkSession.builder().master(s"local[$nCpus]")
-      .config("spark.sql.shuffle.partitions", nCpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val regime = args.headOption.flatMap(regimes.get).getOrElse {
       System.err.println(s"usage: Blast <${regimes.keys.toSeq.sorted.mkString("|")}> [size ...]")
@@ -100,7 +63,7 @@ object Blast {
     }
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val sizes = if (args.length > 1) args.toSeq.tail.map(_.toInt) else regime.sizes
-    val spark = session()
+    val spark = graft.Bench.session()
     // per-run temp base: two concurrent probe runs on one host must
     // not overwrite each other's shard mid-sweep (the ChaosGateSpec
     // lesson, ADVICE r11)
@@ -111,7 +74,7 @@ object Blast {
       println(s"== ${args(0)} $size ==")
       for (name <- regime.queries) {
         spark.catalog.clearCache()
-        force(graft.SparkEntry.queries(name)(spark, dir)) match {
+        graft.Bench.force(graft.SparkEntry.queries(name)(spark, dir)) match {
           case (dt, Right((n, x))) => println(f"$name%-26s $dt%8.2fs rows=$n%d x=$x%016x")
           case (dt, Left(e)) => println(f"$name%-26s $dt%8.2fs THREW $e")
         }

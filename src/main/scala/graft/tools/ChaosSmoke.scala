@@ -138,12 +138,12 @@ object ChaosSmoke {
     * and by ChaosGateSpec, which makes this sweep part of `sbt test`
     * (VERDICT r10 #3): the degenerate-input guarantee is a machine
     * gate, not a tool the builder remembers to run. Each query runs
-    * under [[Blast.force]], whose hash keeps every output projection
+    * under [[graft.Bench.force]], whose hash keeps every output projection
     * live, so a throw in a final SELECT cannot pass unexecuted.
     */
   def sweep(spark: SparkSession, dir: String): Seq[(String, String)] =
     graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val (dt, res) = Blast.force(fn(spark, dir))
+      val (dt, res) = graft.Bench.force(fn(spark, dir))
       // per-query progress line: when a degenerate row sends a plan
       // quadratic (r11: a year-9999 ts exploding a window frame), the
       // stuck query must be identifiable from the log, not a jstack
@@ -156,7 +156,7 @@ object ChaosSmoke {
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_CHAOS", "/tmp/graft_chaos")
-    val spark = Blast.session()
+    val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     build(spark, srcDir, outDir)

@@ -2,7 +2,7 @@ package graft.tools
 
 /** Dump formatted physical plans for selected catalog queries (dev
   * tool). Usage: runMain graft.tools.Explain <sfDir> [name ...]
-  * Runs on `SPARK_GRAFT_CPUS` cores, validated as Bench does.
+  * Runs on `graft.Bench.session()`.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -10,7 +10,7 @@ object Explain {
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q01_pricing_summary", "q05_join_broadcast", "q13_trends",
         "q07_topk", "dd02_jaccard_pairs", "sim01_brute_topk")
-    val spark = Blast.session()
+    val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -4,25 +4,17 @@ package graft.tools
   * the named catalog queries, several rounds each, after Bench's warmup
   * — separates cold-start from steady-state cost so optimization work
   * targets the right component. Each timing forces the whole plan
-  * through [[Blast.force]], not count().
+  * through `graft.Bench.force`, as Bench does.
   *
   * Usage: runMain graft.tools.ProfileQ q30_sql_entry ml03_gbt_eval
-  * Runs on `SPARK_GRAFT_CPUS` cores, validated as Bench does.
+  * Runs on `graft.Bench.session()`.
   */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val rounds = sys.env.getOrElse("SPARK_GRAFT_ROUNDS", "3").toInt
-    val spark = Blast.session()
-
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.range(100000L).selectExpr("id % 32 AS k", "id")
-      .groupBy("k").count().collect()
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach { t =>
-      try graft.Tables.load(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
+    val spark = graft.Bench.session()
+    graft.Bench.warmup(spark, sfDir)
 
     val names = if (args.nonEmpty) args.toSeq else Seq("q01_pricing_summary")
     // Bench's isolation before every timing: drop the SQL cache and
@@ -30,7 +22,7 @@ object ProfileQ {
     for (r <- 1 to rounds; name <- names) {
       try { spark.catalog.clearCache(); System.gc() }
       catch { case _: Throwable => () }
-      Blast.force(graft.queries.Catalog.queries(name)(spark, sfDir)) match {
+      graft.Bench.force(graft.queries.Catalog.queries(name)(spark, sfDir)) match {
         case (dt, Right((n, x))) => println(f"[$r] $name%-28s $dt%8.3f s  rows=$n x=$x%016x")
         case (dt, Left(e)) => println(f"[$r] $name%-28s $dt%8.3f s  THREW $e")
       }

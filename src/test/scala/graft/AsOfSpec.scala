@@ -3,6 +3,8 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import graft.ops.AsOf
+import graft.plans.AsofMergeJoinExec
+import org.scalacheck.Gen
 
 class AsOfSpec extends SparkSpec {
   import spark.implicits._
@@ -118,7 +120,7 @@ class AsOfSpec extends SparkSpec {
     val custom = AsOf.asofJoinLatestExec(purchases, clicks, "user_id", "ts", "click_value")
     assert(custom.schema.fieldNames.toSeq === composed.schema.fieldNames.toSeq)
     assert(custom.exceptAll(composed).isEmpty && composed.exceptAll(custom).isEmpty)
-    assert(custom.queryExecution.executedPlan.toString.contains("AsofMergeJoin"),
+    assert(PlanTree.nodes(custom).exists(_.isInstanceOf[AsofMergeJoinExec]),
       "expected the custom physical operator in the plan")
   }
 
@@ -152,5 +154,117 @@ class AsOfSpec extends SparkSpec {
         .otherwise(0L)).as("simhash"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast === slow)
+  }
+
+  test("as-of exec ≡ composition ≡ driver-side reference on random multi-partition data") {
+    for (round <- 0 until 3) {
+      val keyGen = Gen.chooseNum(0L, 15L) // small domain → heavy key collisions
+      val tsGen = Gen.chooseNum(0L, 500L) // small range → ties and equal-ts matches
+      val n = 400 + round * 57
+      val leftRows = samples(Gen.zip(keyGen, tsGen), n, 1000L * round)
+        .zipWithIndex.map { case ((k, t), i) => (i.toLong, k, t) }
+      // unique (key, ts) on the right per the operator contract
+      val rightRows = samples(Gen.zip(keyGen, tsGen), n / 2, 9000L + round)
+        .distinct.map { case (k, t) => (k, t, k * 10000.0 + t) }
+
+      val left = leftRows.toDF("event_id", "user_id", "us")
+        .withColumn("ts", timestamp_micros(col("us"))).drop("us")
+        .repartition(7)
+      val right = rightRows.toDF("user_id", "us", "v")
+        .withColumn("ts", timestamp_micros(col("us"))).drop("us")
+        .select(col("user_id"), col("ts"), col("v"))
+        .repartition(5)
+
+      def collect(df: org.apache.spark.sql.DataFrame): Seq[(Long, Option[Double])] =
+        df.select(col("event_id"), col("v"))
+          .as[(Long, Option[Double])].collect().toSeq.sortBy(_._1)
+
+      val viaExec = collect(AsOf.asofJoinLatestExec(left, right, "user_id", "ts", "v"))
+      val viaComposition = collect(AsOf.asofJoinLatest(left, right, "user_id", "ts", "v"))
+
+      // driver-side reference: latest right row with rts <= lts per key
+      val byKey = rightRows.groupBy(_._1)
+      val reference = leftRows.map { case (id, k, t) =>
+        val m = byKey.getOrElse(k, Seq.empty).filter(_._2 <= t)
+        id -> (if (m.isEmpty) None else Some(m.maxBy(_._2)._3))
+      }.sortBy(_._1)
+
+      assert(viaExec.size === leftRows.size, s"round $round: exec dropped left rows")
+      assert(viaExec === reference, s"round $round: exec diverges from reference")
+      assert(viaComposition === reference, s"round $round: composition diverges from reference")
+    }
+  }
+
+  test("as-of exec: keys present on only one side and empty right partitions") {
+    // left keys 0..9, right keys only 0..4 → half the left rows NULL-pad;
+    // right has fewer distinct keys than partitions → some merge
+    // partitions see an empty right iterator
+    val left = (0 until 100).map(i => (i.toLong, (i % 10).toLong, i.toLong * 10))
+      .toDF("event_id", "user_id", "us")
+      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
+      .repartition(8)
+    val right = (0 until 25).map(i => ((i % 5).toLong, i.toLong * 37, i * 1.5))
+      .toDF("user_id", "us", "v")
+      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
+      .select(col("user_id"), col("ts"), col("v"))
+      .repartition(8)
+    val out = AsOf.asofJoinLatestExec(left, right, "user_id", "ts", "v")
+    assert(out.count() === 100, "every left row must survive")
+    val unmatched = out.filter(col("user_id") >= 5)
+    assert(unmatched.count() === 50)
+    assert(unmatched.filter(col("v").isNotNull).count() === 0,
+      "keys absent from the right must NULL-pad, never match")
+  }
+
+  test("bucketed+sorted inputs run the custom as-of join with ZERO exchanges") {
+    import org.apache.spark.sql.functions._
+    val ev = Tables.events(spark, Sf0001)
+    // the metastore is fresh per JVM but the warehouse dir persists —
+    // clear both so overwrite can't trip LOCATION_ALREADY_EXISTS
+    Seq("b_purchases", "b_clicks").foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      SparkSpec.deleteRecursively(s"/tmp/graft_warehouse/$t")
+    }
+    // one write task → one file per bucket, so the scan reports both
+    // bucket partitioning AND in-bucket sort order
+    ev.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("ts"))
+      .repartition(1)
+      .write.mode("overwrite").bucketBy(4, "user_id").sortBy("user_id", "ts")
+      .saveAsTable("b_purchases")
+    ev.filter(col("event_type") === "click")
+      .groupBy(col("user_id"), col("ts"))
+      .agg(round(max(col("value")), 2).as("click_value"))
+      .repartition(1)
+      .write.mode("overwrite").bucketBy(4, "user_id").sortBy("user_id", "ts")
+      .saveAsTable("b_clicks")
+    val out = graft.ops.AsOf.asofJoinLatestExec(
+      spark.table("b_purchases"), spark.table("b_clicks"),
+      "user_id", "ts", "click_value")
+    assert(PlanTree.nodes(out).exists(_.isInstanceOf[AsofMergeJoinExec]))
+    val exchanges = PlanTree.exchanges(out)
+    assert(exchanges.isEmpty, s"bucketed as-of join should be shuffle-free: $exchanges")
+    assert(out.count() === spark.table("b_purchases").count(),
+      "as-of join must preserve every left row")
+  }
+
+  test("AsofLimitPushDown pushes LIMIT into the as-of join's probe side") {
+    import org.apache.spark.sql.functions._
+    val ev = Tables.events(spark, Sf0001)
+    val clicks = ev.filter(col("event_type") === "click")
+      .groupBy(col("user_id"), col("ts"))
+      .agg(round(max(col("value")), 2).as("click_value"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val limited = graft.ops.AsOf.asofJoinLatestExec(
+      purchases, clicks, "user_id", "ts", "click_value").limit(7)
+    val optimized = limited.queryExecution.optimizedPlan
+    val pushed = optimized.collect {
+      case j: graft.plans.AsofJoin
+          if j.left.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalLimit] => j
+    }
+    assert(pushed.nonEmpty,
+      s"expected LocalLimit pushed into AsofJoin's left child:\n$optimized")
+    assert(limited.count() === 7)
   }
 }

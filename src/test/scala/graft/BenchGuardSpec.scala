@@ -63,7 +63,7 @@ class BenchGuardSpec extends AnyFunSuite {
         "rotate a redundant headline sibling out (r15 dd02/tx08, r16 mx05 precedents)")
     // the driver contract: exactly these top-level keys, in this order
     assert(Bench.line(12.5, 4, 1.25, Seq("q_a"), Seq("q01" -> 0.5), "/sf") ===
-      """{"metric":"total","value":12.5,"unit":"sec","warmup":"v6-median3",""" +
+      """{"metric":"total","value":12.5,"unit":"sec","warmup":"v7-forced",""" +
       """"cpus":4,"spark_par":1.25,"n_failed":1,"failed":["q_a"],"memo_warn":[],""" +
       """"queries":{"q01":0.5},"sf":"/sf"}""")
   }

@@ -53,6 +53,27 @@ class CatalogSpec extends SparkSpec {
       s"the no-oracle set is contractual — it changed to: $noOracle")
   }
 
+  test("specs are filed by family: no round-numbered spec, and every catalog family has its own") {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/test/scala"))
+    val specs = try walk.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith("Spec.scala")).toSet finally walk.close()
+    val numbered = specs.filter(n => n.matches("""\w+\d+Spec\.scala""") ||
+      n == "PropertySpec.scala" || n == "PlanSpec.scala")
+    assert(numbered.isEmpty, s"specs named after a round, not a family: ${numbered.toSeq.sorted}")
+    // the family modules Catalog.all concatenates, read from its source
+    val catalogSrc = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/queries/Catalog.scala")), "UTF-8")
+    val allExpr = catalogSrc.substring(catalogSrc.indexOf("lazy val all"),
+      catalogSrc.indexOf("lazy val queries"))
+    val families = """(\w+)Queries\.all""".r.findAllMatchIn(allExpr).map(_.group(1)).toSeq
+    assert(families.size == 11, s"expected the 11 family modules, read $families")
+    // the similarity family's spec is named after its module, Ann
+    val specOf = Map("Similarity" -> "AnnSpec.scala").withDefault(f => s"${f}Spec.scala")
+    val missing = families.filterNot(f => specs(specOf(f)))
+    assert(missing.isEmpty, s"catalog families with no spec of their own: $missing")
+  }
+
   test("the flagship entry and Bench headline names are catalog members") {
     val live = graft.queries.Catalog.queries.keySet
     val missing = Bench.headline.filterNot(live)

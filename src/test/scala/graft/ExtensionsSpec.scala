@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.plans.GraftExtensions
+import org.scalacheck.Gen
 
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
@@ -96,6 +97,79 @@ class ExtensionsSpec extends SparkSpec {
     intercept[org.apache.spark.sql.AnalysisException] {
       Seq((Array(1.0), Array(2.0))).toDF("a", "b")
         .select(graft.functions.ArrayFns.sortedIntersectCount($"a", $"b")).collect()
+    }
+  }
+
+  /** Run `q` once under forced codegen and once fully interpreted. */
+  private def bothModes[T](q: => Seq[T]): (Seq[T], Seq[T]) = {
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    val gen = try q finally spark.conf.unset("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val interp = try q finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+    (gen, interp)
+  }
+
+  private def sameDouble(a: Double, b: Double): Boolean =
+    java.lang.Double.compare(a, b) == 0 || (a.isNaN && b.isNaN)
+
+  test("DotProduct: codegen ≡ interpreted ≡ sequential reference on adversarial arrays") {
+    val elem = Gen.frequency(
+      7 -> Gen.chooseNum(-1e3f, 1e3f),
+      1 -> Gen.oneOf(0.0f, -0.0f, Float.NaN, Float.PositiveInfinity,
+        Float.NegativeInfinity, Float.MinPositiveValue, 3.4e38f))
+    val arr = Gen.chooseNum(0, 9).flatMap(n => Gen.listOfN(n, elem).map(_.toArray))
+    val rows = samples(Gen.zip(arr, arr), 300, 7L)
+      .zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }
+    // driver-side reference: min-length zip, strict left-to-right sum
+    val expect = rows.map { case (id, a, b) =>
+      var s = 0.0; var i = 0; val n = math.min(a.length, b.length)
+      while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+      id -> s
+    }.toMap
+    val df = rows.toDF("id", "a", "b")
+    df.createOrReplaceTempView("v_dot_prop")
+    graft.plans.GraftExtensions.register(spark)
+    def run: Seq[(Long, Double)] =
+      spark.sql("SELECT id, graft_dot(a, b) FROM v_dot_prop")
+        .as[(Long, Double)].collect().toSeq
+    val (viaCodegen, viaInterp) = bothModes(run)
+    assert(viaCodegen.size === rows.size)
+    Seq("codegen" -> viaCodegen, "interpreted" -> viaInterp).foreach { case (mode, got) =>
+      got.foreach { case (id, v) =>
+        assert(sameDouble(v, expect(id)),
+          s"$mode: row $id got $v expected ${expect(id)}")
+      }
+    }
+  }
+
+  test("Md5Hash48: codegen ≡ interpreted ≡ MessageDigest reference on unicode strings") {
+    val str = Gen.frequency(
+      6 -> Gen.listOf(Gen.alphaNumChar).map(_.mkString),
+      2 -> Gen.listOf(Gen.oneOf("α", "β", "語", "🎲", "é", " ", "\t", ":", "|")).map(_.mkString),
+      1 -> Gen.const(""),
+      1 -> Gen.listOfN(500, Gen.alphaChar).map(_.mkString))
+    val rows = samples(str, 300, 99L).zipWithIndex.map { case (s, i) => (i.toLong, s) }
+    val mdRef = java.security.MessageDigest.getInstance("MD5")
+    val expect = rows.map { case (id, s) =>
+      val d = mdRef.digest(s.getBytes("UTF-8"))
+      id -> (((d(0) & 0xffL) << 40) | ((d(1) & 0xffL) << 32) | ((d(2) & 0xffL) << 24) |
+        ((d(3) & 0xffL) << 16) | ((d(4) & 0xffL) << 8) | (d(5) & 0xffL))
+    }.toMap
+    rows.toDF("id", "s").createOrReplaceTempView("v_md5_prop")
+    graft.plans.GraftExtensions.register(spark)
+    def run: Seq[(Long, Long)] =
+      spark.sql("SELECT id, graft_md5h48(s) FROM v_md5_prop")
+        .as[(Long, Long)].collect().toSeq
+    val (viaCodegen, viaInterp) = bothModes(run)
+    assert(viaCodegen.size === rows.size)
+    Seq("codegen" -> viaCodegen, "interpreted" -> viaInterp).foreach { case (mode, got) =>
+      got.foreach { case (id, v) =>
+        assert(v === expect(id), s"$mode: row $id mismatch")
+      }
     }
   }
 }

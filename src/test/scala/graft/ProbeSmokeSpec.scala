@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.{SparkSpec, Tables}
+import graft.{Bench, SparkSpec, Tables}
 import graft.dedup.Dedup
 import graft.text.TextStats
 
@@ -206,7 +206,7 @@ class ProbeSmokeSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.ansi.enabled") === "true")
     def frame = spark.range(3).select((col("id") / lit(0)).as("q"))
     assert(frame.count() === 3L)
-    val (_, res) = Blast.force(frame)
+    val (_, res) = Bench.force(frame)
     assert(res.isLeft && res.left.exists(_.contains("DIVIDE_BY_ZERO")), res)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.{Expression, GreaterThan}
 
 /** Typed Dataset surface: case-class Encoders, typed filter/map,
   * groupByKey with typed aggregators — the API tier the brief calls
@@ -34,14 +35,14 @@ class TypedSpec extends SparkSpec {
   }
 
   test("Column predicates push to the scan; typed lambdas (opaquely) do not") {
-    val columnPlan = Tables.orders(spark, Sf0001)
-      .filter($"o_totalprice" > 200000.0).queryExecution.executedPlan.toString
-    assert(columnPlan.contains("PushedFilters") && columnPlan.contains("o_totalprice"),
-      "Column predicate must reach the parquet scan")
-    val typedPlan = orders.filter(_.o_totalprice > 200000.0)
-      .queryExecution.executedPlan.toString
-    assert(!typedPlan.linesIterator.exists(l =>
-      l.contains("PushedFilters") && l.contains("GreaterThan(o_totalprice")),
-      "lambda predicates are opaque to pushdown — documented trade-off")
+    def pushed(df: org.apache.spark.sql.DataFrame) =
+      PlanTree.scans(df).flatMap(_.dataFilters)
+    def onPrice(f: Expression) = f.references.exists(_.name == "o_totalprice")
+    val columnPushed = pushed(Tables.orders(spark, Sf0001).filter($"o_totalprice" > 200000.0))
+    assert(columnPushed.exists(f => f.isInstanceOf[GreaterThan] && onPrice(f)),
+      s"Column predicate must reach the parquet scan: $columnPushed")
+    val typedPushed = pushed(orders.filter(_.o_totalprice > 200000.0).toDF())
+    assert(!typedPushed.exists(onPrice),
+      s"lambda predicates are opaque to pushdown — documented trade-off: $typedPushed")
   }
 }
