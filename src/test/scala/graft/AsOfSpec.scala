@@ -156,6 +156,10 @@ class AsOfSpec extends SparkSpec {
     assert(fast === slow)
   }
 
+  // The custom exec is the one hand-written physical operator in the
+  // engine: three independent implementations (the exec, the
+  // union+window composition, a driver-side Scala reference) must
+  // agree on arbitrary multi-partition data.
   test("as-of exec ≡ composition ≡ driver-side reference on random multi-partition data") {
     for (round <- 0 until 3) {
       val keyGen = Gen.chooseNum(0L, 15L) // small domain → heavy key collisions

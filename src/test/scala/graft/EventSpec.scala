@@ -204,6 +204,11 @@ class EventSpec extends SparkSpec {
     }
   }
 
+  // Both formulations keep an event at EXACTLY +30 min in the same
+  // session — the lag form because gap > 30 min is strict,
+  // session_window because its merge is end-inclusive. The boundary
+  // test pins that agreement so a Spark-side change to the merge rule
+  // fails here instead of drifting silently between the two.
   test("session_window ≡ batch sessionize on random clustered events") {
     // clustered timestamps: a session anchor slot plus a sub-slot
     // offset, so multi-event sessions, singletons, duplicate

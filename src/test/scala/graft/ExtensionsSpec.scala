@@ -100,6 +100,13 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  // Each custom expression on the hot paths is computed three ways —
+  // forced whole-stage codegen, interpreted eval, and a driver-side
+  // reference — over generated inputs including empty arrays,
+  // mismatched lengths, non-finite floats and multi-byte unicode, so a
+  // doGenCode that diverges from nullSafeEval fails here before it can
+  // corrupt a dedup fingerprint or an ANN score.
+
   /** Run `q` once under forced codegen and once fully interpreted. */
   private def bothModes[T](q: => Seq[T]): (Seq[T], Seq[T]) = {
     spark.conf.set("spark.sql.codegen.fallback", "false")
