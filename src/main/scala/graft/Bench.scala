@@ -156,99 +156,6 @@ object Bench {
     n
   }
 
-  /** A local session on `SPARK_GRAFT_CPUS` cores — the one every driver
-    * entry point (Bench, Verify, SchemaProbe, `graft.tools`) runs on.
-    * UTC is part of the contract: the events loader interprets NTZ
-    * wall-clocks in the session zone, so a non-UTC host would shift
-    * session/window boundaries and drift row counts between runs on
-    * different machines. WindowExec's "No Partition Defined" WARN fires
-    * per plan instantiation on every histogram-CDF window and flooded
-    * the stdout tail the driver captures (VERDICT r19 #5); every
-    * unpartitioned window left in the catalog runs over a provably
-    * bounded frame, pinned by BoundedWindowSpec — the gate that keeps
-    * this suppression honest.
-    */
-  private[graft] def session(): SparkSession = {
-    val nCpus = sparkCpus()
-    val spark = SparkSession.builder().master(s"local[$nCpus]")
-      .config("spark.sql.shuffle.partitions", nCpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
-    spark
-  }
-
-  /** Runs `query` to completion and returns its wall seconds with either
-    * (rows, bit_xor(xxhash64(struct(*)))) or the root cause of the
-    * throw. The hash, NOT count(): under count() Catalyst prunes every
-    * deterministic output projection, so a per-row expression that
-    * throws on a degenerate value (an unguarded ANSI 0/0 in a final
-    * SELECT) never runs, and a timing covers a smaller plan than the
-    * query (found in r11 when a deliberately reverted guard stayed
-    * green in the chaos sweep). Hashing a struct of every output column
-    * keeps the whole plan live, which is exactly what a downstream sink
-    * does at scale. Building the frame is timed too: some queries run
-    * eager jobs while they plan.
-    */
-  def force(query: => DataFrame): (Double, Either[String, (Long, Long)]) = {
-    val t0 = System.nanoTime()
-    val res =
-      try {
-        val r = query.selectExpr("count(*)", "coalesce(bit_xor(xxhash64(struct(*))), 0)")
-          .collect()(0)
-        Right((r.getLong(0), r.getLong(1)))
-      } catch { case t: Throwable =>
-        var c = t
-        while (c.getCause != null && c.getCause != c) c = c.getCause
-        Left(s"${c.getClass.getSimpleName}: ${Option(c.getMessage).getOrElse("").linesIterator.take(1).mkString.take(160)}")
-      }
-    ((System.nanoTime() - t0) / 1e9, res)
-  }
-
-  /** Untimed warmup of JIT/codegen, shuffle, window, hash/regex
-    * expression and full-scan paths, so the first timed query doesn't
-    * absorb session start-up — profiled at ~3 s of cold scan + codegen
-    * on dd01 otherwise vs 0.7 s steady-state (SCALE.md "r7 dd01/dd02/
-    * sim01/sim07/sim09 regressions root cause").
-    */
-  private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.range(100000L).selectExpr("id % 32 AS k", "id")
-      .groupBy("k").count().collect()
-    spark.range(10000L).selectExpr("id % 8 AS k", "id")
-      .selectExpr("k", "row_number() OVER (PARTITION BY k ORDER BY id) AS rn")
-      .filter("rn <= 3").collect()
-    spark.range(10000L)
-      .selectExpr("md5(regexp_replace(cast(id AS string), '0+', ' ')) AS f",
-        "filter(split(cast(id AS string), '1'), x -> length(x) > 0) AS t")
-      .selectExpr("count(distinct f)", "sum(size(t))").collect()
-    // count() is metadata-only (reads no column chunks); hash every
-    // column so the parquet readers, decompression, and string-heavy
-    // codegen paths are warm — profiled: the alphabetically-first
-    // query (dd01, full-text md5) absorbed ~2.5 s of cold column reads
-    // under the count()-based prescan. bit_xor, NOT sum: under Spark 4
-    // default ANSI, summing random 64-bit hashes overflows almost
-    // surely, and through r5 that aborted every prescan job silently —
-    // the recurring mid-bench "aborting job" ERROR and the cold-read
-    // noise on dd01 both trace to this.
-    (Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings")
-      .map(t => () => Tables.load(spark, sfDir, t)) :+
-      (() => Tables.events(spark, sfDir))).foreach { mk =>
-      try mk().selectExpr("bit_xor(xxhash64(struct(*)))").collect()
-      catch { case e: Throwable =>
-        // Best-effort — a failure here is tolerable but must not be
-        // invisible: an aborted warmup job's ERROR lines in the driver
-        // log looked like a timed-query failure in r4/r5.
-        System.err.println(s"[bench-warmup] prescan failed: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     // Fail loudly if the hand-maintained headline list drifts from the
     // catalog — a renamed query must not silently vanish from the JSON.
@@ -383,5 +290,98 @@ object Bench {
     // process exit status itself red so no downstream consumer can
     // mistake a contaminated run for a baseline.
     if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** A local session on `SPARK_GRAFT_CPUS` cores — the one every driver
+    * entry point (Bench, Verify, SchemaProbe, `graft.tools`) runs on.
+    * UTC is part of the contract: the events loader interprets NTZ
+    * wall-clocks in the session zone, so a non-UTC host would shift
+    * session/window boundaries and drift row counts between runs on
+    * different machines. WindowExec's "No Partition Defined" WARN fires
+    * per plan instantiation on every histogram-CDF window and flooded
+    * the stdout tail the driver captures (VERDICT r19 #5); every
+    * unpartitioned window left in the catalog runs over a provably
+    * bounded frame, pinned by BoundedWindowSpec — the gate that keeps
+    * this suppression honest.
+    */
+  private[graft] def session(): SparkSession = {
+    val nCpus = sparkCpus()
+    val spark = SparkSession.builder().master(s"local[$nCpus]")
+      .config("spark.sql.shuffle.partitions", nCpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    try org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+    catch { case _: Throwable => () }
+    spark
+  }
+
+  /** Runs `query` to completion and returns its wall seconds with either
+    * (rows, bit_xor(xxhash64(struct(*)))) or the root cause of the
+    * throw. The hash, NOT count(): under count() Catalyst prunes every
+    * deterministic output projection, so a per-row expression that
+    * throws on a degenerate value (an unguarded ANSI 0/0 in a final
+    * SELECT) never runs, and a timing covers a smaller plan than the
+    * query (found in r11 when a deliberately reverted guard stayed
+    * green in the chaos sweep). Hashing a struct of every output column
+    * keeps the whole plan live, which is exactly what a downstream sink
+    * does at scale. Building the frame is timed too: some queries run
+    * eager jobs while they plan.
+    */
+  def force(query: => DataFrame): (Double, Either[String, (Long, Long)]) = {
+    val t0 = System.nanoTime()
+    val res =
+      try {
+        val r = query.selectExpr("count(*)", "coalesce(bit_xor(xxhash64(struct(*))), 0)")
+          .collect()(0)
+        Right((r.getLong(0), r.getLong(1)))
+      } catch { case t: Throwable =>
+        var c = t
+        while (c.getCause != null && c.getCause != c) c = c.getCause
+        Left(s"${c.getClass.getSimpleName}: ${Option(c.getMessage).getOrElse("").linesIterator.take(1).mkString.take(160)}")
+      }
+    ((System.nanoTime() - t0) / 1e9, res)
+  }
+
+  /** Untimed warmup of JIT/codegen, shuffle, window, hash/regex
+    * expression and full-scan paths, so the first timed query doesn't
+    * absorb session start-up — profiled at ~3 s of cold scan + codegen
+    * on dd01 otherwise vs 0.7 s steady-state (SCALE.md "r7 dd01/dd02/
+    * sim01/sim07/sim09 regressions root cause").
+    */
+  private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    spark.range(100000L).selectExpr("id % 32 AS k", "id")
+      .groupBy("k").count().collect()
+    spark.range(10000L).selectExpr("id % 8 AS k", "id")
+      .selectExpr("k", "row_number() OVER (PARTITION BY k ORDER BY id) AS rn")
+      .filter("rn <= 3").collect()
+    spark.range(10000L)
+      .selectExpr("md5(regexp_replace(cast(id AS string), '0+', ' ')) AS f",
+        "filter(split(cast(id AS string), '1'), x -> length(x) > 0) AS t")
+      .selectExpr("count(distinct f)", "sum(size(t))").collect()
+    // count() is metadata-only (reads no column chunks); hash every
+    // column so the parquet readers, decompression, and string-heavy
+    // codegen paths are warm — profiled: the alphabetically-first
+    // query (dd01, full-text md5) absorbed ~2.5 s of cold column reads
+    // under the count()-based prescan. bit_xor, NOT sum: under Spark 4
+    // default ANSI, summing random 64-bit hashes overflows almost
+    // surely, and through r5 that aborted every prescan job silently —
+    // the recurring mid-bench "aborting job" ERROR and the cold-read
+    // noise on dd01 both trace to this.
+    (Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "documents", "embeddings")
+      .map(t => () => Tables.load(spark, sfDir, t)) :+
+      (() => Tables.events(spark, sfDir))).foreach { mk =>
+      try mk().selectExpr("bit_xor(xxhash64(struct(*)))").collect()
+      catch { case e: Throwable =>
+        // Best-effort — a failure here is tolerable but must not be
+        // invisible: an aborted warmup job's ERROR lines in the driver
+        // log looked like a timed-query failure in r4/r5.
+        System.err.println(s"[bench-warmup] prescan failed: ${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
+      }
+    }
   }
 }
