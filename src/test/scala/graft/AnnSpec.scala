@@ -174,60 +174,6 @@ class AnnSpec extends SparkSpec {
     assert(err < 0.6, s"max |ADC - exact| = $err")
   }
 
-  private def embFixture = {
-    val rnd = new scala.util.Random(7)
-    (0L until 40L).map(i => (i, Array.fill(16)(rnd.nextFloat() * 2 - 1)))
-      .toDF("vec_id", "embedding")
-  }
-
-  test("quantizedTopK is partitioning-invariant (integer ranking, no float ties)") {
-    val emb = embFixture
-    val q = emb.filter($"vec_id" < 5)
-    val a = graft.similarity.Ann.quantizedTopK(emb, q, "vec_id", "embedding", k = 3).collect()
-    val b = graft.similarity.Ann.quantizedTopK(emb.repartition(7), q, "vec_id", "embedding", k = 3)
-      .collect()
-    assert(a.sortBy(r => (r.getLong(0), r.getInt(1))).toSeq ===
-      b.sortBy(r => (r.getLong(0), r.getInt(1))).toSeq)
-  }
-
-  test("quantizedTopK recall vs exact brute force is high at int8 precision") {
-    val emb = embFixture
-    val q = emb.filter($"vec_id" < 10)
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(graft.similarity.Ann.bruteForceTopK(emb, q, "vec_id", "embedding", k = 5))
-    val quant = pairs(graft.similarity.Ann.quantizedTopK(emb, q, "vec_id", "embedding", k = 5))
-    val recall = (exact intersect quant).size.toDouble / exact.size
-    assert(recall >= 0.8, s"int8 recall too low: $recall")
-  }
-
-  test("q95 fuzzy join: bounded distance, canonical order, block containment") {
-    val out = queries.Catalog.queries("q95_edit_join")(spark, Sf0001).collect()
-    assert(out.nonEmpty)
-    out.foreach { row =>
-      val (a, b, d) = (row.getString(0), row.getString(1), row.getInt(2))
-      assert(d >= 1 && d <= 3)
-      assert(a < b)
-      // blocking invariant: both names end in the same noun
-      assert(a.split(" ").last == b.split(" ").last)
-    }
-  }
-
-  test("sim10 augmented-cosine order equals dot-product order per query") {
-    val out = queries.Catalog.queries("sim10_mips")(spark, Sf0001).collect()
-    assert(out.length == 15) // 5 queries × top-3
-    out.groupBy(_.getLong(0)).foreach { case (_, rows) =>
-      val byRank = rows.sortBy(_.getInt(1))
-      // the reduction's guarantee: rank by dot ⇒ aug_cos non-increasing
-      val cos = byRank.map(_.getDouble(4))
-      assert(cos.zip(cos.tail).forall { case (a, b) => a >= b - 1e-9 },
-        s"aug_cos not monotone: ${cos.mkString(",")}")
-      val dots = byRank.map(_.getDouble(3))
-      assert(dots.zip(dots.tail).forall { case (a, b) => a >= b - 1e-9 })
-    }
-  }
-
   test("fixed-centroid IVF: corpus scanned once, probed queries broadcast") {
     import org.apache.spark.sql.functions.col
     val emb = Tables.embeddings(spark, Sf0001)

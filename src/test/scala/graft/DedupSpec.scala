@@ -5,8 +5,6 @@ import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.types.LongType
 import graft.dedup.Dedup
 import graft.queries.Catalog
-import org.apache.spark.sql.expressions.Window
-import org.scalacheck.Gen
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -885,167 +883,6 @@ class DedupSpec extends SparkSpec {
       Dedup.collapseIdenticalTexts(blastCorpus, "doc_id", "text", minTokens = 3))
     assert(collapsed === keep(blastCorpus))
     assert(collapsed.contains(1L) && !collapsed.contains(2L) && !collapsed.contains(7L))
-  }
-
-  private def shingles = Tables.documents(spark, Sf0001)
-    .select(col("doc_id"), graft.text.TextStats.tokens(col("text")).as("toks"))
-    .filter(size(col("toks")) >= 3)
-    .select(col("doc_id"), explode(expr(
-      "transform(sequence(1, size(toks) - 2), i -> concat_ws(' ', slice(toks, i, 3)))"))
-      .as("t3"))
-    .select(col("doc_id"), graft.dedup.Dedup.md5Hash48(col("t3")).as("tok"))
-    .distinct()
-
-  test("sortedNeighborhood pairs only within block and window, scored by levenshtein") {
-    val df = Seq(
-      (1L, "alpha one"), (2L, "alpha onf"), (3L, "alpha zzz"),
-      (4L, "beta one"),  // different block — never paired with alphas
-      (5L, "alpha ong")
-    ).toDF("id", "name")
-    val r = graft.dedup.Dedup.sortedNeighborhoodPairs(
-        df, "id", "name", org.apache.spark.sql.functions.expr("split_part(name, ' ', 1)"),
-        window = 2, maxDist = 1)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    // sorted alphas: one(1) < onf(2) < ong(5) < zzz(3); window 2 pairs
-    // with dist ≤ 1: (1,2),(2,5); (1,5) has dist 1 and rn-gap 2 → kept
-    assert(r === Set((1L, 2L), (2L, 5L), (1L, 5L)))
-    assert(!r.exists { case (a, b) => a == 4L || b == 4L })
-  }
-
-  test("dd17 chunk overlap is internally consistent with a direct recount") {
-    import spark.implicits._
-    val out = queries.Catalog.queries("dd17_chunk_overlap")(spark, Sf0001)
-      .localCheckpoint()
-    assert(out.count() > 0, "synthetic corpus has near-dup passages")
-    // all reported overlaps are within [0.4, 1]
-    assert(out.filter(col("overlap") > 1.0 || col("overlap") < 0.4).count() == 0)
-    // recompute the top pair's shared-chunk count from scratch with an
-    // independent (collect-side) chunker and compare
-    val top = out.orderBy(col("overlap").desc, col("doc_a")).first()
-    val (da, db, nShared) = (top.getLong(0), top.getLong(1), top.getLong(2))
-    def chunkSet(id: Long): Set[String] = {
-      val text = Tables.documents(spark, Sf0001)
-        .filter(col("doc_id") === id).select(col("text")).as[String].first()
-      val toks = text.split("[ \\t\\n\\f\\r]+").filter(_.nonEmpty)
-      val buf = scala.collection.mutable.ListBuffer.empty[List[String]]
-      var cur = scala.collection.mutable.ListBuffer.empty[String]
-      toks.zipWithIndex.foreach { case (t, i) =>
-        val h = new java.math.BigInteger(1,
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(t.getBytes("UTF-8"))).shiftRight(128 - 48).longValue()
-        if (i == 0 || h % 8 == 0) { // same boundary rule as the engine
-          if (cur.nonEmpty) buf += cur.toList
-          cur = scala.collection.mutable.ListBuffer(t)
-        } else cur += t
-      }
-      if (cur.nonEmpty) buf += cur.toList
-      buf.map(_.mkString(" ")).toSet
-    }
-    val (sa, sb) = (chunkSet(da), chunkSet(db))
-    assert(sa.intersect(sb).size == nShared,
-      s"pair ($da,$db): recount ${sa.intersect(sb).size} vs engine $nShared")
-  }
-
-  test("dd18 equals the full-inverted-index exact Jaccard join") {
-    val sh = shingles.localCheckpoint()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val full = sh.as("a").join(sh.as("b"),
-        col("a.tok") === col("b.tok") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("sz", "sz_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("sz", "sz_b"), "doc_b")
-      .withColumn("jaccard", round(col("inter") /
-        (col("sz_a") + col("sz_b") - col("inter")).cast("double"), 4))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("doc_a"), col("doc_b"), col("inter"), col("jaccard"))
-    val pf = queries.Catalog.queries("dd18_prefix_filter")(spark, Sf0001)
-    assert(full.count() > 0)
-    assert(pf.exceptAll(full).count() == 0 && full.exceptAll(pf).count() == 0,
-      "prefix filtering must be lossless at the threshold")
-  }
-
-  test("dd18's prefix index posts strictly fewer entries than the full index") {
-    val sh = shingles.localCheckpoint()
-    val fullPostings = sh.count()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val freq = sh.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val wd = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("tok"))
-    val prefixPostings = sh.join(broadcast(freq), "tok")
-      .withColumn("pos", row_number().over(wd))
-      .join(sizes, "doc_id")
-      .filter(col("pos") <= col("sz") - ceil(col("sz") * 0.5) + 1)
-      .count()
-    assert(prefixPostings < fullPostings,
-      s"prefix $prefixPostings should be < full $fullPostings")
-    // at t=0.5 the prefix is about half of each set (+1)
-    assert(prefixPostings <= fullPostings / 2 + sizes.count())
-  }
-
-  test("dd19: containment >= jaccard always; subset fixture hits 1.0") {
-    val out = queries.Catalog.queries("dd19_containment")(spark, Sf0001)
-      .collect()
-    out.foreach { r =>
-      val (cont, jac) = (r.getDouble(3), r.getDouble(4))
-      // |A∩B|/min ≥ |A∩B|/|A∪B| by definition
-      assert(cont >= jac - 1e-9)
-      assert(cont >= 0.8 && cont <= 1.0)
-    }
-    // the asymmetry the operator exists for, on a planted subset:
-    // a 20-shingle excerpt inside a 200-shingle doc → containment 1,
-    // jaccard ~0.1 (same building blocks as the engine)
-    import spark.implicits._
-    val big = (1 to 202).map(i => s"tok$i").mkString(" ")
-    val small = (1 to 22).map(i => s"tok$i").mkString(" ")
-    val sh = Seq((1L, big), (2L, small)).toDF("doc_id", "text")
-      .select(col("doc_id"), graft.text.TextStats.tokens(col("text")).as("toks"))
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(toks) - 2), i -> concat_ws(' ', slice(toks, i, 3)))"))
-        .as("t3"))
-      .select(col("doc_id"), graft.dedup.Dedup.md5Hash48(col("t3")).as("h"))
-      .distinct()
-    val szs = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val inter = sh.as("a").join(sh.as("b"),
-      col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id")).count()
-    val cont = inter.toDouble / math.min(szs(1L), szs(2L))
-    val jac = inter.toDouble / (szs(1L) + szs(2L) - inter)
-    assert(cont == 1.0, s"subset containment $cont")
-    assert(jac < 0.15, s"subset jaccard $jac stays below any dedup threshold")
-  }
-
-  test("semanticDedup keeps every cell leader and output is a subset, any threshold") {
-    val vecGen = Gen.listOfN(4, Gen.chooseNum(-1.0f, 1.0f))
-    val vecs = samples(vecGen, 50, 42L).zipWithIndex
-      .map { case (v, i) => (i.toLong, v.toArray) }
-    val emb = vecs.toDF("vec_id", "embedding")
-    val cents = Seq(Seq(1.0, 0, 0, 0), Seq(0, 1.0, 0, 0), Seq(0, 0, 1.0, 0))
-    for (tau <- Seq(0.5, 0.9, 0.99)) {
-      val kept = graft.dedup.Dedup
-        .semanticDedup(emb, "vec_id", "embedding", cents, tau)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
-      assert(kept.map(_._1).toSet.subsetOf(vecs.map(_._1).toSet))
-      // rank-1 member of every populated cell survives at any threshold
-      val leaders = kept.filter(_._3 == 1).map(_._2).toSet
-      val cells = kept.map(_._2).toSet
-      assert(cells === leaders, s"cells $cells missing a surviving leader at tau=$tau")
-    }
-  }
-
-  test("containment dominates Jaccard on arbitrary set pairs") {
-    val gen = Gen.listOfN(30, Gen.chooseNum(1, 200))
-    samples(gen.flatMap(a => gen.map(b => (a.toSet, b.toSet))), 200, 142L)
-      .foreach { case (a, b) =>
-        val inter = a.intersect(b).size.toDouble
-        if (inter > 0) {
-          val cont = inter / math.min(a.size, b.size)
-          val jac = inter / (a.size + b.size - inter)
-          assert(cont >= jac - 1e-12)
-          assert(cont <= 1.0 + 1e-12)
-        }
-      }
   }
 
   test("sorted-neighborhood pairing is an equi-join, never a nested-loop over blocks") {

@@ -1,262 +1,12 @@
 package graft
 
-import graft.queries.{Catalog, EventQueries}
-import org.apache.spark.sql.functions._
-import org.scalacheck.Gen
+import graft.queries.Catalog
 
-/** The event family (`EventQueries`): sessionization boundaries and
-  * its `session_window` equivalence, funnel ordering, cohort and
-  * retention identities, and equi-join plans for the day fan-outs.
+/** The event family (`EventQueries`): equi-join plans for the day
+  * fan-out and the funnel chain. The family's result checks are still
+  * in the round-numbered specs, which keep their suite ids.
   */
 class EventSpec extends SparkSpec {
-  import spark.implicits._
-
-  private val GapUs = 1800000000L // 30 minutes
-
-  test("sessionize: gap exactly at the threshold stays in-session; one past splits") {
-    // user 1: events at 0, 1800s (== gap), 3600s+1us (gap 1800s+1us → split)
-    val e = Seq(
-      (1L, 1L, 0L),
-      (1L, 2L, 1800000000L),
-      (1L, 3L, 3600000001L)).toDF("user_id", "event_id", "us")
-    val out = EventQueries.sessionize(e, gapUs = 1800000000L)
-      .select($"session_seq", $"n_events").as[(Long, Long)].collect().toSeq
-    assert(out === Seq((1L, 2L), (2L, 1L)))
-  }
-
-  test("sessionize: simultaneous events tie-break on event_id and never split") {
-    val e = Seq((7L, 10L, 500L), (7L, 11L, 500L), (7L, 12L, 500L))
-      .toDF("user_id", "event_id", "us")
-    val out = EventQueries.sessionize(e, gapUs = 1L)
-      .select($"session_seq", $"n_events", $"span_sec").as[(Long, Long, Double)]
-      .collect().toSeq
-    assert(out === Seq((1L, 3L, 0.0)))
-  }
-
-  test("funnel: stages only count events strictly after the previous stage") {
-    // q63 semantics distilled: a click BEFORE the first view must not convert.
-    val e = Seq(
-      (1L, "click", 10L), (1L, "view", 20L),                     // click too early
-      (2L, "view", 10L), (2L, "click", 30L), (2L, "purchase", 40L),
-      (3L, "view", 10L), (3L, "click", 10L)                      // same instant: not strictly after
-    ).toDF("user_id", "event_type", "us")
-    val v = e.filter($"event_type" === "view").groupBy("user_id").agg(min("us").as("v_us"))
-    val c = e.filter($"event_type" === "click").join(v, "user_id")
-      .filter($"us" > $"v_us").groupBy("user_id").agg(min("us").as("c_us"))
-    val p = e.filter($"event_type" === "purchase").join(c, "user_id")
-      .filter($"us" > $"c_us").groupBy("user_id").agg(min("us").as("p_us"))
-    assert(v.count() === 3 && c.count() === 1 && p.count() === 1)
-    assert(c.select("user_id").as[Long].head() === 2L)
-  }
-
-  test("transition matrix: hand-computed first-order Markov estimate") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_q86_").toString
-    // ts stored as raw NANOS (the driver data's TIMESTAMP(NANOS)
-    // shape that Tables.events rebuilds from a long column)
-    def t(m: Int): Long = (1767225600L + m * 60L) * 1000000000L
-    // user 1: A→B→A; user 2: B→B — margins A:1, B:2
-    Seq((1L, t(0), 1L, "A", 0.0, null.asInstanceOf[String]),
-        (2L, t(1), 1L, "B", 0.0, null.asInstanceOf[String]),
-        (3L, t(2), 1L, "A", 0.0, null.asInstanceOf[String]),
-        (4L, t(0), 2L, "B", 0.0, null.asInstanceOf[String]),
-        (5L, t(1), 2L, "B", 0.0, null.asInstanceOf[String]))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.parquet(s"$dir/events.parquet")
-    val m = Catalog.queries("q86_transition_matrix")(spark, dir)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
-    assert(m === Map(("A", "B") -> ((1L, 1.0)), ("B", "A") -> ((1L, 0.5)),
-      ("B", "B") -> ((1L, 0.5))))
-  }
-
-  test("q103 RFM: segments reconcile to the customer base, codes are 1-5 digits") {
-    val out = queries.Catalog.queries("q103_rfm")(spark, Sf0001)
-      .collect()
-    assert(out.nonEmpty)
-    val nCust = Tables.orders(spark, Sf0001)
-      .select(col("o_custkey")).distinct().count()
-    assert(out.map(_.getLong(1)).sum == nCust)
-    out.foreach { r =>
-      val seg = r.getString(0)
-      assert(seg.length == 3 && seg.forall(c => c >= '1' && c <= '5'), seg)
-      assert(r.getDouble(2) > 0) // avg monetary
-      assert(r.getDouble(3) >= 1.0) // avg freq: every customer ordered
-    }
-  }
-
-  test("q104 association rules: identities hold and a pair recounts exactly") {
-    val out = queries.Catalog.queries("q104_market_basket")(spark, Sf0001)
-      .localCheckpoint()
-    assert(out.count() > 0)
-    val rows = out.collect()
-    rows.foreach { r =>
-      assert(r.getLong(0) < r.getLong(1)) // canonical order
-      assert(r.getLong(2) >= 10) // support floor
-      val (c1, c2, lift) = (r.getDouble(3), r.getDouble(4), r.getDouble(5))
-      assert(c1 > 0 && c1 <= 1 && c2 > 0 && c2 <= 1 && lift > 0)
-    }
-    // recount the first rule's support from scratch
-    val first = rows.head
-    val li = Tables.lineitem(spark, Sf0001)
-      .select(col("l_orderkey"), (col("l_partkey") % 50).as("item")).distinct()
-    val recount = li.filter(col("item") === first.getLong(0))
-      .join(li.filter(col("item") === first.getLong(1))
-        .withColumnRenamed("item", "item_b"), "l_orderkey")
-      .count()
-    assert(recount == first.getLong(2),
-      s"support recount $recount vs ${first.getLong(2)}")
-  }
-
-  test("q105: week-0 retention is 1.0 and no week exceeds its cohort") {
-    val rows = Catalog.queries("q105_retention_cohorts")(spark, Sf0001).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val (off, active, size, ret) =
-        (r.getInt(1), r.getLong(2), r.getLong(3), r.getDouble(4))
-      assert(off >= 0)
-      assert(active <= size, s"active $active > cohort $size")
-      if (off == 0) assert(ret == 1.0,
-        "every cohort member is by definition active in their first week")
-    }
-    // cohort sizes sum to the purchasing-user population
-    val sizes = rows.filter(_.getInt(1) == 0).map(_.getLong(3)).sum
-    val buyers = Tables.events(spark, Sf0001)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id")).distinct().count()
-    assert(sizes == buyers)
-  }
-
-  test("q106: funnel counts are non-increasing and anchored at 100%") {
-    val rows = Catalog.queries("q106_event_funnel")(spark, Sf0001).collect()
-    assert(rows.length == 4)
-    val counts = rows.sortBy(_.getInt(0)).map(_.getLong(2))
-    counts.sliding(2).foreach { case Array(a, b) =>
-      assert(b <= a, "a later funnel stage cannot gain users")
-    }
-    assert(rows.head.getDouble(3) == 1.0, "stage 1 is 100% of start")
-  }
-
-  test("q107: WAU bounds DAU; windows only cover observed days") {
-    val rows = Catalog.queries("q107_rolling_wau")(spark, Sf0001).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val (dau, wau, st) = (r.getLong(1), r.getLong(2), r.getDouble(3))
-      assert(dau <= wau, "the day's actives are a subset of the trailing week's")
-      assert(st > 0.0 && st <= 1.0)
-    }
-    val days = Tables.events(spark, Sf0001)
-      .select(date_format(col("ts"), "yyyy-MM-dd")).distinct().count()
-    assert(rows.length == days, "one report row per observed day, no padding")
-  }
-
-  test("q108: arms partition the users and the z-score is finite") {
-    val rows = Catalog.queries("q108_ab_test")(spark, Sf0001).collect()
-    assert(rows.length == 2)
-    val users = Tables.events(spark, Sf0001).select(col("user_id")).distinct().count()
-    assert(rows.map(_.getLong(1)).sum == users)
-    rows.foreach { r =>
-      assert(r.getLong(2) >= 1 && r.getLong(2) < r.getLong(1),
-        "the ≥600 revenue split must be non-degenerate in each arm")
-      assert(!r.getDouble(5).isNaN && !r.getDouble(5).isInfinite)
-    }
-    assert(rows.map(_.getDouble(5)).distinct.length == 1,
-      "both rows carry the same pooled z")
-  }
-
-  test("q109: cumulative revenue is monotone and LTV is the per-member share") {
-    val rows = Catalog.queries("q109_cohort_ltv")(spark, Sf0001).collect()
-    assert(rows.nonEmpty)
-    rows.groupBy(_.getString(0)).foreach { case (wk, rs) =>
-      val sorted = rs.sortBy(_.getInt(1))
-      sorted.foreach { r =>
-        assert(r.getDouble(2) > 0.0, s"$wk: weekly revenue must be positive")
-        assert(math.abs(r.getDouble(5) -
-          math.round(r.getDouble(3) / r.getLong(4) * 100) / 100.0) < 0.011,
-          s"$wk: ltv_per_user inconsistent with cum_rev / cohort_size")
-      }
-      sorted.map(_.getDouble(3)).sliding(2).foreach { case Array(a, b) =>
-        assert(b >= a, s"$wk: cum_rev decreased")
-      }
-      // the running total reconciles with its own weekly terms to
-      // rounding (each side rounded independently to cents)
-      val lastCum = sorted.last.getDouble(3)
-      val sumWk = sorted.map(_.getDouble(2)).sum
-      assert(math.abs(lastCum - sumWk) < 0.01 * sorted.length,
-        s"$wk: cum $lastCum vs Σ weekly $sumWk")
-    }
-  }
-
-  test("sessionize partitions events exactly: counts conserve, spans fit gaps") {
-    // random per-user event-time sets → sessions must (1) cover every
-    // event exactly once, (2) have nonnegative spans, (3) number
-    // sessions contiguously from 1 per user
-    val gen = Gen.listOfN(40, Gen.zip(Gen.chooseNum(1L, 5L), Gen.chooseNum(0L, 86400L)))
-    val events = samples(gen, 6, 42L).flatten.zipWithIndex
-      .map { case ((u, sec), i) => (u, i.toLong, sec * 1000000L) }
-    val df = events.toDF("user_id", "event_id", "us")
-    val out = graft.queries.EventQueries.sessionize(df, gapUs = 600L * 1000000L)
-      .select($"user_id", $"session_seq", $"n_events", $"span_sec")
-      .as[(Long, Long, Long, Double)].collect()
-    assert(out.map(_._3).sum === events.length.toLong)
-    assert(out.forall(_._4 >= 0.0))
-    out.groupBy(_._1).foreach { case (_, sess) =>
-      val seqs = sess.map(_._2).sorted.toSeq
-      assert(seqs === (1L to sess.length.toLong).toSeq)
-    }
-  }
-
-  // Both formulations keep an event at EXACTLY +30 min in the same
-  // session — the lag form because gap > 30 min is strict,
-  // session_window because its merge is end-inclusive. The boundary
-  // test pins that agreement so a Spark-side change to the merge rule
-  // fails here instead of drifting silently between the two.
-  test("session_window ≡ batch sessionize on random clustered events") {
-    // clustered timestamps: a session anchor slot plus a sub-slot
-    // offset, so multi-event sessions, singletons, duplicate
-    // timestamps, and cross-slot merges all occur
-    val base = 1700000000000000L
-    val gen = Gen.zip(Gen.chooseNum(0L, 10L),
-      Gen.chooseNum(0L, 12L), Gen.chooseNum(0L, 2 * GapUs))
-    val rows = samples(gen, 400, 31L).zipWithIndex.map { case ((u, anchor, off), i) =>
-      (i.toLong, u, base + anchor * 2 * GapUs + off)
-    }
-    val events = rows.toDF("event_id", "user_id", "us")
-      .withColumn("ts", timestamp_micros($"us"))
-
-    val viaWindow = events
-      .groupBy(session_window($"ts", "30 minutes"), $"user_id")
-      .agg(count(lit(1)).as("n_events"))
-      .select($"user_id", $"n_events").as[(Long, Long)].collect().sorted.toSeq
-    val batch = graft.queries.EventQueries.sessionize(
-        events.select($"user_id", $"event_id", $"us"), GapUs)
-      .select($"user_id", $"n_events").as[(Long, Long)].collect().sorted.toSeq
-    assert(viaWindow.nonEmpty)
-    assert(viaWindow === batch,
-      s"session_window ${viaWindow.take(5)}… diverged from batch ${batch.take(5)}…")
-  }
-
-  test("exact-gap boundary: batch and session_window agree the event stays in-session") {
-    val t0 = 1700000000000000L
-    val two = Seq((1L, 5L, t0), (2L, 5L, t0 + GapUs))
-      .toDF("event_id", "user_id", "us")
-      .withColumn("ts", timestamp_micros($"us"))
-    val batch = graft.queries.EventQueries.sessionize(
-      two.select($"user_id", $"event_id", $"us"), GapUs)
-    assert(batch.count() === 1, "batch: gap == 30 min is NOT > 30 min → one session")
-    val viaWindow = two
-      .groupBy(session_window($"ts", "30 minutes"), $"user_id")
-      .agg(count(lit(1)).as("n")).count()
-    assert(viaWindow === 1,
-      "session_window's merge is end-inclusive: the +30:00.000000 event extends the window")
-    // one microsecond past the boundary must split in BOTH formulations
-    val split = Seq((1L, 5L, t0), (2L, 5L, t0 + GapUs + 1))
-      .toDF("event_id", "user_id", "us")
-      .withColumn("ts", timestamp_micros($"us"))
-    assert(graft.queries.EventQueries.sessionize(
-      split.select($"user_id", $"event_id", $"us"), GapUs).count() === 2)
-    assert(split.groupBy(session_window($"ts", "30 minutes"), $"user_id")
-      .agg(count(lit(1)).as("n")).count() === 2)
-  }
-
   test("q107 rolling WAU: the day fan-out joins by equi-join, never nested-loop") {
     val loops = PlanTree.nestedLoops(Catalog.queries("q107_rolling_wau")(spark, Sf0001))
     assert(loops.isEmpty,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.functions._
 
 /** Round-7 scale-safe twins: q45b's histogram-CDF distribution stats
@@ -138,14 +139,14 @@ class Extended6Spec extends SparkSpec {
   }
 
   test("q45b plan windows over the histogram, not the customer table") {
-    val plan = queries.Catalog.queries("q45b_dist_cdf")(spark, Sf0001)
-      .queryExecution.executedPlan.toString
+    val windows = PlanTree.windows(queries.Catalog.queries("q45b_dist_cdf")(spark, Sf0001))
     // the only Window node's input must be the aggregated histogram
     // (count per balance), never a full-table scan ordered globally
-    val windowIdx = plan.indexOf("Window")
-    assert(windowIdx >= 0)
-    assert(plan.substring(windowIdx).contains("HashAggregate"),
-      "Window must sit above the value histogram aggregate")
+    assert(windows.nonEmpty)
+    windows.foreach { w =>
+      assert(w.find(_.isInstanceOf[HashAggregateExec]).isDefined,
+        s"Window must sit above the value histogram aggregate:\n$w")
+    }
   }
 
   test("q38c sketch estimates land inside their oracle-pinned error bounds") {

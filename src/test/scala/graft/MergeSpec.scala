@@ -1,8 +1,6 @@
 package graft
 
 import graft.ops.Merge
-import org.apache.spark.sql.functions._
-import org.scalacheck.Gen
 
 class MergeSpec extends SparkSpec {
   import spark.implicits._
@@ -40,23 +38,5 @@ class MergeSpec extends SparkSpec {
     val out = Merge.snapshotDiff(v1, v2, "k", Seq("v"))
       .select($"k", $"change_type").as[(Long, String)].collect().sortBy(_._1)
     assert(out.toSeq === Seq((2L, "changed"), (3L, "removed"), (4L, "added")))
-  }
-
-  test("mergeUpsert is idempotent and key-complete on random batches") {
-    val gen = Gen.listOfN(30, Gen.zip(Gen.chooseNum(1L, 20L), Gen.chooseNum(0, 1000)))
-    val tgtRows = samples(gen, 1, 42L).flatten.distinctBy(_._1)
-    val updRows = samples(gen, 2, 42L).flatten.distinctBy(_._1)
-    val tgt = tgtRows.toDF("k", "v")
-    val upd = updRows.toDF("k", "v")
-    val once = graft.ops.Merge.mergeUpsert(tgt, upd, "k")
-    val twice = graft.ops.Merge.mergeUpsert(once, upd, "k")
-    val a = once.as[(Long, Int)].collect().sortBy(_._1).toSeq
-    val b = twice.as[(Long, Int)].collect().sortBy(_._1).toSeq
-    assert(a === b, "re-applying the same batch must be a no-op")
-    assert(a.map(_._1).toSet === (tgtRows.map(_._1) ++ updRows.map(_._1)).toSet)
-    val updMap = updRows.toMap
-    a.foreach { case (k, v) =>
-      updMap.get(k).foreach(uv => assert(v === uv, s"update must win for key $k"))
-    }
   }
 }

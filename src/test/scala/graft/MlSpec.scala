@@ -6,7 +6,6 @@ import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import graft.ml.MlPipeline
 import graft.queries.Catalog
-import org.scalacheck.Gen
 
 class MlSpec extends SparkSpec {
   import spark.implicits._
@@ -272,214 +271,6 @@ class MlSpec extends SparkSpec {
     assert(ev.sum >= 0.08 && ev.sum <= 0.5,
       s"top-4 explained-variance sum ${ev.sum} outside the [0.08, 0.5] envelope")
     assert(orthRes < 1e-8, s"loading matrix orthonormality residual $orthRes")
-  }
-
-  test("ml09 bins partition each group exactly and cover the full count") {
-    val bins = queries.Catalog.queries("ml09_quantile_bins")(spark, Sf0001).collect()
-    val total = Tables.lineitem(spark, Sf0001).count()
-    assert(bins.map(_.getLong(2)).sum == total)
-    bins.groupBy(_.getString(0)).foreach { case (_, rows) =>
-      assert(rows.map(_.getInt(1)).sorted.toSeq == Seq(1, 2, 3, 4))
-      // bin bucket ranges are disjoint and ordered
-      val sorted = rows.sortBy(_.getInt(1))
-      sorted.sliding(2).foreach { case Array(a, b) =>
-        assert(a.getLong(4) < b.getLong(3),
-          s"bins overlap: ${a.getLong(4)} >= ${b.getLong(3)}")
-      }
-    }
-  }
-
-  test("ml11 logistic GD beats the uninformed model and is deterministic") {
-    val out = queries.Catalog.queries("ml11_logreg")(spark, Sf0001)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    // 5 GD steps from w=0 must cut log-loss below the ln(2)=0.6931 of
-    // the all-zero model, and classify better than coin-flip
-    assert(out("logloss") < 0.693)
-    assert(out("accuracy") > 0.5)
-    // the returnflag~quantity relationship in the synthetic data is
-    // weak but the intercept must move toward the class prior
-    assert(out("w_intercept") != 0.0)
-    // re-running trains the identical model (snapped state, no RNG)
-    val again = queries.Catalog.queries("ml11_logreg")(spark, Sf0001)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(out == again)
-  }
-
-  test("ml12 k-means partitions all points and tightens vs the init") {
-    val out = queries.Catalog.queries("ml12_kmeans")(spark, Sf0001).collect()
-    assert(out.length == 4)
-    val total = out.map(_.getLong(1)).sum
-    assert(total == Tables.lineitem(spark, Sf0001).count())
-    // centroid x stays inside the quantity domain [1, 50]
-    out.foreach { r =>
-      val cx = r.getDouble(2)
-      assert(cx >= 1.0 && cx <= 50.0)
-    }
-    // Lloyd iterations never increase within-cluster distance: final
-    // avg dist must beat assigning everything to the worst init centroid
-    val worstInit = Tables.lineitem(spark, Sf0001)
-      .select(sqrt(pow(col("l_quantity") - 10.0, 2) +
-        pow(col("l_extendedprice") / 10000.0 - 1.0, 2)).as("d"))
-      .agg(avg(col("d"))).first().getDouble(0)
-    val meanFinal = out.map(r => r.getDouble(4) * r.getLong(1)).sum / total
-    assert(meanFinal < worstInit)
-  }
-
-  test("q94 gains table: totals reconcile and capture is monotone to 1.0") {
-    val out = queries.Catalog.queries("q94_decile_lift")(spark, Sf0001)
-      .orderBy(col("decile")).collect()
-    assert(out.length == 10)
-    val totalOrders = out.map(_.getLong(1)).sum
-    assert(totalOrders == Tables.orders(spark, Sf0001).count())
-    val captures = out.map(_.getDouble(5))
-    assert(captures.zip(captures.tail).forall { case (a, b) => b >= a - 1e-9 })
-    assert(math.abs(captures.last - 1.0) < 1e-9)
-    // deciles are value-histogram based: each holds roughly a tenth
-    out.foreach(r => assert(r.getLong(1) > 0))
-  }
-
-  test("ml13 OLS recovers the known coefficients (0, 100, -1) and R²=1") {
-    val r = queries.Catalog.queries("ml13_ols")(spark, Sf0001).first()
-    val (b0, b1, b2, r2) =
-      (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
-    // y is constructed as exactly 100·x1 − x2, so the solver must
-    // recover it; tolerance covers Cramer's double roundoff on an
-    // ill-conditioned (collinear x1, x1·d) moment matrix
-    assert(math.abs(b0) < 0.01, s"beta0=$b0")
-    assert(math.abs(b1 - 100.0) < 0.01, s"beta_x1=$b1")
-    assert(math.abs(b2 + 1.0) < 0.01, s"beta_x2=$b2")
-    assert(r2 == 1.0, s"r2=$r2")
-    assert(r.getLong(4) == Tables.lineitem(spark, Sf0001).count())
-  }
-
-  test("ml14 confusion matrix reconciles and the split covers every class") {
-    val out = queries.Catalog.queries("ml14_naive_bayes")(spark, Sf0001)
-      .localCheckpoint()
-    val total = out.agg(sum(col("n"))).first().getLong(0)
-    // totals must equal the md5-bucket test split size
-    val docs = Tables.documents(spark, Sf0001)
-      .select(col("doc_id"), graft.text.TextStats.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
-      .filter(graft.dedup.Dedup.md5Hash48(col("doc_id").cast("string")) % 5 === 0)
-    assert(total == docs.count())
-    // the hash split must leave every source represented in test
-    // (the naive doc_id%5 split left four sources with zero training
-    // docs — the regression this spec exists to catch)
-    val nActual = out.select(col("actual")).distinct().count()
-    val nSources = Tables.documents(spark, Sf0001)
-      .select(col("source")).distinct().count()
-    assert(nActual == nSources, s"test covers $nActual of $nSources sources")
-    // deterministic: identical confusion matrix on re-run
-    val again = queries.Catalog.queries("ml14_naive_bayes")(spark, Sf0001)
-    assert(out.exceptAll(again).count() == 0 && again.exceptAll(out).count() == 0)
-  }
-
-  test("ml15 ridge: lambda 0 equals OLS; lambda 1e6 shrinks the betas") {
-    val rows = queries.Catalog.queries("ml15_ridge")(spark, Sf0001)
-      .collect().map(r => r.getString(0) ->
-        (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
-    val ols = queries.Catalog.queries("ml13_ols")(spark, Sf0001).first()
-    val (b0, b1, b2, r2) = rows("0")
-    assert(b0 == ols.getDouble(0) && b1 == ols.getDouble(1) &&
-      b2 == ols.getDouble(2) && r2 == ols.getDouble(3),
-      "lambda=0 must reproduce ml13 exactly")
-    val (s0, s1, s2, sr2) = rows("1e6")
-    // shrinkage: penalized coefficients move toward 0, fit degrades
-    assert(math.abs(s1) < math.abs(b1), s"beta_x1 $s1 not shrunk vs $b1")
-    assert(math.abs(s2) < math.abs(b2) || s2 == 0.0,
-      s"beta_x2 $s2 not shrunk vs $b2")
-    assert(sr2 <= r2 && sr2 > 0.9, s"ridge r2 $sr2 vs ols $r2")
-    assert(s0 != 0.0 || b0 == 0.0) // intercept unpenalized, stays free
-  }
-
-  test("ml16 calibration bins partition the data and reconcile with the prior") {
-    val out = queries.Catalog.queries("ml16_calibration")(spark, Sf0001)
-      .collect()
-    val li = Tables.lineitem(spark, Sf0001)
-    val total = out.map(_.getLong(1)).sum
-    assert(total == li.count())
-    // weighted observed rate across bins is exactly the class prior
-    val prior = li.filter(col("l_returnflag") === "R").count().toDouble / total
-    val wObs = out.map(r => r.getDouble(3) * r.getLong(1)).sum / total
-    assert(math.abs(wObs - prior) < 1e-3, s"weighted obs $wObs vs prior $prior")
-    out.foreach { r =>
-      val (bin, avgPred, gap) = (r.getInt(0), r.getDouble(2), r.getDouble(4))
-      assert(bin >= 0 && bin <= 9)
-      // predictions in a bin average inside that bin's range
-      assert(avgPred >= bin / 10.0 - 1e-9 && avgPred <= (bin + 1) / 10.0 + 1e-9)
-      assert(gap >= 0.0 && gap <= 1.0)
-    }
-  }
-
-  test("ml17 k-NN: every query classified, votes bounded, flags consistent") {
-    val out = queries.Catalog.queries("ml17_knn")(spark, Sf0001).collect()
-    assert(out.length == 20)
-    val labels = Tables.embeddings(spark, Sf0001)
-      .select(col("label")).distinct().collect().map(_.getInt(0)).toSet
-    out.foreach { r =>
-      val (actual, pred, nVotes, correct) =
-        (r.getInt(1), r.getInt(2), r.getLong(3), r.getBoolean(4))
-      assert(labels.contains(pred))
-      assert(nVotes >= 1 && nVotes <= 5)
-      assert(correct == (pred == actual))
-    }
-    // deterministic on re-run (rounded-cosine rank, id tie-breaks)
-    val again = queries.Catalog.queries("ml17_knn")(spark, Sf0001).collect()
-    assert(out.map(_.toString).toSeq == again.map(_.toString).toSeq)
-  }
-
-  test("ml18 PRF reconciles with ml14's confusion matrix") {
-    val prf = queries.Catalog.queries("ml18_nb_prf")(spark, Sf0001).collect()
-    val conf = queries.Catalog.queries("ml14_naive_bayes")(spark, Sf0001)
-      .collect()
-    val confTotal = conf.map(_.getLong(2)).sum
-    val confDiag = conf.filter(r => r.getString(0) == r.getString(1))
-      .map(_.getLong(2)).sum
-    // Σtp over classes is the confusion diagonal; Σna is the test size
-    assert(prf.map(_.getLong(1)).sum == confDiag)
-    assert(prf.map(_.getLong(2)).sum == confTotal)
-    prf.foreach { r =>
-      val (tp, na, np, p, rec, f1) = (r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getDouble(4), r.getDouble(5), r.getDouble(6))
-      assert(tp <= math.min(na, np))
-      assert(p >= 0 && p <= 1 && rec >= 0 && rec <= 1)
-      // a never-predicted class reports precision 0 by convention
-      if (np == 0) assert(p == 0.0)
-      // F1 is the harmonic mean of the ROUNDED P/R (both engines agree)
-      val expF1 = if (p + rec == 0) 0.0
-        else math.round(2 * p * rec / (p + rec) * 1e4) / 1e4
-      assert(math.abs(f1 - expF1) < 1e-9)
-    }
-  }
-
-  test("depth2Tree training accuracy dominates the best stump on arbitrary labeled data") {
-    // max(a1,b1)+max(a2,b2) >= max(a1+a2,b1+b2): greedily splitting a
-    // node can never lose majority-correct count — so the tree >= the
-    // stump whose split it starts from, on ANY sample
-    val row = for {
-      l <- Gen.oneOf(0.0, 1.0)
-      x <- Gen.chooseNum(0, 4).map(_.toDouble)
-      y <- Gen.chooseNum(0, 4).map(_.toDouble)
-    } yield (l, x, y)
-    val sets = samples(Gen.listOfN(24, row), 6, 842L)
-      // both labels and >=2 distinct values per feature in every
-      // branch half can't be guaranteed, so keep samples where each
-      // feature takes >=3 values (the generator makes this common)
-      .filter(s => s.map(_._2).distinct.size >= 3 && s.map(_._3).distinct.size >= 3
-        && s.map(_._1).distinct.size == 2)
-    assert(sets.size >= 3, s"generator yielded only ${sets.size} usable samples")
-    sets.foreach { rows =>
-      val df = rows.toDF("label", "x", "y")
-      val n = rows.length
-      val stumpBest = graft.ml.MlPipeline.stumpSplits(df, "label", Seq("x", "y"))
-        .collect().map(_.getDouble(2)).max
-      val tree = graft.ml.MlPipeline.depth2Tree(df, "label", Seq("x", "y"))
-        .collect().map(r => r.getString(0) -> ((r.getLong(3), r.getLong(4)))).toMap
-      val treeCorrect = Seq("LL", "LR", "RL", "RR")
-        .map { k => val (c, p) = tree(k); math.max(p, c - p) }.sum
-      assert(treeCorrect.toDouble / n >= stumpBest - 1e-9,
-        s"tree ${treeCorrect.toDouble / n} < stump $stumpBest on $rows")
-    }
   }
 
   test("deterministicSplit is a pure scan-side filter: zero exchanges") {

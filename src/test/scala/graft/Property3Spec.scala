@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 import graft.queries.{QualityQueries, TextQueries}
 
 /** Property pins for the round-8 operator math, Property2Spec-style
@@ -14,9 +13,6 @@ import graft.queries.{QualityQueries, TextQueries}
 class Property3Spec extends SparkSpec {
   import spark.implicits._
 
-  private def samples[A](g: Gen[A], n: Int): Seq[A] =
-    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(842L + i)))
-
   test("depth2Tree training accuracy dominates the best stump on arbitrary labeled data") {
     // max(a1,b1)+max(a2,b2) >= max(a1+a2,b1+b2): greedily splitting a
     // node can never lose majority-correct count — so the tree >= the
@@ -26,7 +22,7 @@ class Property3Spec extends SparkSpec {
       x <- Gen.chooseNum(0, 4).map(_.toDouble)
       y <- Gen.chooseNum(0, 4).map(_.toDouble)
     } yield (l, x, y)
-    val sets = samples(Gen.listOfN(24, row), 6)
+    val sets = samples(Gen.listOfN(24, row), 6, 842L)
       // both labels and >=2 distinct values per feature in every
       // branch half can't be guaranteed, so keep samples where each
       // feature takes >=3 values (the generator makes this common)
@@ -52,7 +48,7 @@ class Property3Spec extends SparkSpec {
       id <- Gen.chooseNum(0L, 100000L)
       words <- Gen.chooseNum(51, 80) // length-quality floor => gate passes
     } yield (id, Seq.fill(words)("the word alpha beta gamma").mkString(" "))
-    samples(Gen.listOfN(30, doc), 4).foreach { docs0 =>
+    samples(Gen.listOfN(30, doc), 4, 842L).foreach { docs0 =>
       val docs = docs0.distinctBy(_._1)
       val df = docs.toDF("doc_id", "text")
       val out = TextQueries.shardManifest(df).collect()
@@ -71,7 +67,7 @@ class Property3Spec extends SparkSpec {
 
   test("IQR fences always contain at least half the mass; outliers only outside") {
     val gen = Gen.listOfN(60, Gen.chooseNum(0, 50000).map(_ / 100.0))
-    samples(gen, 6).foreach { vs =>
+    samples(gen, 6, 842L).foreach { vs =>
       val df = vs.map(("g", _)).toDF("grp", "v")
       val r = QualityQueries.iqrOutliers(df, "grp", "v").collect()(0)
       val (q1, q3, lo, hi, nOut) =

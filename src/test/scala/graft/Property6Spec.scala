@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 
 /** Randomized `session_window` ≡ lag-based sessionization, plus an
   * explicit pin of the exact-gap boundary where the two formulations
@@ -24,9 +23,6 @@ class Property6Spec extends SparkSpec {
   import spark.implicits._
 
   private val GapUs = 1800000000L // 30 minutes
-
-  private def samples[A](g: Gen[A], n: Int, seed: Long): Seq[A] =
-    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(seed + i)))
 
   test("session_window ≡ batch sessionize on random clustered events") {
     // clustered timestamps: a session anchor slot plus a sub-slot

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 
 /** Property tests from SURVEY.md §5: bucketing totality, one-hot row
   * sums, top-K ⊆ sorted prefix. ScalaCheck generators drive the
@@ -14,16 +13,13 @@ import org.scalacheck.rng.Seed
 class PropertySpec extends SparkSpec {
   import spark.implicits._
 
-  private def samples[A](g: Gen[A], n: Int): Seq[A] =
-    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(42L + i)))
-
   private def bucketExpr = when($"q" < 10, 0).when($"q" <= 25, 1)
     .when($"q" <= 40, 2).otherwise(3)
 
   test("bucketing is total over doubles (incl. boundaries, negatives, extremes)") {
     val gen = Gen.chooseNum(-1e9, 1e9,
       0.0, 9.999999, 10.0, 25.0, 25.000001, 40.0, Double.MinPositiveValue)
-    val qs = samples(gen, 300)
+    val qs = samples(gen, 300, 42L)
     assert(qs.nonEmpty)
     val buckets = qs.toDF("q").select(bucketExpr.as("b")).collect().map(_.getInt(0))
     assert(buckets.length === qs.length)
@@ -36,7 +32,7 @@ class PropertySpec extends SparkSpec {
 
   test("one-hot columns sum to exactly 1 per row over a closed domain") {
     val statuses = Seq("F", "O", "P")
-    val ss = samples(Gen.oneOf(statuses), 200)
+    val ss = samples(Gen.oneOf(statuses), 200, 42L)
     val sums = ss.toDF("s")
       .select(statuses.map(v => ($"s" === v).cast("int").as(s"is_$v")): _*)
       .select(statuses.map(v => col(s"is_$v")).reduce(_ + _).as("t"))
@@ -47,7 +43,7 @@ class PropertySpec extends SparkSpec {
 
   test("top-K via orderBy+limit equals the sorted prefix (many random lists)") {
     (0 until 5).foreach { round =>
-      val xs = samples(Gen.chooseNum(Int.MinValue, Int.MaxValue), 80 + round * 17)
+      val xs = samples(Gen.chooseNum(Int.MinValue, Int.MaxValue), 80 + round * 17, 42L)
       val k = 10
       val got = xs.toDF("x").orderBy($"x".desc).limit(k)
         .collect().map(_.getInt(0)).toSeq
@@ -60,7 +56,7 @@ class PropertySpec extends SparkSpec {
     // event exactly once, (2) have nonnegative spans, (3) number
     // sessions contiguously from 1 per user
     val gen = Gen.listOfN(40, Gen.zip(Gen.chooseNum(1L, 5L), Gen.chooseNum(0L, 86400L)))
-    val events = samples(gen, 6).flatten.zipWithIndex
+    val events = samples(gen, 6, 42L).flatten.zipWithIndex
       .map { case ((u, sec), i) => (u, i.toLong, sec * 1000000L) }
     val df = events.toDF("user_id", "event_id", "us")
     val out = graft.queries.EventQueries.sessionize(df, gapUs = 600L * 1000000L)
@@ -76,7 +72,7 @@ class PropertySpec extends SparkSpec {
 
   test("z-order codes are unique over distinct 16-bit coordinate pairs") {
     val gen = Gen.zip(Gen.chooseNum(0L, 65535L), Gen.chooseNum(0L, 65535L))
-    val pts = samples(gen, 400).distinct
+    val pts = samples(gen, 400, 42L).distinct
     val codes = pts.toDF("x", "y")
       .select(graft.functions.ZOrder.zOrder2($"x", $"y").as("z"))
       .as[Long].collect()
@@ -88,7 +84,7 @@ class PropertySpec extends SparkSpec {
   test("spanNovelty conserves: Σ n_novel ≥ distinct fingerprints; novelty ∈ [0,1]") {
     val wordGen = Gen.oneOf("aa", "bb", "cc", "dd", "ee", "ff")
     val docGen = Gen.listOfN(20, wordGen).map(_.mkString(" "))
-    val docs = samples(docGen, 40).zipWithIndex
+    val docs = samples(docGen, 40, 42L).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val out = graft.text.SpanDedup.spanNovelty(docs, window = 4)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -106,7 +102,7 @@ class PropertySpec extends SparkSpec {
 
   test("semanticDedup keeps every cell leader and output is a subset, any threshold") {
     val vecGen = Gen.listOfN(4, Gen.chooseNum(-1.0f, 1.0f))
-    val vecs = samples(vecGen, 50).zipWithIndex
+    val vecs = samples(vecGen, 50, 42L).zipWithIndex
       .map { case (v, i) => (i.toLong, v.toArray) }
     val emb = vecs.toDF("vec_id", "embedding")
     val cents = Seq(Seq(1.0, 0, 0, 0), Seq(0, 1.0, 0, 0), Seq(0, 0, 1.0, 0))
@@ -124,8 +120,8 @@ class PropertySpec extends SparkSpec {
 
   test("mergeUpsert is idempotent and key-complete on random batches") {
     val gen = Gen.listOfN(30, Gen.zip(Gen.chooseNum(1L, 20L), Gen.chooseNum(0, 1000)))
-    val tgtRows = samples(gen, 1).flatten.distinctBy(_._1)
-    val updRows = samples(gen, 2).flatten.distinctBy(_._1)
+    val tgtRows = samples(gen, 1, 42L).flatten.distinctBy(_._1)
+    val updRows = samples(gen, 2, 42L).flatten.distinctBy(_._1)
     val tgt = tgtRows.toDF("k", "v")
     val upd = updRows.toDF("k", "v")
     val once = graft.ops.Merge.mergeUpsert(tgt, upd, "k")

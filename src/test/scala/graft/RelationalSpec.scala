@@ -9,8 +9,6 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.scalatest.prop.TableDrivenPropertyChecks
 import graft.queries.Catalog
-import org.apache.spark.sql.expressions.Window
-import org.scalacheck.Gen
 
 /** Edge-semantics tests called out in SURVEY.md §5: NULL explode drop
   * (F2), size-of-null (F4), bucket boundaries (P7), plus smoke over
@@ -74,186 +72,6 @@ class RelationalSpec extends SparkSpec with TableDrivenPropertyChecks {
     val dups = names.groupBy(identity).filter(_._2.size > 1).keys
     assert(dups.isEmpty, s"duplicate names: ${dups.mkString(", ")}")
     assert(SparkEntry.queries.size === names.size)
-  }
-
-  private def bucketExpr = when($"q" < 10, 0).when($"q" <= 25, 1)
-    .when($"q" <= 40, 2).otherwise(3)
-
-  test("histogram: buckets cover 0..9, counts conserve, max value clamps into bucket 9") {
-    val out = Catalog.queries("q66_histogram")(spark, Sf0001)
-      .select($"bucket", $"n").as[(Int, Long)].collect()
-    assert(out.map(_._1).forall(b => b >= 0 && b <= 9))
-    val total = graft.Tables.lineitem(spark, Sf0001).count()
-    assert(out.map(_._2).sum === total) // every row lands in exactly one bucket
-  }
-
-  test("groupSample returns exactly n per group, stable under repartitioning") {
-    val df = (1L to 100L).map(i => (s"g${i % 4}", i)).toDF("g", "k")
-    val a = graft.ops.Stats.groupSample(df, "g", "k", n = 5)
-    assert(a.groupBy("g").count().select("count").as[Long].collect().forall(_ == 5L))
-    val b = graft.ops.Stats.groupSample(df.repartition(13), "g", "k", n = 5)
-    assert(a.select("g", "k").except(b.select("g", "k")).isEmpty)
-  }
-
-  test("q38c sketch estimates land inside their oracle-pinned error bounds") {
-    // the driver gate runs at sf0.01; pin the same TRUE booleans at
-    // sf0.001 so a sketch-accuracy drift fails locally before it
-    // hash-mismatches in the round report
-    import spark.implicits._
-    val out = queries.Catalog.queries("q38c_hll_error_gate")(spark, Sf0001)
-    val rows = out.select($"hll_parts_ok", $"hll_orders_ok",
-      $"kll_p50_ok", $"kll_p90_ok").as[(Boolean, Boolean, Boolean, Boolean)]
-      .collect()
-    assert(rows.nonEmpty)
-    rows.foreach { case (a, b, c, d) =>
-      assert(a && b && c && d, s"an estimator left its error bound: $rows")
-    }
-  }
-
-  test("q91 Bloom filter has zero false negatives and a tiny FP rate") {
-    val r = queries.Catalog.queries("q91_bloom_filter")(spark, Sf0001).first()
-    val (members, probes, bloomPass, truePass) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-    assert(members > 0 && probes > members)
-    // the defining guarantee: a Bloom filter never drops a member
-    assert(bloomPass >= truePass)
-    // m=65536, k=4, n≈members → theoretical fp ~ (1-e^(-4n/65536))^4;
-    // at sf0.001 n is tens, so measured fp must be well under 5%
-    assert(r.getDouble(5) < 0.05)
-  }
-
-  test("q96 skyline equals the brute-force Pareto frontier") {
-    val out = queries.Catalog.queries("q96_skyline")(spark, Sf0001)
-      .collect().map(_.getLong(0)).toSet
-    val parts = Tables.part(spark, Sf0001)
-      .select(col("p_partkey"), col("p_retailprice"), col("p_size"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2)))
-    val brute = parts.filter { case (_, pr, sz) =>
-      !parts.exists { case (_, opr, osz) =>
-        opr <= pr && osz >= sz && (opr < pr || osz > sz)
-      }
-    }.map(_._1).toSet
-    assert(out == brute,
-      s"skyline mismatch: missing ${brute -- out}, extra ${out -- brute}")
-  }
-
-  test("q97 merged union sketch equals a direct union sketch; envelopes hold") {
-    val r = queries.Catalog.queries("q97_kmv_setops")(spark, Sf0001).first()
-    val (estR, estA, estU, estI) =
-      (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
-    val (exR, exA, exU) = (r.getLong(4), r.getLong(5), r.getLong(6))
-    // k=32 KMV: relative error ~ 1/sqrt(k); generous envelope
-    assert(math.abs(estR - exR) < 0.5 * exR + 10, s"estR=$estR exact=$exR")
-    assert(math.abs(estA - exA) < 0.5 * exA + 10)
-    assert(math.abs(estU - exU) < 0.5 * exU + 10)
-    // inclusion-exclusion on estimates must stay near the exact intersection
-    val exI = exR + exA - exU
-    assert(math.abs(estI - exI) < 0.5 * exU + 10, s"estI=$estI exact=$exI")
-    // mergeability, exactly: the per-seed min over the union IS the min
-    // of the two per-set minima, so a sketch computed directly on the
-    // union must yield the identical estimate
-    val li = Tables.lineitem(spark, Sf0001)
-      .filter(col("l_returnflag").isin("R", "A")).select(col("l_partkey"))
-    val mins = (0 until 32).map(i => min(graft.dedup.Dedup.md5Hash48(
-      concat_ws(":", lit(i), col("l_partkey").cast("string")))).as(s"u$i"))
-    val direct = li.agg(mins.head, mins.tail: _*).first()
-    val sumMin = (0 until 32).map(direct.getLong).sum
-    val directEst = math.round((32.0 * 281474976710656.0 / sumMin - 1) * 100) / 100.0
-    assert(directEst == estU, s"direct=$directEst merged=$estU")
-  }
-
-  test("q100 grid join: equi-join plan, unique pairs, distances within radius") {
-    val out = queries.Catalog.queries("q100_spatial_join")(spark, Sf0001)
-      .localCheckpoint()
-    val n = out.count()
-    assert(n > 0)
-    // the 3x3 neighborhood explode must not duplicate any pair (a pair
-    // matches only in the build point's own cell)
-    assert(out.select(col("id_a"), col("id_b")).distinct().count() == n)
-    assert(out.filter(col("dist") > 0.02).count() == 0)
-    assert(out.filter(col("id_a") >= col("id_b")).count() == 0)
-    val plan = PlanTree.nestedLoops(queries.Catalog.queries("q100_spatial_join")(spark, Sf0001))
-    assert(plan.isEmpty, s"the cell join must be an equi-join on (cx, cy): $plan")
-  }
-
-  test("q101 SCD2: versions chain gaplessly and never repeat a state") {
-    val out = queries.Catalog.queries("q101_scd2")(spark, Sf0001)
-      .localCheckpoint()
-    assert(out.count() > 0)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("version"))
-    val chained = out
-      .withColumn("next_from", lead(col("valid_from"), 1).over(w))
-      .withColumn("prev_state", lag(col("state"), 1).over(w))
-      .withColumn("prev_version", lag(col("version"), 1).over(w))
-    // valid_to of version k is exactly valid_from of version k+1
-    assert(chained.filter(col("next_from").isNotNull &&
-      col("valid_to") =!= col("next_from")).count() == 0)
-    // the current (last) version is open-ended
-    assert(chained.filter(col("next_from").isNull &&
-      col("valid_to").isNotNull).count() == 0)
-    // consecutive duplicates collapsed; versions are 1,2,3,...
-    assert(chained.filter(col("prev_state").isNotNull &&
-      col("prev_state") === col("state")).count() == 0)
-    assert(chained.filter(col("prev_version").isNotNull &&
-      col("version") =!= col("prev_version") + 1).count() == 0)
-    assert(out.filter(col("version") === 1).count() ==
-      out.select(col("user_id")).distinct().count())
-  }
-
-  test("q102 proration: every order's cents sum EXACTLY to its total") {
-    val out = queries.Catalog.queries("q102_proration")(spark, Sf0001)
-      .localCheckpoint()
-    val totals = Tables.orders(spark, Sf0001)
-      .filter(col("o_orderkey") % 10 === 0)
-      .select(col("o_orderkey").as("l_orderkey"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("t"))
-    val sums = out.groupBy(col("l_orderkey"))
-      .agg(sum(col("alloc_cents")).as("s"), sum(col("price_cents")).as("tw"))
-      .join(totals, "l_orderkey")
-    assert(sums.count() > 0)
-    // the invariant naive rounding leaks: Σ alloc == T, exactly, always
-    assert(sums.filter(col("s") =!= col("t")).count() == 0)
-    // fairness: each line's allocation is within 1 cent of its exact share
-    val fair = out.join(sums.select(col("l_orderkey"), col("tw"), col("t")),
-        "l_orderkey")
-      .withColumn("exact", col("t") * col("price_cents") / col("tw"))
-      .filter(abs(col("alloc_cents") - col("exact")) > 1.0)
-    assert(fair.count() == 0)
-  }
-
-  test("bucketing is total over doubles (incl. boundaries, negatives, extremes)") {
-    val gen = Gen.chooseNum(-1e9, 1e9,
-      0.0, 9.999999, 10.0, 25.0, 25.000001, 40.0, Double.MinPositiveValue)
-    val qs = samples(gen, 300, 42L)
-    assert(qs.nonEmpty)
-    val buckets = qs.toDF("q").select(bucketExpr.as("b")).collect().map(_.getInt(0))
-    assert(buckets.length === qs.length)
-    assert(buckets.forall(b => b >= 0 && b <= 3))
-    // spot-check monotonicity: bucket of sorted inputs is non-decreasing
-    val sortedBuckets = qs.sorted.toDF("q").select(bucketExpr.as("b"))
-      .collect().map(_.getInt(0))
-    assert(sortedBuckets.toSeq === sortedBuckets.sorted.toSeq)
-  }
-
-  test("one-hot columns sum to exactly 1 per row over a closed domain") {
-    val statuses = Seq("F", "O", "P")
-    val ss = samples(Gen.oneOf(statuses), 200, 42L)
-    val sums = ss.toDF("s")
-      .select(statuses.map(v => ($"s" === v).cast("int").as(s"is_$v")): _*)
-      .select(statuses.map(v => col(s"is_$v")).reduce(_ + _).as("t"))
-      .collect().map(_.getInt(0))
-    assert(sums.length === ss.length)
-    assert(sums.forall(_ == 1))
-  }
-
-  test("top-K via orderBy+limit equals the sorted prefix (many random lists)") {
-    (0 until 5).foreach { round =>
-      val xs = samples(Gen.chooseNum(Int.MinValue, Int.MaxValue), 80 + round * 17, 42L)
-      val k = 10
-      val got = xs.toDF("x").orderBy($"x".desc).limit(k)
-        .collect().map(_.getInt(0)).toSeq
-      assert(got === xs.sorted.reverse.take(k))
-    }
   }
 
   test("q59 star join: dims broadcast, order-date filter pushed, lineitem scan pruned") {

@@ -1,9 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.CountMin
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-import org.scalacheck.Gen
 
 /** Accuracy bounds for the sketch aggregates (q38): HLL++ distinct
   * within its published error envelope, approximate percentiles within
@@ -102,71 +100,6 @@ class SketchSpec extends SparkSpec {
     assert(rows("_all") == global,
       s"merged sketch ${rows("_all")} != global distinct $global — " +
         "the union-without-rescan must lose nothing")
-  }
-
-  test("CMS estimate is never below the exact count, and is exact when no collision") {
-    val items = Seq.fill(40)("alpha") ++ Seq.fill(7)("beta") ++ Seq("gamma")
-    val df = items.toDF("item")
-    val cells = CountMin.counters(df, d = 4, w = 64)
-    val est = CountMin.estimate(df.distinct(), cells, d = 4, w = 64)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(est("alpha") >= 40L && est("beta") >= 7L && est("gamma") >= 1L)
-    // 3 distinct items in 64 buckets × 4 rows: at least one row must be
-    // collision-free for each item, so the min is exact here
-    assert(est === Map("alpha" -> 40L, "beta" -> 7L, "gamma" -> 1L))
-  }
-
-  test("CMS counter tables are mergeable: sum of shard sketches == whole-corpus sketch") {
-    val all = (1 to 200).map(i => s"tok${i % 13}")
-    val (h1, h2) = all.splitAt(97)
-    def sketch(xs: Seq[String]) = CountMin.counters(xs.toDF("item"), d = 4, w = 64)
-    val merged = sketch(h1).unionByName(sketch(h2))
-      .groupBy("seed", "bucket").agg(sum("cnt").as("cnt"))
-    val whole = sketch(all)
-    assert(merged.except(whole).isEmpty && whole.except(merged).isEmpty)
-  }
-
-  test("KMV union minima are exactly the element-wise min (mergeability)") {
-    // q97's merge identity on arbitrary key sets, via the engine's hash
-    val gen = Gen.listOfN(40, Gen.chooseNum(1L, 100000L))
-    samples(gen.flatMap(a => gen.map(b => (a, b))), 5, 142L).foreach { case (a, b) =>
-      def mins(keys: Seq[Long]): Seq[Long] = {
-        val df = keys.toDF("k")
-        val aggs = (0 until 8).map(i => min(graft.dedup.Dedup.md5Hash48(
-          concat_ws(":", lit(i), $"k".cast("string")))).as(s"m$i"))
-        val r = df.agg(aggs.head, aggs.tail: _*).first()
-        (0 until 8).map(r.getLong)
-      }
-      val (ma, mb, mu) = (mins(a), mins(b), mins(a ++ b))
-      assert(mu == ma.zip(mb).map { case (x, y) => math.min(x, y) })
-    }
-  }
-
-  test("the Bloom construction never yields a false negative") {
-    // q91's word/bit math on arbitrary member sets: every inserted key
-    // passes all 4 seed probes by construction
-    val gen = Gen.listOfN(60, Gen.chooseNum(1L, 1000000L))
-    samples(gen, 3, 142L).foreach { keys =>
-      def pos(seed: Int, k: Long): (Long, Long) = {
-        val h = (new java.math.BigInteger(1,
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(s"$seed:$k".getBytes("UTF-8"))).shiftRight(128 - 48)
-          .longValue()) % 65536
-        (h / 32, 1L << (h % 32).toInt)
-      }
-      val words = scala.collection.mutable.Map.empty[Long, Long]
-      for (k <- keys; s <- 0 until 4) {
-        val (w, b) = pos(s, k)
-        words(w) = words.getOrElse(w, 0L) | b
-      }
-      keys.foreach { k =>
-        (0 until 4).foreach { s =>
-          val (w, b) = pos(s, k)
-          assert((words.getOrElse(w, 0L) & b) == b,
-            s"member $k failed probe seed $s")
-        }
-      }
-    }
   }
 
   test("CMS counters: the d-fold seed explosion partial-aggregates before its one shuffle") {

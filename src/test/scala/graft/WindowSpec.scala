@@ -1,125 +1,14 @@
 package graft
 
 import graft.queries.Catalog
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding}
-import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 
-/** The window family (`WindowQueries`): the bounded-histogram twins
-  * agree with their global-window originals, gap-fill and
-  * interpolation keep their envelopes, and the plans window only over
-  * per-key or domain-bounded inputs with cumulative frames.
+/** The window family (`WindowQueries`): the plans window only over
+  * per-key or domain-bounded inputs with cumulative frames. The
+  * family's result checks are still in the round-numbered specs, which
+  * keep their suite ids.
   */
 class WindowSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("islands: consecutive same-status runs collapse with the row_number difference") {
-    import org.apache.spark.sql.expressions.Window
-    // statuses A A B A → runs (A,2), (B,1), (A,1)
-    val rows = Seq((1L, 1L, "A", 1), (1L, 2L, "A", 2), (1L, 3L, "B", 3), (1L, 4L, "A", 4))
-      .toDF("cust", "key", "status", "d")
-    val byC = Window.partitionBy("cust").orderBy($"d", $"key")
-    val byCS = Window.partitionBy("cust", "status").orderBy($"d", $"key")
-    val runs = rows.withColumn("grp", row_number().over(byC) - row_number().over(byCS))
-      .groupBy($"cust", $"status", $"grp")
-      .agg(min($"d").as("s"), count(lit(1)).as("n"))
-      .select($"status", $"s", $"n").as[(String, Int, Long)].collect().sortBy(_._2)
-    assert(runs.toSeq === Seq(("A", 1, 2L), ("B", 3, 1L), ("A", 4, 1L)))
-  }
-
-  test("q45b cume_dist equals q45's positional cume_dist on tie-free balances") {
-    // on a balance value held by exactly one customer, P(bal ≤ mine)
-    // (q45b, value-based) and position/n (q45, tie-broken by custkey)
-    // are the same number
-    val cust = Tables.customer(spark, Sf0001)
-    val uniqueBals = cust.groupBy(col("c_acctbal")).count()
-      .filter(col("count") === 1).select(col("c_acctbal"))
-    val q45 = queries.Catalog.queries("q45_dist_windows")(spark, Sf0001)
-      .select(col("c_custkey"), col("cd").as("cd_pos"))
-    val q45b = queries.Catalog.queries("q45b_dist_cdf")(spark, Sf0001)
-      .select(col("c_custkey"), col("cd").as("cd_val"))
-    val joined = cust.join(uniqueBals, "c_acctbal")
-      .select(col("c_custkey"))
-      .join(q45, "c_custkey").join(q45b, "c_custkey")
-    assert(joined.count() > 0)
-    val mismatches = joined.filter(abs(col("cd_pos") - col("cd_val")) > 1e-9).count()
-    assert(mismatches == 0)
-  }
-
-  test("q44b histogram range-mean equals q44's RANGE-frame window exactly") {
-    // the ±5-size mean is a pure function of p_size, so the bounded-
-    // histogram formulation must reproduce the global-window numbers
-    val q44 = queries.Catalog.queries("q44_range_frame")(spark, Sf0001)
-      .select(col("p_partkey"), col("nearby_avg").as("win"))
-    val q44b = queries.Catalog.queries("q44b_range_hist")(spark, Sf0001)
-      .select(col("p_partkey"), col("nearby_avg").as("hist"))
-    val mismatches = q44.join(q44b, "p_partkey")
-      .filter(abs(col("win") - col("hist")) > 1e-9).count()
-    assert(mismatches == 0)
-    assert(q44.count() == q44b.count())
-  }
-
-  test("q89 gap-fill conserves event counts and fills gaps with zeros") {
-    val dense = queries.Catalog.queries("q89_gap_fill")(spark, Sf0001)
-    val perUser = dense.groupBy(col("user_id"))
-      .agg(sum(col("n")).as("dense_total"), count(lit(1)).as("n_hours"))
-    val raw = Tables.events(spark, Sf0001).filter(col("user_id") < 50)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("raw_total"))
-    val bad = perUser.join(raw, "user_id")
-      .filter(col("dense_total") =!= col("raw_total")).count()
-    assert(bad == 0, "densification must conserve per-user event counts")
-    // gaps exist in real data and are zero-filled (otherwise the query
-    // tests nothing)
-    assert(dense.filter(col("n") === 0).count() > 0)
-  }
-
-  test("q45b plan windows over the histogram, not the customer table") {
-    val windows = PlanTree.windows(queries.Catalog.queries("q45b_dist_cdf")(spark, Sf0001))
-    // the only Window node's input must be the aggregated histogram
-    // (count per balance), never a full-table scan ordered globally
-    assert(windows.nonEmpty)
-    windows.foreach { w =>
-      assert(w.find(_.isInstanceOf[HashAggregateExec]).isDefined,
-        s"Window must sit above the value histogram aggregate:\n$w")
-    }
-  }
-
-  test("q92 EWMA stays inside the trailing-window envelope and starts at n") {
-    val out = queries.Catalog.queries("q92_ewma")(spark, Sf0001)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("hour"))
-    val first = out.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-    // EWMA of a single observation is that observation
-    assert(first.filter(abs(col("ewma") - col("n")) > 1e-6).count() == 0)
-    val env = out.withColumn("lo", min(col("n")).over(w.rowsBetween(-19, 0)))
-      .withColumn("hi", max(col("n")).over(w.rowsBetween(-19, 0)))
-    assert(env.filter(col("ewma") < col("lo") - 1e-6 ||
-      col("ewma") > col("hi") + 1e-6).count() == 0)
-  }
-
-  test("q93 keeps observed values and bounds filled ones by their neighbors") {
-    val out = queries.Catalog.queries("q93_interp")(spark, Sf0001)
-    assert(out.filter(col("v_filled").isNull).count() == 0)
-    val wAll = Window.partitionBy(col("user_id")).orderBy(col("hour"))
-    val obsVals = out.filter(col("observed"))
-    assert(obsVals.count() > 0)
-    // every filled value lies within [min, max] of the user's observed values
-    val bounds = obsVals.groupBy(col("user_id"))
-      .agg(min(col("v_filled")).as("lo"), max(col("v_filled")).as("hi"))
-    val breaches = out.join(bounds, "user_id")
-      .filter(col("v_filled") < col("lo") - 1e-9 ||
-        col("v_filled") > col("hi") + 1e-9).count()
-    assert(breaches == 0)
-    // the dense grid has no hour gaps
-    val gaps = out
-      .withColumn("prev", lag(unix_timestamp(col("hour"), "yyyy-MM-dd HH:mm:ss"), 1)
-        .over(wAll))
-      .filter(col("prev").isNotNull &&
-        unix_timestamp(col("hour"), "yyyy-MM-dd HH:mm:ss") - col("prev") =!= 3600)
-      .count()
-    assert(gaps == 0)
-  }
-
   test("q92 EWMA band join is an equi-join on user with a range residual") {
     assert(PlanTree.cartesians(Catalog.queries("q92_ewma")(spark, Sf0001)).isEmpty,
       "the 20-row band must ride the user_id equi-join")

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.ZOrder
-import org.scalacheck.Gen
 
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
@@ -53,16 +52,5 @@ class ZOrderSpec extends SparkSpec {
     graft.plans.GraftExtensions.register(spark)
     val z = spark.sql("SELECT graft_zorder2(3, 1) AS z").as[Long].head()
     assert(z === 7L) // x=3 → bits 0,2; y=1 → bit 1
-  }
-
-  test("z-order codes are unique over distinct 16-bit coordinate pairs") {
-    val gen = Gen.zip(Gen.chooseNum(0L, 65535L), Gen.chooseNum(0L, 65535L))
-    val pts = samples(gen, 400, 42L).distinct
-    val codes = pts.toDF("x", "y")
-      .select(graft.functions.ZOrder.zOrder2($"x", $"y").as("z"))
-      .as[Long].collect()
-    assert(codes.length === pts.length)
-    assert(codes.distinct.length === pts.length, "interleave must be injective")
-    assert(codes.forall(z => z >= 0L && z <= 0xFFFFFFFFL))
   }
 }
