@@ -45,30 +45,6 @@ object Dedup {
     column(graft.functions.Md5Hash48(expression(c)))
   }
 
-  /** Distinct word n-gram shingles from an ALREADY-MATERIALIZED token
-    * array column (an attribute, not an inline expression). Passing
-    * `TextStats.tokens(text)` directly here would re-evaluate the
-    * whole interpreted filter(split(...)) once per element_at — a
-    * quadratic blowup per row. Stage it with [[withShingles]] instead;
-    * CollapseProject keeps a multiply-referenced non-cheap alias
-    * materialized, so the split runs once per row.
-    */
-  def shinglesFromTokens(toks: Column, n: Int = 3): Column = {
-    val idx = sequence(lit(0), size(toks) - n)
-    array_distinct(transform(idx, i =>
-      concat_ws(" ", (0 until n).map(k => element_at(toks, (i + k + 1).cast("int"))): _*)))
-  }
-
-  /** Adds a distinct-shingle array column `sh`, keeping only docs with
-    * ≥ n tokens (sequence() would reverse on negative spans).
-    */
-  def withShingles(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 3): DataFrame =
-    docs
-      .withColumn("__toks", TextStats.tokens(col(textCol)))
-      .filter(size(col("__toks")) >= n)
-      .select(col(idCol).as("doc"), shinglesFromTokens(col("__toks"), n).as("sh"))
-
   /** One row per (doc, distinct hashed shingle). Each token is
     * md5-hashed to [0, 2^31) once (a single linear pass per doc), then
     * shingle POSITIONS are exploded and each n-gram hash is combined
@@ -266,15 +242,28 @@ object Dedup {
     */
   private[graft] def jaccardPairsFromShingles(inv: DataFrame,
       threshold: Double): DataFrame = {
-    val sizes = inv.groupBy(col("doc")).agg(count(lit(1)).as("n_sh"))
     val common = inv.as("a").join(inv.as("b"),
         col("a.s") === col("b.s") && col("a.doc") < col("b.doc"))
       .groupBy(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
       .agg(count(lit(1)).as("common"))
+    jaccardChecked(common, "doc_a", "doc_b", inv, inv, threshold)
+  }
+
+  /** The exact-Jaccard check, the Spark mirror of `OracleSql.jaccard`/
+    * `jaccardVerified`. `common` holds doc pairs in columns `a` and `b`
+    * with their shared-shingle count `common`; each side joins its doc's
+    * shingle count from its (doc, s) inverted index (`invA`, `invB`),
+    * and a pair is kept iff common / (n_a + n_b − common) ≥ threshold.
+    * Output: (a, b, jaccard).
+    */
+  private[graft] def jaccardChecked(common: DataFrame, a: String, b: String,
+      invA: DataFrame, invB: DataFrame, threshold: Double): DataFrame = {
+    def sizes(inv: DataFrame, id: String, n: String) =
+      inv.groupBy(col("doc")).agg(count(lit(1)).as(n)).withColumnRenamed("doc", id)
     common
-      .join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
+      .join(sizes(invA, a, "n_a"), a)
+      .join(sizes(invB, b, "n_b"), b)
+      .select(col(a), col(b),
         (col("common").cast("double") /
           (col("n_a") + col("n_b") - col("common")).cast("double")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
@@ -864,12 +853,7 @@ object Dedup {
       .join(invIn.toDF("in_doc", "s"), "in_doc")
       .join(invC.toDF("c_doc", "s"), Seq("c_doc", "s"))
       .groupBy(col("in_doc"), col("c_doc")).agg(count(lit(1)).as("common"))
-    val dups = common
-      .join(invIn.groupBy(col("doc")).agg(count(lit(1)).as("n_in"))
-        .toDF("in_doc", "n_in"), "in_doc")
-      .join(invC.groupBy(col("doc")).agg(count(lit(1)).as("n_c"))
-        .toDF("c_doc", "n_c"), "c_doc")
-      .filter(col("common") / (col("n_in") + col("n_c") - col("common")) >= threshold)
+    val dups = jaccardChecked(common, "in_doc", "c_doc", invIn, invC, threshold)
       .select(col("in_doc").as(idCol)).distinct()
     incoming.join(dups, Seq(idCol), "left_anti")
       .select(col(idCol).as("doc_id"))
@@ -939,15 +923,11 @@ object Dedup {
     val cand = candidatePairsFromBandKeys(bandKeysFromSignatures(
       signaturesFromShingles(inv, bands * rowsPerBand, seed), bands, rowsPerBand),
       starCapBucketSize)
-    val sizes = inv.groupBy(col("doc")).agg(count(lit(1)).as("n_sh"))
     val common = cand
       .join(inv.toDF("doc_a", "s"), "doc_a")
       .join(inv.toDF("doc_b", "s"), Seq("doc_b", "s"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("common"))
-    val verified = common
-      .join(sizes.toDF("doc_a", "n_a"), "doc_a")
-      .join(sizes.toDF("doc_b", "n_b"), "doc_b")
-      .filter(col("common") / (col("n_a") + col("n_b") - col("common")) >= threshold)
+    val verified = jaccardChecked(common, "doc_a", "doc_b", inv, inv, threshold)
       .select(col("doc_a"), col("doc_b"))
     val clusters = duplicateClusters(verified, "doc_a", "doc_b")
     keepCanonical(docs, idCol, clusters)

@@ -83,7 +83,8 @@ object ImdbPipeline {
     // not collapse the copies across independent projection slots, so
     // the one-hot block cost |genres| regex splits per row instead of 1.
     // The staged attribute is multiply-referenced and non-cheap, so
-    // CollapseProject keeps it materialized (the withShingles note).
+    // CollapseProject keeps it materialized (the staging note above
+    // TextStats' token stats).
     val genreCols = uniqueGenres.map(g =>
       array_contains(col("__genres_arr"), g).cast("int").as(s"genre_$g"))
     val typeCols = TitleTypes.map(t =>

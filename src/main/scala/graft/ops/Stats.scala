@@ -74,7 +74,9 @@ object Stats {
   def keySkewProfile(df: DataFrame, keyCol: String): DataFrame = {
     // Materialize the per-key count ONCE: base/top10/p99 all branch
     // from it, and without the checkpoint each branch re-scans and
-    // re-shuffles the raw fact (PlanSpec-pinned at 4 scans → 1).
+    // re-shuffles the raw fact (4 scans → 1; QualitySpec's
+    // "keySkewProfile: the fact table is scanned and shuffled once for
+    // all metrics" pins it).
     // Eager, like the dedup iteration tables — the key-count table is
     // ≪ the fact and this is a terminal diagnostic, not a composable
     // lazy view.

@@ -804,13 +804,9 @@ object DedupQueries {
     */
   private def dd18PrefixFilter(s: SparkSession, dir: String): DataFrame = {
     val t = 0.5
-    val toks = Tables.documents(s, dir)
-      .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), col("toks"),
-        explode(expr("sequence(1, size(toks) - 2)")).as("i"))
-      .select(col("doc_id"), graft.dedup.Dedup.md5Hash48(
-        expr("concat_ws(' ', slice(toks, i, 3))")).as("tok"))
+    val toks = TextStats.wordGrams(Tables.documents(s, dir)
+        .select(col("doc_id"), TextStats.tokens(col("text")).as("toks")), 3, Seq("doc_id"))
+      .select(col("doc_id"), graft.dedup.Dedup.md5Hash48(col("gram")).as("tok"))
       .distinct()
     // df, |s|, and the rarity rank all ride as WINDOWS over the one
     // postings frame instead of separate groupBy aggregates re-joined
@@ -946,13 +942,9 @@ object DedupQueries {
     * per pair by which side is smaller.
     */
   private def dd19Containment(s: SparkSession, dir: String): DataFrame = {
-    val sh = Tables.documents(s, dir)
-      .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), col("toks"),
-        explode(expr("sequence(1, size(toks) - 2)")).as("i"))
-      .select(col("doc_id"), graft.dedup.Dedup.md5Hash48(
-        expr("concat_ws(' ', slice(toks, i, 3))")).as("h"))
+    val sh = TextStats.wordGrams(Tables.documents(s, dir)
+        .select(col("doc_id"), TextStats.tokens(col("text")).as("toks")), 3, Seq("doc_id"))
+      .select(col("doc_id"), graft.dedup.Dedup.md5Hash48(col("gram")).as("h"))
       .distinct().localCheckpoint()
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val inter = sh.as("a").join(sh.as("b"),

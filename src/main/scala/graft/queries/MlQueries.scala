@@ -1417,7 +1417,8 @@ object MlQueries {
       "CAST(sdy AS DOUBLE) AS r3", "syy")
     // both λs ride ONE scan: cross join the 1-row moments with the
     // 2-row λ table instead of unioning two copies of the aggregate
-    // subtree (which would scan lineitem twice — Plan2Spec pins this)
+    // subtree (which would scan lineitem twice — MlSpec's "ml13/ml15
+    // closed-form solvers are single-aggregate plans" pins this)
     import s.implicits._
     val lams = Seq(("0", 0.0), ("1e6", 1e6)).toDF("lam", "lam_v")
     base.crossJoin(broadcast(lams))
@@ -1538,7 +1539,8 @@ object MlQueries {
     // the bounded side is ALWAYS the test set (20 rows) — broadcast it
     // explicitly rather than trusting the planner's size estimate;
     // the corpus side must never be broadcast (it scales with data).
-    // Plan2Spec pins both directions.
+    // MlSpec's "ml17 kNN: the 20-row test side broadcasts; the corpus
+    // never does" pins both directions.
     val pairs = broadcast(test.as("q")).crossJoin(corpus.as("c"))
       .select(col("q.vec_id").as("query_id"), col("q.label").as("actual"),
         col("c.vec_id").as("neighbor_id"), col("c.label").as("vote"),

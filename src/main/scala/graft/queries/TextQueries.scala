@@ -271,17 +271,9 @@ object TextQueries {
   private def tx08Contamination(s: SparkSession, dir: String): DataFrame = {
     // Shingles hash to 48-bit longs before the distinct: the only
     // shuffle in the query carries 8-byte keys, not 5-gram strings.
-    // Positions exploded + per-row slice, NOT explode(transform(...)):
-    // the materializing shape is ~2.5× slower per giant-doc token and
-    // OOMs ~3× earlier (the retired GramShapeAB probe, SCALE.md
-    // "Round-12, session 4").
-    val sh = Tables.documents(s, dir)
-      .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 5)
-      .select(col("doc_id"), col("toks"),
-        explode(expr("sequence(1, size(toks) - 4)")).as("i"))
-      .select(col("doc_id"), graft.dedup.Dedup.md5Hash48(
-        expr("concat_ws(' ', slice(toks, i, 5))")).as("sh5"))
+    val sh = TextStats.wordGrams(Tables.documents(s, dir)
+        .select(col("doc_id"), TextStats.tokens(col("text")).as("toks")), 5, Seq("doc_id"))
+      .select(col("doc_id"), graft.dedup.Dedup.md5Hash48(col("gram")).as("sh5"))
       .distinct()
       // materialized (r19 optimization round): the bench side and the
       // probe side are DIFFERENT filters over this frame, so exchange
@@ -421,12 +413,9 @@ object TextQueries {
     * combinable, one shuffle.
     */
   private def tx10Repetition(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), col("toks"),
-        explode(expr("sequence(1, size(toks) - 1)")).as("i"))
-      .select(col("doc_id"), expr("concat_ws(' ', slice(toks, i, 2))").as("bg"))
+    TextStats.wordGrams(Tables.documents(s, dir)
+        .select(col("doc_id"), TextStats.tokens(col("text")).as("toks")), 2, Seq("doc_id"))
+      .select(col("doc_id"), col("gram").as("bg"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), countDistinct(col("bg")).as("n_distinct"))
       .withColumn("dup_frac", round(lit(1) - col("n_distinct") / col("n_bigrams"), 4))
@@ -647,48 +636,85 @@ object TextQueries {
     * verifies (dd01/tx02/tx10/tx08); this proves they COMPOSE — one
     * DAG, shuffles only on doc_id and the broadcast benchmark set.
     */
-  private def mx05CurationPipeline(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.TextStats
-    val docs = Tables.documents(s, dir)
-    val canon = graft.dedup.Dedup.exactGroups(docs, "doc_id", "text")
-      .filter(col("is_dup") === 0).select(col("doc_id"))
-    // tokenization feeds three downstream stages (repetition, shingles
-    // ×2 sides) — materialize once, same rationale as jaccardPairs
-    val toks = docs
-      .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0)
-      .localCheckpoint()
-    // quality/n_tokens from the materialized token frame (r19
-    // optimization round): size(toks) > 0 IS the tokenCount(text) > 0
-    // gate, and the text-input forms re-tokenized the corpus ~8×
-    val quality = toks
-      .select(col("doc_id"),
-        TextStats.qualityScoreFromTokens(col("toks")).as("quality"),
-        size(col("toks")).as("n_tokens"))
-    val rep = toks.filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), col("toks"),
-        explode(expr("sequence(1, size(toks) - 1)")).as("i"))
-      .select(col("doc_id"), expr("concat_ws(' ', slice(toks, i, 2))").as("bg"))
-      .groupBy("doc_id")
-      .agg((lit(1) - countDistinct(col("bg")) / count(lit(1))).as("dup_frac"))
-    val sh = toks.filter(size(col("toks")) >= 5)
-      .select(col("doc_id"), col("toks"),
-        explode(expr("sequence(1, size(toks) - 4)")).as("i"))
-      .select(col("doc_id"), graft.dedup.Dedup.md5Hash48(
-        expr("concat_ws(' ', slice(toks, i, 5))")).as("s5"))
-      .distinct()
-    val contaminated = sh.filter(col("doc_id") >= 25)
-      .join(broadcast(sh.filter(col("doc_id") < 25).select(col("s5")).distinct()), "s5")
-      .select(col("doc_id")).distinct()
-    docs.select(col("doc_id"), col("source"))
-      .join(canon, "doc_id")
-      .join(quality, "doc_id")
-      .join(rep, "doc_id")
-      .join(contaminated, Seq("doc_id"), "left_anti")
-      .filter(col("doc_id") >= 25 && col("quality") >= 0.5 && col("dup_frac") <= 0.4)
+  private def mx05CurationPipeline(s: SparkSession, dir: String): DataFrame =
+    curationGates(Tables.documents(s, dir))
+      .filter(gateStages.last)
       .select(col("doc_id"), col("source"), round(col("quality"), 4).as("quality"),
         col("n_tokens"))
       .orderBy(col("doc_id"))
+
+  /** The four curation gates of the mx05 pipeline as one frame, one row
+    * per document: `canon` (exact-dedup canonical, dd01), `q_ok`
+    * (quality ≥ 0.5, tx02), `rep_ok` (duplicated-bigram fraction ≤ 0.4,
+    * tx10) and `contam` (shares a word 5-gram with the benchmark docs
+    * 0–24, tx08), beside `source`, `n_tokens`, `quality` and `eligible`
+    * (doc_id ≥ 25). A doc a gate cannot score (too few tokens, NULL
+    * text) fails it, and a failed gate reads false, never NULL. mx05,
+    * mx06 and mx09/mx09b all read this frame, so each gate's rule is
+    * written here once. Shuffles: doc_id (dedup fingerprint window,
+    * per-doc repetition agg, the gate joins) and the 48-bit shingle
+    * distinct; the benchmark shingle set broadcasts.
+    */
+  private def curationGates(docs: DataFrame): DataFrame = {
+    import graft.dedup.Dedup
+    val toks = docs.select(col("doc_id"), col("source"),
+      TextStats.tokens(col("text")).as("toks"))
+    val canon = Dedup.exactGroups(docs, "doc_id", "text")
+      .filter(col("is_dup") === 0).select(col("doc_id"), lit(true).as("canon"))
+    val rep = TextStats.wordGrams(toks, 2, Seq("doc_id"))
+      .groupBy(col("doc_id"))
+      .agg(((lit(1) - countDistinct(col("gram")) / count(lit(1))) <= 0.4).as("rep_ok"))
+    // 48-bit hashed shingles: the distinct shuffles 8-byte longs and
+    // the broadcast benchmark set is ~5× smaller than with raw strings
+    val sh = TextStats.wordGrams(toks, 5, Seq("doc_id"))
+      .select(col("doc_id"), Dedup.md5Hash48(col("gram")).as("s5"))
+      .distinct()
+    val contaminated = sh.filter(col("doc_id") >= 25)
+      .join(broadcast(sh.filter(col("doc_id") < 25).select(col("s5")).distinct()), "s5")
+      .select(col("doc_id")).distinct().withColumn("contam", lit(true))
+    // quality and n_tokens read the staged token attribute of the one
+    // base projection; quality is NULL for a token-less doc, as in the
+    // oracle's `len(toks) > 0` scoring CTE, so it fails q_ok
+    toks
+      .select(col("doc_id"), col("source"), size(col("toks")).as("n_tokens"),
+        when(size(col("toks")) > 0, TextStats.qualityScoreFromTokens(col("toks")))
+          .as("quality"))
+      .join(canon, Seq("doc_id"), "left")
+      .join(rep, Seq("doc_id"), "left")
+      .join(contaminated, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("source"), col("n_tokens"), col("quality"),
+        (col("doc_id") >= 25).as("eligible"),
+        coalesce(col("canon"), lit(false)).as("canon"),
+        coalesce(col("quality") >= 0.5, lit(false)).as("q_ok"),
+        coalesce(col("rep_ok"), lit(false)).as("rep_ok"),
+        coalesce(col("contam"), lit(false)).as("contam"))
+  }
+
+  /** The curation funnel's cumulative gates, stages 2–6: eligible,
+    * then each gate of [[curationGates]] AND-ed on in pipeline order.
+    * The last one is the curated corpus.
+    */
+  private val gateStages: Seq[Column] =
+    Seq(col("canon"), col("q_ok"), col("rep_ok"), !col("contam"))
+      .scanLeft(col("eligible"))(_ && _)
+
+  /** Stage names of the curation funnel, 1-based by stage_idx. */
+  private val funnelStages: Seq[String] =
+    Seq("all", "eligible", "canonical", "quality", "repetition", "decontaminated")
+
+  /** Docs and tokens surviving each funnel stage 1–6 of a
+    * [[curationGates]] frame, grouped by `by` (mx06 over the corpus,
+    * mx09 per source), all from one aggregate. Output: (by...,
+    * stage_idx, n_docs, n_tokens).
+    */
+  private def gateFunnel(gates: DataFrame, by: Column*): DataFrame = {
+    val counts = (count(lit(1)).as("d1") +: sum(col("n_tokens")).as("t1") +:
+      gateStages.zipWithIndex.flatMap { case (g, i) => Seq(
+        sum(when(g, 1L).otherwise(0L)).as(s"d${i + 2}"),
+        sum(when(g, col("n_tokens")).otherwise(0L)).as(s"t${i + 2}")) })
+    val rows = (1 to 6).map(i => s"$i,d$i,t$i").mkString(", ")
+    gates.groupBy(by: _*).agg(counts.head, counts.tail: _*)
+      .select(by :+ expr(s"stack(6, $rows) AS (stage_idx, n_docs, n_tokens)"): _*)
   }
 
   private val mx05Sql =
@@ -928,66 +954,11 @@ object TextQueries {
     * pipeline telemetry a curation run reports without re-running a
     * filter chain per stage.
     */
-  private def mx06CurationFunnel(s: SparkSession, dir: String): DataFrame = {
-    import graft.dedup.Dedup
-    val docs = Tables.documents(s, dir)
-    val canon = Dedup.exactGroups(docs, "doc_id", "text")
-      .filter(col("is_dup") === 0).select(col("doc_id"), lit(true).as("canon"))
-    val toks = docs.select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0).localCheckpoint()
-    // quality from the ALREADY-materialized token frame (r19
-    // optimization round): the text-input form re-tokenized the corpus
-    // a second time (6× inside qualityScore), and the `toks` filter
-    // (size > 0) is exactly the tokenCount(text) > 0 gate
-    val quality = toks
-      .select(col("doc_id"),
-        (TextStats.qualityScoreFromTokens(col("toks")) >= 0.5).as("q_ok"))
-    val rep = toks.filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), col("toks"),
-        explode(expr("sequence(1, size(toks) - 1)")).as("i"))
-      .select(col("doc_id"), expr("concat_ws(' ', slice(toks, i, 2))").as("bg"))
-      .groupBy(col("doc_id"))
-      .agg(((lit(1) - countDistinct(col("bg")) / count(lit(1))) <= 0.4).as("rep_ok"))
-    // 48-bit hashed shingles: the distinct shuffles 8-byte longs and
-    // the broadcast benchmark set is ~5× smaller than with raw strings.
-    val sh = toks.filter(size(col("toks")) >= 5)
-      .select(col("doc_id"), col("toks"),
-        explode(expr("sequence(1, size(toks) - 4)")).as("i"))
-      .select(col("doc_id"), graft.dedup.Dedup.md5Hash48(
-        expr("concat_ws(' ', slice(toks, i, 5))")).as("s5"))
-      .distinct()
-    val contaminated = sh.filter(col("doc_id") >= 25)
-      .join(broadcast(sh.filter(col("doc_id") < 25).select(col("s5")).distinct()), "s5")
-      .select(col("doc_id")).distinct().withColumn("contam", lit(true))
-    val flags = docs.select(col("doc_id"), (col("doc_id") >= 25).as("eligible"))
-      .join(canon, Seq("doc_id"), "left")
-      .join(quality, Seq("doc_id"), "left")
-      .join(rep, Seq("doc_id"), "left")
-      .join(contaminated, Seq("doc_id"), "left")
-      .select(col("eligible"),
-        coalesce(col("canon"), lit(false)).as("canon"),
-        coalesce(col("q_ok"), lit(false)).as("q_ok"),
-        coalesce(col("rep_ok"), lit(false)).as("rep_ok"),
-        coalesce(col("contam"), lit(false)).as("contam"))
-    def cnt(c: org.apache.spark.sql.Column) = sum(when(c, 1L).otherwise(0L))
-    flags.agg(
-        count(lit(1)).as("s1"),
-        cnt(col("eligible")).as("s2"),
-        cnt(col("eligible") && col("canon")).as("s3"),
-        cnt(col("eligible") && col("canon") && col("q_ok")).as("s4"),
-        cnt(col("eligible") && col("canon") && col("q_ok") && col("rep_ok")).as("s5"),
-        cnt(col("eligible") && col("canon") && col("q_ok") && col("rep_ok")
-          && !col("contam")).as("s6"))
-      .select(explode(map(
-        lit(1), col("s1"), lit(2), col("s2"), lit(3), col("s3"),
-        lit(4), col("s4"), lit(5), col("s5"), lit(6), col("s6")))
-        .as(Seq("stage_idx", "n_docs")))
-      .withColumn("stage", element_at(array(
-        lit("all"), lit("eligible"), lit("canonical"), lit("quality"),
-        lit("repetition"), lit("decontaminated")), col("stage_idx")))
+  private def mx06CurationFunnel(s: SparkSession, dir: String): DataFrame =
+    gateFunnel(curationGates(Tables.documents(s, dir)))
+      .withColumn("stage", element_at(array(funnelStages.map(lit): _*), col("stage_idx")))
       .select(col("stage_idx"), col("stage"), col("n_docs"))
       .orderBy(col("stage_idx"))
-  }
 
   private val mx06Sql =
     raw"""WITH toks AS (
@@ -1065,13 +1036,9 @@ object TextQueries {
     // distinct and the self-join: the inverted-index shuffle carries
     // 8-byte keys instead of ~40-byte 5-gram strings (the Dedup
     // hashedShingleRows discipline — never shuffle shingle text).
-    val inv = Tables.documents(s, dir)
-      .select(col("source"), TextStats.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 5)
-      .select(col("source"), col("toks"),
-        explode(expr("sequence(1, size(toks) - 4)")).as("i"))
-      .select(col("source"), graft.dedup.Dedup.md5Hash48(
-        expr("concat_ws(' ', slice(toks, i, 5))")).as("s5"))
+    val inv = TextStats.wordGrams(Tables.documents(s, dir)
+        .select(col("source"), TextStats.tokens(col("text")).as("toks")), 5, Seq("source"))
+      .select(col("source"), graft.dedup.Dedup.md5Hash48(col("gram")).as("s5"))
       .distinct()
       // materialized (r19 optimization round): ReuseExchange dedups the
       // self-join's two identical sides but NOT the sizes agg (different
@@ -1286,11 +1253,8 @@ object TextQueries {
     val words = toks.select(col("source"), explode(col("toks")).as("w"))
       .groupBy(col("source"))
       .agg((countDistinct(col("w")) / count(lit(1))).as("ttr_raw"))
-    val tris = toks.filter(size(col("toks")) >= 3)
-      .select(col("source"), col("toks"),
-        explode(expr("sequence(1, size(toks) - 2)")).as("i"))
-      .select(col("source"), graft.dedup.Dedup.md5Hash48(
-        expr("concat_ws(' ', slice(toks, i, 3))")).as("t3"))
+    val tris = TextStats.wordGrams(toks, 3, Seq("source"))
+      .select(col("source"), graft.dedup.Dedup.md5Hash48(col("gram")).as("t3"))
       .groupBy(col("source"))
       .agg((countDistinct(col("t3")) / count(lit(1))).as("tri_raw"))
     base.join(words, "source").join(tris, "source")
@@ -1419,55 +1383,12 @@ object TextQueries {
     * hash-verifies the final pack assignment doc-by-doc. */
   private def pipelineFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import graft.dedup.Dedup
-    val docs = Tables.documents(s, dir)
-    val canon = Dedup.exactGroups(docs, "doc_id", "text")
-      .filter(col("is_dup") === 0).select(col("doc_id"), lit(true).as("canon"))
-    // tokenization feeds repetition + both shingle sides — once
-    val toks = docs.select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) > 0).localCheckpoint()
-    // quality from the materialized token frame (r19 optimization
-    // round): size(toks) > 0 IS the tokenCount gate, and the
-    // text-input qualityScore re-tokenized the corpus 6× per row
-    val quality = toks
-      .select(col("doc_id"),
-        (TextStats.qualityScoreFromTokens(col("toks")) >= 0.5).as("q_ok"))
-    val rep = toks.filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), col("toks"),
-        explode(expr("sequence(1, size(toks) - 1)")).as("i"))
-      .select(col("doc_id"), expr("concat_ws(' ', slice(toks, i, 2))").as("bg"))
-      .groupBy(col("doc_id"))
-      .agg(((lit(1) - countDistinct(col("bg")) / count(lit(1))) <= 0.4).as("rep_ok"))
-    val sh = toks.filter(size(col("toks")) >= 5)
-      .select(col("doc_id"), col("toks"),
-        explode(expr("sequence(1, size(toks) - 4)")).as("i"))
-      .select(col("doc_id"), Dedup.md5Hash48(
-        expr("concat_ws(' ', slice(toks, i, 5))")).as("s5"))
-      .distinct()
-    val contaminated = sh.filter(col("doc_id") >= 25)
-      .join(broadcast(sh.filter(col("doc_id") < 25).select(col("s5")).distinct()), "s5")
-      .select(col("doc_id")).distinct().withColumn("contam", lit(true))
-    // one flags frame; three consumers (funnel agg, mixing, packing).
-    // token count over a staged token attribute (r20 FromTokens
-    // consistency pass — single expansion today, safe against a second
-    // consumer tomorrow)
-    val flags = docs
-      .withColumn("__tk", TextStats.tokens(col("text")))
-      .select(col("doc_id"), col("source"),
-        size(col("__tk")).cast("long").as("n_tokens"),
-        (col("doc_id") >= 25).as("eligible"))
-      .join(canon, Seq("doc_id"), "left")
-      .join(quality, Seq("doc_id"), "left")
-      .join(rep, Seq("doc_id"), "left")
-      .join(contaminated, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("source"), col("n_tokens"), col("eligible"),
-        coalesce(col("canon"), lit(false)).as("canon"),
-        coalesce(col("q_ok"), lit(false)).as("q_ok"),
-        coalesce(col("rep_ok"), lit(false)).as("rep_ok"),
-        coalesce(col("contam"), lit(false)).as("contam"))
+    // one flags frame; three consumers (funnel agg, mixing, packing)
+    val flags = curationGates(Tables.documents(s, dir))
+      .select(col("doc_id"), col("source"), col("n_tokens").cast("long").as("n_tokens"),
+        col("eligible"), col("canon"), col("q_ok"), col("rep_ok"), col("contam"))
       .localCheckpoint()
-    val curated = flags
-      .filter(col("eligible") && col("canon") && col("q_ok") && col("rep_ok")
-        && !col("contam"))
+    val curated = flags.filter(gateStages.last)
       .select(col("source"), col("doc_id"), col("n_tokens"))
     // mx02's mixing rule, re-derived on the curated per-source counts:
     // keep md5-bucket < round(10000 · min_n / n_s)
@@ -1487,23 +1408,7 @@ object TextQueries {
 
   private def mx09MegaPipeline(s: SparkSession, dir: String): DataFrame = {
     val (flags, mixed) = pipelineFrames(s, dir)
-    def cnt(c: Column) = sum(when(c, 1L).otherwise(0L))
-    def tok(c: Column) = sum(when(c, col("n_tokens")).otherwise(0L))
-    val g2 = col("eligible")
-    val g3 = g2 && col("canon")
-    val g4 = g3 && col("q_ok")
-    val g5 = g4 && col("rep_ok")
-    val g6 = g5 && !col("contam")
-    val funnel16 = flags.groupBy(col("source")).agg(
-        count(lit(1)).as("d1"), sum(col("n_tokens")).as("t1"),
-        cnt(g2).as("d2"), tok(g2).as("t2"),
-        cnt(g3).as("d3"), tok(g3).as("t3"),
-        cnt(g4).as("d4"), tok(g4).as("t4"),
-        cnt(g5).as("d5"), tok(g5).as("t5"),
-        cnt(g6).as("d6"), tok(g6).as("t6"))
-      .select(col("source"), expr(
-        "stack(6, 1,d1,t1, 2,d2,t2, 3,d3,t3, 4,d4,t4, 5,d5,t5, 6,d6,t6)" +
-          " AS (stage_idx, n_docs, n_tokens)"))
+    val funnel16 = gateFunnel(flags, col("source"))
     val s7 = mixed.groupBy(col("source")).agg(
         count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
       .select(lit(7).as("stage_idx"), col("n_docs"), col("n_tokens"), col("source"))
@@ -1517,10 +1422,8 @@ object TextQueries {
       .select(lit(8).as("stage_idx"), col("n_docs"), col("n_tokens"), col("source"))
     funnel16.select(col("stage_idx"), col("n_docs"), col("n_tokens"), col("source"))
       .union(s7).union(s8)
-      .withColumn("stage", element_at(array(
-        lit("all"), lit("eligible"), lit("canonical"), lit("quality"),
-        lit("repetition"), lit("decontaminated"), lit("mixed"), lit("packed")),
-        col("stage_idx")))
+      .withColumn("stage", element_at(
+        array((funnelStages :+ "mixed" :+ "packed").map(lit): _*), col("stage_idx")))
       .select(col("stage_idx"), col("stage"), col("source"),
         col("n_docs"), col("n_tokens"))
       .orderBy(col("stage_idx"), col("source"))

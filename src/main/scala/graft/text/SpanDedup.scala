@@ -79,21 +79,7 @@ object SpanDedup {
     */
   def dedupSpans(docs: DataFrame, window: Int): DataFrame = {
     val sp = spans(docs, window)
-    val kept = sp.join(duplicatedSpanFps(sp), Seq("span_fp"), "left_anti")
-    // array_sort on struct(span_idx, _) orders by the leading int
-    // field, making the collect_list order-insensitive (collect_list
-    // alone is partition-order-dependent).
-    val reassembled = kept.groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).cast("int").as("n_kept"),
-        md5(concat_ws(" ",
-          expr("transform(array_sort(collect_list(struct(span_idx, span_text))), x -> x.span_text)")))
-          .as("cleaned_fp"))
-    sp.groupBy(col("doc_id")).agg(count(lit(1)).cast("int").as("n_spans"))
-      .join(reassembled, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_spans"),
-        coalesce(col("n_kept"), lit(0)).as("n_kept"),
-        coalesce(col("cleaned_fp"), md5(lit(""))).as("cleaned_fp"))
+    reassemble(sp, sp.join(duplicatedSpanFps(sp), Seq("span_fp"), "left_anti"))
   }
 
   /** Winnowed duplicated-passage profile (Schleimer, Wilkerson &
@@ -163,26 +149,14 @@ object SpanDedup {
   def decontaminateSpans(corpus: DataFrame, bench: DataFrame, window: Int,
       n: Int = 5): DataFrame = {
     import graft.dedup.Dedup
-    // n-gram streams via exploded POSITIONS + a per-row slice, never
-    // explode(transform(...)): the transform shape materializes the
-    // whole per-doc gram array as one value, which is ~2.5× slower and
-    // hits the task heap wall ~3× earlier on a giant document
-    // (the retired GramShapeAB probe, SCALE.md "Round-12, session 4")
-    val bsh = bench
-      .select(TextStats.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= n)
-      .select(col("toks"),
-        explode(expr(s"sequence(1, size(toks) - ${n - 1})")).as("i"))
-      .select(Dedup.md5Hash48(
-        expr(s"concat_ws(' ', slice(toks, i, $n))")).as("h"))
+    val bsh = TextStats.wordGrams(
+        bench.select(TextStats.tokens(col("text")).as("toks")), n, Nil)
+      .select(Dedup.md5Hash48(col("gram")).as("h"))
       .distinct()
-    val hits = corpus
-      .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= n)
-      .select(col("doc_id"), col("toks"),
-        explode(expr(s"sequence(1, size(toks) - ${n - 1})")).as("p"))
-      .select(col("doc_id"), col("p"), Dedup.md5Hash48(
-        expr(s"concat_ws(' ', slice(toks, p, $n))")).as("h"))
+    val hits = TextStats.wordGrams(
+        corpus.select(col("doc_id"), TextStats.tokens(col("text")).as("toks")),
+        n, Seq("doc_id"), pos = "p")
+      .select(col("doc_id"), col("p"), Dedup.md5Hash48(col("gram")).as("h"))
       .join(broadcast(bsh), Seq("h"), "left_semi")
       // the n-gram at p covers tokens [p, p+n-1]; excise every span it
       // overlaps (span_idx is 0-based over window-token tiles)
@@ -191,7 +165,18 @@ object SpanDedup {
         .as("span_idx"))
       .distinct()
     val sp = spans(corpus, window)
-    val kept = sp.join(hits, Seq("doc_id", "span_idx"), "left_anti")
+    reassemble(sp, sp.join(hits, Seq("doc_id", "span_idx"), "left_anti"))
+  }
+
+  /** Per-document totals of a span frame `sp` and the reassembly of its
+    * `kept` subset: (doc_id, n_spans, n_kept, cleaned_fp), where
+    * cleaned_fp is the md5 of the kept spans rejoined in span order. A
+    * doc with no kept span has n_kept 0 and cleaned_fp md5("").
+    */
+  private def reassemble(sp: DataFrame, kept: DataFrame): DataFrame = {
+    // array_sort on struct(span_idx, _) orders by the leading int
+    // field, making the collect_list order-insensitive (collect_list
+    // alone is partition-order-dependent).
     val reassembled = kept.groupBy(col("doc_id"))
       .agg(
         count(lit(1)).cast("int").as("n_kept"),
@@ -212,14 +197,10 @@ object SpanDedup {
     * by earlier starts.
     */
   def winnowedFingerprints(docs: DataFrame, k: Int, w: Int): DataFrame = {
-    val grams = docs
-      .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= k)
-      .select(col("doc_id"), col("toks"),
-        explode(expr(s"sequence(1, size(toks) - ${k - 1})")).as("pos"))
-      .select(col("doc_id"), col("pos"),
-        graft.dedup.Dedup.md5Hash48(
-          expr(s"concat_ws(' ', slice(toks, pos, $k))")).as("gfp"))
+    val grams = TextStats.wordGrams(
+        docs.select(col("doc_id"), TextStats.tokens(col("text")).as("toks")),
+        k, Seq("doc_id"), pos = "pos")
+      .select(col("doc_id"), col("pos"), graft.dedup.Dedup.md5Hash48(col("gram")).as("gfp"))
     val fr = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       .rowsBetween(0, w - 1)
     grams

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for a training-data pipeline: tokenization,
@@ -56,32 +56,86 @@ object TextStats {
   def tokensSql(text: String): String =
     s"list_filter(regexp_split_to_array($text, $WsRunSql), z -> z != '')"
 
+  // ---- Token stats. Each formula is written once, over a token ARRAY
+  // (the FromTokens forms), and the text-input form applies it to
+  // `tokens(text)`. The text-input forms inline the tokenizer — an
+  // interpreted HigherOrderFunction (filter/split lambdas carry no
+  // doGenCode) — once per reference, and codegen subexpression
+  // elimination does not collapse the copies (the when()/division
+  // guards put them in conditional branches, which CSE skips by
+  // design): qualityScore alone expands the split six times. So query
+  // and library code stages the token array as an attribute of one
+  // upstream projection (as withLangId and Dedup.hashedShingleRows
+  // stage `__toks`: CollapseProject keeps a multiply-referenced
+  // non-cheap alias materialized) and calls the FromTokens forms, so the split runs
+  // once per row at any scale (TextStagingGateSpec pins it). Measured
+  // at sf0.1 (console A/B over the documents table): qualityScore
+  // 0.64 s → 0.28 s per pass. The token count of a staged array is
+  // plain `size`.
+
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  def distinctTokenCount(text: Column): Column = size(array_distinct(tokens(text)))
+  def distinctTokenCountFromTokens(tk: Column): Column = size(array_distinct(tk))
 
-  /** Lexical diversity: distinct tokens / total tokens, in [0,1].
-    * NULL (not an error) for token-less text: under ANSI (Spark 4
-    * default) a bare 0/0 THROWS DIVIDE_BY_ZERO — one empty document
-    * in a 100 TB corpus would abort the whole job — and NULL is also
-    * what the DuckDB oracle's 0/0 yields, so both engines agree on
-    * degenerate docs. Same guard on every ratio below.
+  def distinctTokenCount(text: Column): Column = distinctTokenCountFromTokens(tokens(text))
+
+  /** `count` per token of `tk`, as a double. NULL (not an error) for
+    * token-less text: under ANSI (Spark 4 default) a bare 0/0 THROWS
+    * DIVIDE_BY_ZERO — one empty document in a 100 TB corpus would
+    * abort the whole job — and NULL is also what the DuckDB oracle's
+    * 0/0 yields, so both engines agree on degenerate docs. Every ratio
+    * below divides through here.
     */
-  def typeTokenRatio(text: Column): Column =
-    distinctTokenCount(text).cast("double") /
-      nullif(tokenCount(text).cast("double"), lit(0.0))
+  private def perToken(count: Column, tk: Column): Column =
+    count.cast("double") / nullif(size(tk).cast("double"), lit(0.0))
 
-  /** Total characters across tokens (i.e., length excluding whitespace). */
-  def tokenCharCount(text: Column): Column =
-    aggregate(tokens(text), lit(0), (acc, t) => acc + length(t))
+  /** Lexical diversity: distinct tokens / total tokens, in [0,1]. */
+  def typeTokenRatioFromTokens(tk: Column): Column =
+    perToken(distinctTokenCountFromTokens(tk), tk)
 
-  def meanTokenLength(text: Column): Column =
-    tokenCharCount(text).cast("double") /
-      nullif(tokenCount(text).cast("double"), lit(0.0))
+  def typeTokenRatio(text: Column): Column = typeTokenRatioFromTokens(tokens(text))
+
+  /** Mean token length in characters (whitespace excluded). */
+  def meanTokenLengthFromTokens(tk: Column): Column =
+    perToken(aggregate(tk, lit(0), (acc, t) => acc + length(t)), tk)
+
+  def meanTokenLength(text: Column): Column = meanTokenLengthFromTokens(tokens(text))
 
   /** Occurrences (not distinct) of any of `words` among the tokens. */
+  def wordHitsFromTokens(tk: Column, words: Seq[String]): Column =
+    size(filter(tk, t => t.isInCollection(words)))
+
   def wordHitCount(text: Column, words: Seq[String]): Column =
-    size(filter(tokens(text), t => t.isInCollection(words)))
+    wordHitsFromTokens(tokens(text), words)
+
+  /** The sliding word n-gram stream of `toked`, a frame with a token
+    * array column `toks`: one row per gram of every row holding at
+    * least `n` tokens, carrying the columns `keep`, the gram's 1-based
+    * start position (named `pos`) and `gram`, its n tokens joined by
+    * single spaces. Rows with fewer than n tokens or NULL tokens yield
+    * no grams. Every word-n-gram rule in the library reads this one
+    * stream: shingles, repetition bigrams, contamination 5-grams and
+    * winnowing grams. A caller that shuffles on grams hashes `gram`
+    * itself (`Dedup.md5Hash48`), so the shuffle carries 8-byte keys,
+    * not gram text.
+    *
+    * Shape: positions are exploded and each row slices its own gram,
+    * never `explode(transform(...))`. The transform shape materializes
+    * a document's whole gram array as one value: ~2.5× slower per
+    * giant-doc token and out of task heap ~3× earlier (the retired
+    * GramShapeAB probe, SCALE.md "Round-12, session 4"). The size
+    * filter comes first because `sequence` counts down on a negative
+    * span.
+    */
+  def wordGrams(toked: DataFrame, n: Int, keep: Seq[String],
+      pos: String = "i"): DataFrame = {
+    val kept = keep.map(col)
+    toked.filter(size(col("toks")) >= n)
+      .select(kept :+ col("toks") :+
+        explode(expr(s"sequence(1, size(toks) - ${n - 1})")).as(pos): _*)
+      .select(kept :+ col(pos) :+
+        expr(s"concat_ws(' ', slice(toks, $pos, $n))").as("gram"): _*)
+  }
 
   /** Per-token, length-gated regex application — the PII-scan shape
     * (tx09). The pattern is applied to each whitespace token of at
@@ -115,7 +169,7 @@ object TextStats {
         .otherwise(t)), " ")
 
   /** Ratio of punctuation characters to total characters. NULL for the
-    * empty string (0/0 — see [[typeTokenRatio]]'s ANSI note).
+    * empty string (0/0 — see the ANSI note at `perToken`).
     */
   def punctRatio(text: Column): Column =
     length(regexp_replace(text, "[^.!?,;:]", "")).cast("double") /
@@ -127,9 +181,12 @@ object TextStats {
   val DefaultStopwords: Seq[String] =
     Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
+  def stopwordRatioFromTokens(tk: Column,
+      stopwords: Seq[String] = DefaultStopwords): Column =
+    perToken(wordHitsFromTokens(tk, stopwords), tk)
+
   def stopwordRatio(text: Column, stopwords: Seq[String] = DefaultStopwords): Column =
-    wordHitCount(text, stopwords).cast("double") /
-      nullif(tokenCount(text).cast("double"), lit(0.0))
+    stopwordRatioFromTokens(tokens(text), stopwords)
 
   /** Composite quality score in [0,1]: rewards lexical diversity and a
     * moderate stopword ratio, penalizes very short documents. The exact
@@ -140,51 +197,9 @@ object TextStats {
     * the worst quality — so a `quality >= t` curation gate always drops
     * it. Without the guard the 0/0 ratios either abort the job (ANSI)
     * or go NaN, and Spark orders NaN ABOVE every number, so empty docs
-    * would sail through every quality filter. NULL text stays NULL
-    * (the ratios propagate it), matching the NULL-propagation contract
-    * of [[tokens]].
-    */
-  def qualityScore(text: Column, stopwords: Seq[String] = DefaultStopwords): Column = {
-    val lenFactor = least(tokenCount(text).cast("double") / lit(50.0), lit(1.0))
-    val diversity = typeTokenRatio(text)
-    val stop = stopwordRatio(text, stopwords)
-    when(tokenCount(text) === 0, lit(0.0)).otherwise(
-      lit(0.4) * lenFactor + lit(0.4) * diversity +
-        lit(0.2) * least(stop * 5.0, lit(1.0)))
-  }
-
-  // ---- Staged (token-attribute) stat variants (r19 optimization
-  // round). Every text-input ratio above inlines `tokens(text)` — an
-  // interpreted HigherOrderFunction (filter/split lambdas carry no
-  // doGenCode) — once per reference, and codegen subexpression
-  // elimination does not collapse the copies (the when()/division
-  // guards put them in conditional branches, which CSE skips by
-  // design). A stats projection like tx01/tx02 therefore re-tokenized
-  // every document up to ~10×, and qualityScore alone expands the
-  // split six times. The FromTokens forms take the token ARRAY as an
-  // attribute staged by one upstream projection (the withLangId/
-  // withShingles discipline — CollapseProject keeps a multiply-
-  // referenced non-cheap alias materialized), so the split runs once
-  // per row at any scale. Value-identical by construction: the same
-  // expression trees with the shared token subtree as the input.
-  // Measured at sf0.1 (console A/B over the documents table):
-  // qualityScore 0.64 s → 0.28 s per pass.
-
-  def typeTokenRatioFromTokens(tk: Column): Column =
-    size(array_distinct(tk)).cast("double") /
-      nullif(size(tk).cast("double"), lit(0.0))
-
-  def meanTokenLengthFromTokens(tk: Column): Column =
-    aggregate(tk, lit(0), (acc, t) => acc + length(t)).cast("double") /
-      nullif(size(tk).cast("double"), lit(0.0))
-
-  def stopwordRatioFromTokens(tk: Column,
-      stopwords: Seq[String] = DefaultStopwords): Column =
-    size(filter(tk, t => t.isInCollection(stopwords))).cast("double") /
-      nullif(size(tk).cast("double"), lit(0.0))
-
-  /** [[qualityScore]] from a staged token-array attribute — the same
-    * formula tree, tokenized once. See the staging note above.
+    * would sail through every quality filter. NULL tokens (NULL text)
+    * stay NULL (the ratios propagate it), matching the NULL-propagation
+    * contract of [[tokens]].
     */
   def qualityScoreFromTokens(tk: Column,
       stopwords: Seq[String] = DefaultStopwords): Column = {
@@ -195,6 +210,9 @@ object TextStats {
       lit(0.4) * lenFactor + lit(0.4) * diversity +
         lit(0.2) * least(stop * 5.0, lit(1.0)))
   }
+
+  def qualityScore(text: Column, stopwords: Seq[String] = DefaultStopwords): Column =
+    qualityScoreFromTokens(tokens(text), stopwords)
 
   /** Marker-word sets for the language-ID heuristic. Text with none of
     * a language's markers scores 0 for it.
@@ -232,21 +250,20 @@ object TextStats {
     * token attribute), then the cheap argmax — three narrow
     * projections, no shuffle, no re-evaluated subtrees.
     */
-  def withLangId(df: org.apache.spark.sql.DataFrame, textCol: String,
+  def withLangId(df: DataFrame, textCol: String,
       outCol: String = "lang_pred",
       markers: Seq[(String, Seq[String])] = LangMarkers,
       // pre-staged token column (r19 optimization round): a caller
       // that already tokenized (e.g. tx07, which also quality-scores)
       // names its token attribute here so the corpus is split once,
       // not once per consumer
-      tokensCol: Option[String] = None): org.apache.spark.sql.DataFrame = {
+      tokensCol: Option[String] = None): DataFrame = {
     val toksed = tokensCol match {
       case Some(c) => df.withColumn("__toks", col(c))
       case None => df.withColumn("__toks", tokens(col(textCol)))
     }
     val scored = markers.foldLeft(toksed) { case (d, (lang, words)) =>
-      d.withColumn(s"__score_$lang",
-        size(filter(col("__toks"), t => t.isInCollection(words))))
+      d.withColumn(s"__score_$lang", wordHitsFromTokens(col("__toks"), words))
     }
     scored
       .withColumn(outCol,
@@ -309,8 +326,8 @@ object TextStats {
     *
     * Output: (doc_id, n_tokens, bigram_nll rounded to 4 dp).
     */
-  def bigramNll(docs: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, lambda: Double = 0.7): org.apache.spark.sql.DataFrame = {
+  def bigramNll(docs: DataFrame, idCol: String,
+      textCol: String, lambda: Double = 0.7): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = docs
       .select(col(idCol).as("doc_id"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.types.LongType
 import graft.dedup.Dedup
+import graft.text.TextStats
 import graft.queries.Catalog
 
 class DedupSpec extends SparkSpec {
@@ -39,9 +40,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("shingles: count and content for 3-grams") {
-    val sh = Dedup.withShingles(docs.filter($"doc_id" === 1), "doc_id", "text", 3)
-      .select($"sh")
-      .first().getSeq[String](0)
+    val sh = TextStats.wordGrams(docs.filter($"doc_id" === 1)
+        .select($"doc_id", TextStats.tokens($"text").as("toks")), 3, Seq("doc_id"))
+      .select($"gram").distinct()
+      .as[String].collect().toSeq
     assert(sh.length === 7) // 9 tokens → 7 shingles, all distinct here
     assert(sh.contains("the quick brown"))
     assert(sh.contains("the lazy dog"))

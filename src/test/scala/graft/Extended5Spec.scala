@@ -3,82 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.CountMin
 import graft.queries.Catalog
-import graft.text.SpanDedup
 
 class Extended5Spec extends SparkSpec {
   import spark.implicits._
-
-  // --- SpanDedup.dedupSpans -------------------------------------------------
-
-  private val w = "w1 w2 w3 w4 w5 w6 w7 w8" // one full 8-token span
-
-  test("dedupSpans drops cross-doc duplicated spans from EVERY doc, keeps order") {
-    val docs = Seq(
-      (1L, s"a1 a2 a3 a4 a5 a6 a7 a8 $w"),   // span0 unique, span1 shared
-      (2L, s"$w b1 b2 b3 b4 b5 b6 b7 b8"),   // span0 shared, span1 unique
-      (3L, "c1 c2 c3")                        // single short span, unique
-    ).toDF("doc_id", "text")
-    val r = SpanDedup.dedupSpans(docs, window = 8)
-      .orderBy("doc_id").collect()
-    assert(r.map(x => (x.getLong(0), x.getInt(1), x.getInt(2))).toSeq ===
-      Seq((1L, 2, 1), (2L, 2, 1), (3L, 1, 1)))
-    // reassembly preserves original span order: doc2 keeps ITS OWN
-    // second span, so its cleaned fp is md5 of the b-span, not the w-span
-    val fp2 = r(1).getString(3)
-    val exp = java.security.MessageDigest.getInstance("MD5")
-      .digest("b1 b2 b3 b4 b5 b6 b7 b8".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    assert(fp2 === exp)
-  }
-
-  test("a doc whose every span is boilerplate keeps md5 of empty string") {
-    val docs = Seq((1L, w), (2L, w)).toDF("doc_id", "text")
-    val r = SpanDedup.dedupSpans(docs, window = 8).orderBy("doc_id").collect()
-    assert(r.forall(_.getInt(2) == 0))
-    assert(r.forall(_.getString(3) == "d41d8cd98f00b204e9800998ecf8427e"))
-  }
-
-  test("within-doc repetition alone is NOT removed (cross-doc criterion)") {
-    val docs = Seq((1L, s"$w $w")).toDF("doc_id", "text")
-    val r = SpanDedup.dedupSpans(docs, window = 8).collect()(0)
-    assert(r.getInt(1) === 2 && r.getInt(2) === 2)
-  }
-
-  // --- SpanDedup.passageOverlap ---------------------------------------------
-
-  test("winnowed passageOverlap detects a shared >= w+k-1 token passage at ANY alignment") {
-    val shared = (1 to 15).map(i => s"s$i").mkString(" ") // exactly w+k-1 = 15
-    val docs = Seq(
-      (1L, s"$shared " + (1 to 9).map(i => s"x$i").mkString(" ")),
-      // same passage at offset 3 — a strided scheme would miss this;
-      // winnowing's content-defined selection cannot
-      (2L, (1 to 3).map(i => s"y$i").mkString(" ") + s" $shared"),
-      (3L, (1 to 32).map(i => s"z$i").mkString(" "))
-    ).toDF("doc_id", "text")
-    val r = SpanDedup.passageOverlap(docs, k = 8, w = 8)
-      .orderBy("doc_id").collect()
-    assert(r(0).getInt(2) > 0, "doc1 must flag shared fingerprints")
-    assert(r(1).getInt(2) > 0, "doc2 must flag shared fingerprints despite offset 3")
-    assert(r(2).getInt(2) === 0, "doc3 shares nothing")
-  }
-
-  test("passageOverlap drops docs with no full gram window") {
-    val docs = Seq((1L, "a b c"), (2L, (1 to 16).map("t" + _).mkString(" "))).toDF("doc_id", "text")
-    val r = SpanDedup.passageOverlap(docs, k = 8, w = 8)
-    assert(r.select("doc_id").as[Long].collect().toSeq === Seq(2L))
-  }
-
-  test("winnowing selects every-alignment minima: shifting the whole doc never changes fps") {
-    // content-defined selection: the fingerprint SET of a passage is
-    // invariant under any prefix — append 5 junk tokens and the
-    // passage's selected hashes must still all appear
-    val body = (1 to 40).map(i => s"b$i").mkString(" ")
-    val docs = Seq((1L, body), (2L, "j1 j2 j3 j4 j5 " + body)).toDF("doc_id", "text")
-    val sel = SpanDedup.passageOverlap(docs, k = 8, w = 8).orderBy("doc_id").collect()
-    // every doc1 fingerprint comes from body ⇒ shared with doc2
-    assert(sel(0).getInt(1) === sel(0).getInt(2),
-      "all of doc1's fingerprints must be found in shifted doc2")
-  }
 
   // --- CountMin -------------------------------------------------------------
 
@@ -175,38 +102,6 @@ class Extended5Spec extends SparkSpec {
     assert(!r.exists { case (a, b) => a == 4L || b == 4L })
   }
 
-  test("spanNovelty: copier scores 0, originator keeps 1, within-doc repeats stay novel") {
-    val eight = "a b c d e f g h"
-    val other = "p q r s t u v w"
-    val docs = Seq(
-      (1L, s"$eight $other"),    // originator of both spans → novelty 1.0
-      (2L, eight),               // copies doc 1's first span → novelty 0.0
-      (3L, s"$eight $eight"),    // copies doc 1 twice → 0.0 (cross-doc, not self)
-      (4L, "x y z only four"),   // unique partial span → 1.0
-    ).toDF("doc_id", "text")
-    val m = SpanDedup.spanNovelty(docs, window = 8)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
-    assert(m(1L) === ((2L, 2L, 1.0)))
-    assert(m(2L) === ((1L, 0L, 0.0)))
-    assert(m(3L) === ((2L, 0L, 0.0)))
-    assert(m(4L) === ((1L, 1L, 1.0)))
-  }
-
-  test("quality percentile: pct_le is the exact CDF of rounded scores") {
-    val out = Catalog.queries("tx17_quality_percentile")(spark, Sf0001)
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    assert(out.nonEmpty)
-    val n = out.length.toDouble
-    // recompute the CDF directly from the returned qualities
-    out.foreach { case (_, q, pct) =>
-      val expected = out.count(_._2 <= q) / n
-      assert(math.abs(pct - math.round(expected * 1e4) / 1e4) < 1e-9,
-        s"pct_le($q) = $pct, expected $expected")
-    }
-    // top score must have pct_le 1.0
-    assert(out.maxBy(_._2)._3 === 1.0)
-  }
-
   test("transition matrix: hand-computed first-order Markov estimate") {
     val dir = java.nio.file.Files.createTempDirectory("graft_q86_").toString
     // ts stored as raw NANOS (the driver data's TIMESTAMP(NANOS)
@@ -224,61 +119,6 @@ class Extended5Spec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
     assert(m === Map(("A", "B") -> ((1L, 1.0)), ("B", "A") -> ((1L, 0.5)),
       ("B", "B") -> ((1L, 0.5))))
-  }
-
-  test("source contamination: shared 5-grams counted once per source pair") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tx18_").toString
-    val shared = "one two three four five"
-    Seq((1L, s"$shared alpha", "web", 0L), (2L, s"$shared beta", "web", 0L),
-        (3L, s"$shared gamma", "api", 0L), (4L, "wholly unrelated text body here", "book", 0L))
-      .toDF("doc_id", "text", "source", "n_chars")
-      .withColumn("lang", lit("en"))
-      .write.parquet(s"$dir/documents.parquet")
-    val rows = Catalog.queries("tx18_source_contamination")(spark, dir)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    // the only cross-source shared shingle is the 5-gram "one..five"
-    // (api↔web); book shares nothing with anyone
-    assert(rows.toSeq === Seq(("api", "web", 1L)))
-  }
-
-  test("temperature mix: alpha weights up-sample the small source, sums are 1") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mx07_").toString
-    (Seq.fill(16)("big") ++ Seq.fill(4)("small")).zipWithIndex
-      .map { case (src, i) => (i.toLong, s"text $i", src, 0L) }
-      .toDF("doc_id", "text", "source", "n_chars")
-      .withColumn("lang", lit("en"))
-      .write.parquet(s"$dir/documents.parquet")
-    val m = Catalog.queries("mx07_temperature_mix")(spark, dir)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-    assert(m("big") === ((16L, 0.8, 0.6667)))  // sqrt(16)/(4+2) = 2/3 @ 4dp
-    assert(m("small") === ((4L, 0.2, 0.3333))) // sqrt(4)/6 = 1/3 @ 4dp
-    assert(math.abs(m.values.map(_._3).sum - 1.0) < 1e-3) // 4dp rounding slack
-  }
-
-  test("curation funnel is monotone and its final stage equals the curated corpus") {
-    val funnel = Catalog.queries("mx06_curation_funnel")(spark, Sf0001).collect()
-      .map(r => r.getInt(0) -> r.getLong(2)).toMap
-    assert(funnel.keySet === (1 to 6).toSet)
-    assert((1 to 5).forall(i => funnel(i) >= funnel(i + 1)), s"not monotone: $funnel")
-    val curated = Catalog.queries("mx05_curation_pipeline")(spark, Sf0001).count()
-    assert(funnel(6) === curated)
-  }
-
-  test("bigramNll: hand-computed interpolated probabilities on a two-doc corpus") {
-    // corpus tokens: doc1 = [a b a], doc2 = [b b]  → N=5, cu(a)=2, cu(b)=3
-    // bigrams: (a,b) (b,a) (b,b); cctx(a)=1, cctx(b)=2
-    val docs = Seq((1L, "a b a"), (2L, "b b")).toDF("doc_id", "text")
-    val out = graft.text.TextStats.bigramNll(docs, "doc_id", "text", lambda = 0.7)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val (pA, pB) = (2.0 / 5, 3.0 / 5)
-    // doc1: p(a)=pA, p(b|a)=0.7*1/1+0.3*pB, p(a|b)=0.7*1/2+0.3*pA
-    val d1 = -(math.log(pA) + math.log(0.7 + 0.3 * pB) + math.log(0.35 + 0.3 * pA)) / 3
-    // doc2: p(b)=pB, p(b|b)=0.7*1/2+0.3*pB
-    val d2 = -(math.log(pB) + math.log(0.35 + 0.3 * pB)) / 2
-    assert(out(1L)._1 === 3L)
-    assert(out(1L)._2 === math.round(d1 * 1e4) / 1e4)
-    assert(out(2L)._1 === 2L)
-    assert(out(2L)._2 === math.round(d2 * 1e4) / 1e4)
   }
 
   test("keySkewProfile computes exact metrics on a known distribution") {

@@ -41,74 +41,6 @@ class Extended6Spec extends SparkSpec {
     assert(q44.count() == q44b.count())
   }
 
-  test("mx08 spends at most the token budget and keeps the best quality first") {
-    val docs = Tables.documents(spark, Sf0001)
-      .select(col("doc_id"),
-        round(graft.text.TextStats.qualityScore(col("text")), 4).as("q"),
-        graft.text.TextStats.tokenCount(col("text")).cast("long").as("nt"))
-      .filter(col("nt") > 0)
-    val budget = docs.agg(floor(sum(col("nt")) / 2).cast("long")).first().getLong(0)
-    val sel = queries.Catalog.queries("mx08_token_budget")(spark, Sf0001)
-    val spent = sel.agg(sum(col("n_tokens"))).first().getLong(0)
-    assert(spent <= budget, s"spent $spent > budget $budget")
-    // greedy by quality: every unselected doc's quality is <= every
-    // selected doc's quality EXCEPT inside the single boundary bucket
-    val minSel = sel.agg(min(col("quality"))).first().getDouble(0)
-    val violated = docs.join(sel.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .filter(col("q") > minSel).count()
-    assert(violated == 0, s"$violated unselected docs above the selection floor")
-    // boundary-bucket selection is a doc_id-order PREFIX (running sum
-    // is monotone in n_tokens > 0): the first unselected floor-quality
-    // doc must out-number every selected floor-quality doc's id
-    val selFloorMax = sel.filter(col("quality") === minSel)
-      .agg(max(col("doc_id"))).first()
-    val unselFloorMin = docs.join(sel.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .filter(col("q") === minSel).agg(min(col("doc_id"))).first()
-    if (!selFloorMax.isNullAt(0) && !unselFloorMin.isNullAt(0))
-      assert(unselFloorMin.getLong(0) > selFloorMax.getLong(0))
-  }
-
-  test("decontaminateSpans excises BOTH spans when a benchmark 5-gram straddles the tile boundary") {
-    import spark.implicits._
-    import graft.text.SpanDedup
-    // 16 tokens = two 8-token spans; the benchmark 5-gram sits at
-    // positions 7..11, overlapping span 0 (tokens 1-8) and span 1
-    // (tokens 9-16) — naive within-span matching would miss it entirely
-    val w = (1 to 16).map(i => s"w$i")
-    val contaminated = w.take(6) ++ Seq("alpha", "beta", "gamma", "delta", "epsilon") ++ w.drop(11)
-    val corpus = Seq(
-      (100L, contaminated.mkString(" ")),
-      (101L, w.mkString(" "))). // clean: all 16 tokens survive
-      toDF("doc_id", "text")
-    val bench = Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
-    val r = SpanDedup.decontaminateSpans(corpus, bench, window = 8, n = 5)
-      .orderBy($"doc_id").collect()
-    assert(r.map(x => (x.getLong(0), x.getInt(1), x.getInt(2))).toSeq ===
-      Seq((100L, 2, 0), (101L, 2, 2)))
-    // the clean doc's reassembly is its own text's fingerprint; the
-    // fully-excised doc keeps md5("")
-    val cleanFp = r(1).getString(3)
-    val expectedClean = spark.sql(s"SELECT md5('${w.mkString(" ")}')").first().getString(0)
-    assert(cleanFp === expectedClean)
-    assert(r(0).getString(3) ===
-      spark.sql("SELECT md5('')").first().getString(0))
-  }
-
-  test("decontaminateSpans with an empty benchmark is the identity") {
-    import spark.implicits._
-    import graft.text.SpanDedup
-    val corpus = Seq((1L, "one two three four five six seven eight nine ten"))
-      .toDF("doc_id", "text")
-    val bench = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val r = SpanDedup.decontaminateSpans(corpus, bench, window = 8, n = 5).collect()(0)
-    assert((r.getInt(1), r.getInt(2)) === (2, 2))
-    // reassembly of untouched spans is the whitespace-normalized text
-    val expected = spark.sql(
-      "SELECT md5('one two three four five six seven eight nine ten')")
-      .first().getString(0)
-    assert(r.getString(3) === expected)
-  }
-
   test("q89 gap-fill conserves event counts and fills gaps with zeros") {
     val dense = queries.Catalog.queries("q89_gap_fill")(spark, Sf0001)
     val perUser = dense.groupBy(col("user_id"))

@@ -2,13 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
-import graft.queries.{QualityQueries, TextQueries}
+import graft.queries.QualityQueries
 
 /** Property pins for the round-8 operator math, Property2Spec-style
   * (seeded ScalaCheck generators): the depth-2 tree never classifies
-  * worse than the best stump on ANY labeled sample, the shard
-  * manifest always covers the corpus exactly within its token bound,
-  * and the IQR fences always contain the inter-quartile mass.
+  * worse than the best stump on ANY labeled sample, and the IQR fences
+  * always contain the inter-quartile mass.
   */
 class Property3Spec extends SparkSpec {
   import spark.implicits._
@@ -40,28 +39,6 @@ class Property3Spec extends SparkSpec {
         .map { k => val (c, p) = tree(k); math.max(p, c - p) }.sum
       assert(treeCorrect.toDouble / n >= stumpBest - 1e-9,
         s"tree ${treeCorrect.toDouble / n} < stump $stumpBest on $rows")
-    }
-  }
-
-  test("shardManifest covers every gated doc exactly and respects the token bound") {
-    val doc = for {
-      id <- Gen.chooseNum(0L, 100000L)
-      words <- Gen.chooseNum(51, 80) // length-quality floor => gate passes
-    } yield (id, Seq.fill(words)("the word alpha beta gamma").mkString(" "))
-    samples(Gen.listOfN(30, doc), 4, 842L).foreach { docs0 =>
-      val docs = docs0.distinctBy(_._1)
-      val df = docs.toDF("doc_id", "text")
-      val out = TextQueries.shardManifest(df).collect()
-      val total = out.map(_.getLong(2)).sum
-      val nDocs = out.map(_.getLong(1)).sum
-      assert(nDocs == docs.size, s"covered $nDocs of ${docs.size}")
-      val budget = (total + 7) / 8
-      val maxDoc = docs.map(_._2.split("[ \\t\\n\\f\\r]+").count(_.nonEmpty).toLong).max
-      out.foreach { r =>
-        assert(r.getLong(2) < budget + maxDoc,
-          s"shard ${r.getLong(0)} exceeds bound")
-      }
-      assert(out.map(_.getLong(0)).distinct.length == out.length)
     }
   }
 

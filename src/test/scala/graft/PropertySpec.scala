@@ -81,25 +81,6 @@ class PropertySpec extends SparkSpec {
     assert(codes.forall(z => z >= 0L && z <= 0xFFFFFFFFL))
   }
 
-  test("spanNovelty conserves: Σ n_novel ≥ distinct fingerprints; novelty ∈ [0,1]") {
-    val wordGen = Gen.oneOf("aa", "bb", "cc", "dd", "ee", "ff")
-    val docGen = Gen.listOfN(20, wordGen).map(_.mkString(" "))
-    val docs = samples(docGen, 40, 42L).zipWithIndex
-      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val out = graft.text.SpanDedup.spanNovelty(docs, window = 4)
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(out.nonEmpty)
-    out.foreach { case (nSpans, nNovel, nov) =>
-      assert(nNovel >= 0 && nNovel <= nSpans)
-      assert(nov >= 0.0 && nov <= 1.0)
-    }
-    // every distinct fingerprint is novel at least once (in its first
-    // doc; more if that doc repeats the span internally)
-    val distinctFps = graft.text.SpanDedup
-      .spans(docs, 4).select($"span_fp").distinct().count()
-    assert(out.map(_._2).sum >= distinctFps)
-  }
-
   test("semanticDedup keeps every cell leader and output is a subset, any threshold") {
     val vecGen = Gen.listOfN(4, Gen.chooseNum(-1.0f, 1.0f))
     val vecs = samples(vecGen, 50, 42L).zipWithIndex

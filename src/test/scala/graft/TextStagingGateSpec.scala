@@ -13,7 +13,8 @@ import scala.jdk.CollectionConverters._
   * r20; this gate keeps a new call site from silently re-introducing
   * the 6–10× per-row expansion. The text-input forms stay public —
   * they are the single-use-safe API and TextStats' own composition —
-  * but library/query code must stage.
+  * but library/query code must stage. The second gate keeps the
+  * sliding word n-gram stream in its one home, `TextStats.wordGrams`.
   */
 class TextStagingGateSpec extends AnyFunSuite {
 
@@ -43,5 +44,23 @@ class TextStagingGateSpec extends AnyFunSuite {
       "text-input stat forms re-tokenize per reference — stage the token " +
         "array and use the *FromTokens variants instead:\n" +
         offenders.mkString("\n"))
+  }
+
+  test("the sliding word n-gram stream is built only in TextStats.wordGrams") {
+    val root = Paths.get("src/main/scala/graft")
+    assume(Files.isDirectory(root), s"source tree not visible from ${Paths.get("").toAbsolutePath}")
+    val built = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = new String(Files.readAllBytes(p), "UTF-8")
+        if (!src.contains("slice(toks,")) Nil
+        else src.linesIterator.zipWithIndex.collect {
+          case (line, i) if line.contains("sequence(1, size(toks) -") =>
+            s"$p:${i + 1}: ${line.trim}"
+        }.toList
+      }.toList
+    assert(built.size == 1 && built.head.contains("text/TextStats.scala"),
+      "word n-grams are built by hand — call TextStats.wordGrams instead:\n" +
+        built.mkString("\n"))
   }
 }
